@@ -146,113 +146,6 @@ FRONT_WINDOW: list[str] = [
     "agg_collect_list_orders",
 ]
 
-# Round-11 window, kept for the audit trail (all 50 driver-green in
-# CORRECTNESS_r11.json; rotated out of the checked window in round 12).
-_R11_WINDOW: list[str] = [
-    "stream_kmeans_model_rounds",
-    "layout_bucketed_agg",
-    "agg_aqe_coalesce_partitions",
-    "stream_checkpoint_kill_resume",
-    "stream_tws_list_state",
-    "source_xml_attributes_escaping",
-    "graph_closeness_centrality",
-    "join_range_bucket_expansion",
-    "multimodal_real_aiff",
-    "agg_unpivot_metrics",
-    "multimodal_zip_archive",
-    "stats_mad_robust",
-    "ml_matthews_corrcoef",
-    "source_fixed_width",
-    "multimodal_gif_frame_sample",
-    "fn_group_by_all",
-    "sample_neyman_allocation",
-    "stream_foreachbatch_dual_sink",
-    "join_interval_overlap_pairs",
-    "agg_grouping_sets",
-    "dedup_cluster_components",
-    "dedup_embedding_cosine",
-    "dedup_exact_sha",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "events_json_props",
-    "events_session_window",
-    "events_sliding_window",
-    "events_tumbling_window",
-    "filter_in_like_between",
-    "fn_array_higher_order",
-    "fn_datetime_family",
-    "fn_hash_family",
-    "fn_map_family",
-    "fn_math_conditional",
-    "fn_string_family",
-    "global_stats",
-    "mr_wordcount",
-    "multimodal_payload_stats",
-    "pipeline_curation_end_to_end",
-    "q10_returned_items",
-    "sample_hash_mod",
-    "sample_per_source_quota",
-    "sim_centroid_per_label",
-    "sim_cosine_topk",
-    "sort_global_total_order",
-    "source_csv_roundtrip",
-    "source_json_roundtrip",
-    "stats_skew_kurtosis",
-    "stream_stateful_dedup",
-]
-
-# Round-10 window, kept for the audit trail (all 50 driver-green in
-# CORRECTNESS_r10.json — completing the full-catalog driver-green union;
-# rotated out of the checked window in round 11).
-_R10_WINDOW: list[str] = [
-    "events_sliding_distinct_users",
-    "ml_confusion_threshold_sweep",
-    "text_bpe_apply_tokens",
-    "agg_mode_exact",
-    "events_changepoint_sse",
-    "graph_hits_hubs_authorities",
-    "stats_mann_whitney_u",
-    "join_null_skew_isolation",
-    "udf_pandas_scalar_iter",
-    "stats_permutation_test",
-    "stats_spearman_rank",
-    "stats_anova_oneway",
-    "stats_kendall_tau_grouped",
-    "stats_bootstrap_poisson",
-    "stats_theil_sen_grouped",
-    "events_kaplan_meier",
-    "events_peak_concurrency",
-    "agg_weighted_median",
-    "graph_jaccard_link_prediction",
-    "graph_degree_assortativity",
-    "source_binaryfile_ingest",
-    "source_glob_recursive_lookup",
-    "source_csv_multiline_quoted",
-    "udf_arrow_python_scalar",
-    "stream_stream_right_outer",
-    "stream_windowed_distinct_users",
-    "multimodal_real_tga",
-    "multimodal_real_ico",
-    "multimodal_real_tiff_deflate",
-    "multimodal_wav_mulaw",
-    "window_count_distinct_running",
-    "agg_multi_bucket_single_scan",
-    "events_acf_multilag",
-    "ml_perceptron_batch_rounds",
-    "text_hashing_trick_features",
-    "udf_pandas_agg_over_window",
-    "join_manual_bloom_semireduction",
-    "join_asof_tolerance",
-    "stats_two_proportion_z",
-    "multimodal_real_wav_stereo",
-    "ml_cohens_kappa",
-    "quality_distribution_drift_l1",
-    "sample_negative_pairs",
-    "graph_modularity_components",
-    "multimodal_real_png_adam7",
-    "stream_tws_map_state",
-]
-
 # How many entries at the HEAD of FRONT_WINDOW are fresh this round
 # (newly added or freshly rotated in) — bench.py runs exactly this many
 # unmeasured warm-up passes so first-use machinery cost (JVM codegen,
@@ -270,60 +163,6 @@ WINDOW_WARMUP_COUNT: int = 38
 # budget append HERE (never displacing the window head) and stay fully
 # oracle-tested per-entry in tests/test_oracle.py meanwhile.
 DEFERRED_TO_NEXT_WINDOW: list[str] = []
-
-# Round-9 window, kept for the audit trail (all 50 driver-green in
-# CORRECTNESS_r09.json; rotated out of the checked window in round 10).
-_R9_WINDOW: list[str] = [
-    "graph_pagerank_personalized",
-    "sim_ann_lsh_multiprobe",
-    "udf_cogrouped_map",
-    "join_asof_nearest",
-    "events_cross_correlation_lag",
-    "stream_dedup_within_watermark",
-    "multimodal_real_bmp_rle8",
-    "fn_sql_udf_family",
-    "source_dirtail_partitioned_stream",
-    "ml_tree_predict_rollup",
-    "layout_compact_small_files",
-    "source_malformed_json",
-    "quality_observe_metrics",
-    "ml_adaboost_stumps",
-    "stream_tws_stateful_totals",
-    "stream_dedup_index_maintenance",
-    "stream_asof_nearest_attrib",
-    "fn_variant_family",
-    "fn_execute_immediate",
-    "source_partition_range_pruning",
-    "ml_kmeans_parallel_init",
-    "text_bm25_rational_topk",
-    "join_dynamic_partition_pruning",
-    "stream_tws_session_timers",
-    "stream_observe_metrics",
-    "join_strategy_hints",
-    "pipeline_backfill_incremental",
-    "quality_rowcount_drift",
-    "mr_secondary_sort",
-    "sample_stratified_lrm",
-    "source_rowgroup_stats_pruning",
-    "subq_not_in_null_semantics",
-    "text_bpe_train_merges",
-    "graph_sssp_weighted",
-    "join_salted_skew",
-    "events_interval_union",
-    "events_pattern_match_regex",
-    "stream_stream_left_semi",
-    "multimodal_real_netpbm",
-    "ml_ridge_shrinkage",
-    "sink_dynamic_partition_overwrite",
-    "mr_distributed_grep",
-    "events_anomaly_3sigma",
-    "events_seasonal_decompose",
-    "ml_gbt_residual_stumps",
-    "quality_benford_first_digit",
-    "quality_id_gap_ranges",
-    "layout_hilbert_tiles",
-    "events_session_capped",
-]
 
 
 def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:

@@ -15,10 +15,12 @@ Fault-tolerance parity is config, not code (SURVEY.md §2.1 table):
 * first-wins commit    -> Spark's output-commit coordination (reference
                           ``DistrStorage.java:213-233``)
 
-Scale stance: these defaults are sized for the local[32] test harness; at
-cluster scale the same builder is used with ``master`` unset (taken from
-spark-submit), AQE handles runtime partition coalescing and skew-join
-splitting, and shuffle partitions should be ~2-3x total executor cores.
+Scale stance: locally the session runs ``local[N]`` with N the process's
+CPU-affinity count (``SPARK_GRAFT_CPUS`` overrides it), and shuffle
+partitions default to the same N. At cluster scale the same builder is
+used with ``master`` unset (taken from spark-submit), AQE handles runtime
+partition coalescing and skew-join splitting, and shuffle partitions
+should be ~2-3x total executor cores.
 """
 
 from __future__ import annotations
@@ -27,7 +29,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_spark(
@@ -64,9 +66,16 @@ def get_spark(
         # operators runs K PythonRunner levels per task (cores×K fresh
         # workers at once); with the stock daemon each fork re-imports
         # pandas (~1 s CPU) and the first such stage in a session measured
-        # 10-28 s instead of ~1 s. See preload_daemon.py. The package's
-        # parent dir rides the worker PYTHONPATH so the daemon module
-        # resolves regardless of the driver's cwd/sys.path patching.
+        # 10-28 s instead of ~1 s. The same daemon removes a fixed cost of
+        # EVERY Python task: each task's importlib.invalidate_caches()
+        # re-read pyspark.zip's 1328-entry directory once per zipimporter
+        # (12 of them) on Python 3.10-3.12, 0.13-0.24 CPU-s per task; the
+        # daemon re-reads an archive only when it changed (a 64-task
+        # parallelize().count() measured 12-16 -> 1.9 CPU-s of Python
+        # worker time, 3.4-4.6 -> 1.1 s wall, 4 cores, Python 3.11). See
+        # preload_daemon.py. The package's parent dir rides the worker
+        # PYTHONPATH so the daemon module resolves regardless of the
+        # driver's cwd/sys.path patching.
         # Deploy caveat (r12 ADVICE, acknowledged): on a non-local cluster
         # where the package ships via archives/venv, the driver-local
         # PYTHONPATH below is wrong for executors and these two configs
