@@ -32,6 +32,24 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
+def _default_driver_mem() -> str:
+    """A quarter of the memory this process may use, between 1g and 16g.
+
+    The JVM's RSS runs well past ``-Xmx`` (off-heap Arrow/Netty buffers,
+    metaspace) and shares the host with the Python workers, so a heap near
+    host size is not safe: with a fixed 16g heap on a 15.7 GB host the
+    test suite's JVM grew to 14.9 GB RSS and was OOM-killed, while a 4g
+    heap ran the whole suite.
+    """
+    limit = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:  # cgroup v2 limit of the container, "max" when unlimited
+        with open("/sys/fs/cgroup/memory.max") as f:
+            limit = min(limit, int(f.read()))
+    except (OSError, ValueError):
+        pass
+    return f"{max(1024, min(16 * 1024, limit // 4 // 2**20))}m"
+
+
 def get_spark(
     app_name: str = "irio_mapreduce_spark",
     master: str | None = None,
@@ -46,6 +64,7 @@ def get_spark(
     batch-vectorized rather than row-at-a-time.
     """
     cpus = DEFAULT_CPUS
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.adaptive.enabled", "true")
@@ -59,7 +78,7 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         # r12 (guide §4 "heavyweight init once"): daemon variant that
         # pre-imports pandas/pyarrow so every forked Python worker inherits
         # the loaded stack copy-on-write. A stage chaining K mapInPandas
