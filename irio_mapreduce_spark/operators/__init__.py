@@ -8,6 +8,8 @@ This package holds the operators that need real composition:
 * :mod:`joins`      — as-of join, bucketed range join
 * :mod:`aggregates` — salted (skew-resistant) aggregation, grouping-sets helpers
 * :mod:`topk`       — per-group top-k, global top-k
+* :mod:`graph`      — PageRank (global and personalized), one frontier-relaxation
+  kernel under BFS / multi-source BFS / SSSP, peeling, triangles, label propagation
 """
 
 from irio_mapreduce_spark.operators.joins import asof_join, range_join  # noqa: F401

@@ -28,6 +28,8 @@ def pagerank(
     damping_num: int = 85,
     damping_den: int = 100,
     dangling: str = "assume_none",
+    sources: DataFrame | None = None,
+    source_col: str | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list, computed in
     **fixed-point integer arithmetic** (BIGINT micro-ranks at
@@ -66,6 +68,19 @@ def pagerank(
       round (freeing the superseded one) — without the barrier the plan
       would double per iteration.
 
+    ``sources`` (the set S, its ids in ``source_col``) makes it
+    PERSONALIZED PageRank (random walk with restart): the teleport mass
+    restarts ONLY onto S, so rank becomes "proximity to S weighted by
+    graph structure", the recommendation / trust-rank primitive. Init is
+    ``SCALE div |S|`` on S and 0 elsewhere (S is intersected with the
+    node universe first — teleporting onto a node with no edges would
+    strand mass invisibly), and the ``(1-d)`` teleport term is paid only
+    to members of S. Mass LEAKS by design on non-mirrored graphs (walks
+    that die restart at S). The S-membership flag is a column of the
+    node table (one left join at init), so rounds add no join over the
+    global form. ``assume_none`` only: personalize over a graph with
+    sinks by mirroring or pre-filtering, the caller's choice.
+
     ``iterations`` is a small fixed constant by contract — each
     round appends one join + one aggregation to the lineage (at this depth
     no checkpoint barrier is needed; the iterative-state discussion in
@@ -85,6 +100,11 @@ def pagerank(
     if dangling not in ("assume_none", "redistribute"):
         raise ValueError(
             f"dangling must be 'assume_none' or 'redistribute', got {dangling!r}"
+        )
+    if sources is not None and dangling != "assume_none":
+        raise ValueError(
+            "personalized PageRank (sources=) supports only "
+            f"dangling='assume_none', got {dangling!r}"
         )
     src, dst = F.col(src_col), F.col(dst_col)
     # Materialize the loop-invariant inputs ONCE: every round's plan
@@ -111,11 +131,28 @@ def pagerank(
         )
     else:
         nodes = deg.select(F.col("_src").alias("_node"))
-    n_df = nodes.agg(F.count("*").alias("_n"))
+    # _n is the teleport population: every node, or |S| when personalized.
     base_num = (damping_den - damping_num) * PAGERANK_SCALE
+    init = f"{PAGERANK_SCALE} div _n"
+    teleport = f"{base_num} div ({damping_den} * _n)"
+    if sources is None:
+        n_df = nodes.agg(F.count("*").alias("_n"))
+    else:
+        s = (
+            sources.select(F.col(source_col).alias("_node"))
+            .distinct()
+            .join(nodes, "_node", "left_semi")
+        )
+        nodes = (
+            nodes.join(s.withColumn("_in_s", F.lit(1)), "_node", "left")
+            .select("_node", F.coalesce("_in_s", F.lit(0)).alias("_in_s"))
+            .localCheckpoint(eager=True)
+        )
+        n_df = nodes.agg(F.sum("_in_s").alias("_n"))
+        init = f"CASE WHEN _in_s = 1 THEN {init} ELSE 0L END"
+        teleport = f"CASE WHEN _in_s = 1 THEN {teleport} ELSE 0L END"
     ranks = nodes.join(F.broadcast(n_df)).select(
-        "_node",
-        F.expr(f"{PAGERANK_SCALE} div _n").alias("_ri"),
+        "_node", F.expr(init).alias("_ri")
     )
     from irio_mapreduce_spark.llm.dedup import free_checkpoint
 
@@ -136,6 +173,7 @@ def pagerank(
             .select("_dst", F.expr("_ri div _outdeg").alias("_ci"))
         )
         sums = contrib.groupBy("_dst").agg(F.sum("_ci").alias("_s"))
+        mass = "coalesce(_s, 0L)"
         if dangling == "redistribute":
             # Rank mass parked on sink nodes this round: one global
             # aggregate (anti-join against the out-degree table, broadcast
@@ -145,16 +183,8 @@ def pagerank(
             dm_df = ranks.join(
                 deg, ranks["_node"] == deg["_src"], "left_anti"
             ).agg(F.coalesce(F.sum("_ri"), F.lit(0).cast("long")).alias("_dm"))
-            update = (
-                f"({base_num} div ({damping_den} * _n))"
-                f" + (({damping_num} * (coalesce(_s, 0L) + (_dm div _n)))"
-                f" div {damping_den})"
-            )
-        else:
-            update = (
-                f"({base_num} div ({damping_den} * _n))"
-                f" + (({damping_num} * coalesce(_s, 0L)) div {damping_den})"
-            )
+            mass = f"({mass} + (_dm div _n))"
+        update = f"({teleport}) + (({damping_num} * {mass}) div {damping_den})"
         # Rebuild ranks over the FULL node universe (nodes), not just the
         # aggregation's keys: a node with out-edges but zero in-edges
         # receives no contributions yet must keep its teleport share —
@@ -166,87 +196,6 @@ def pagerank(
         if dangling == "redistribute":
             ranks = ranks.join(F.broadcast(dm_df))
         ranks = ranks.select("_node", F.expr(update).alias("_ri"))
-    return ranks.select(
-        F.col("_node").alias("node"),
-        F.col("_ri").cast("long").alias("pr_fp"),
-        (F.col("_ri") / F.lit(PAGERANK_SCALE)).alias("pr"),
-    )
-
-
-def pagerank_personalized(
-    edges: DataFrame,
-    src_col: str,
-    dst_col: str,
-    sources: DataFrame,
-    source_col: str,
-    iterations: int = 3,
-    damping_num: int = 85,
-    damping_den: int = 100,
-) -> DataFrame:
-    """PERSONALIZED PageRank (random walk with restart): identical
-    fixed-point integer arithmetic to :func:`pagerank`, but the teleport
-    mass restarts ONLY onto the ``sources`` set — rank becomes "proximity
-    to S weighted by graph structure", the recommendation / trust-rank
-    / related-entity primitive (vs global centrality). Differences from
-    the global form, all exactness-preserving:
-
-    * init: ``SCALE div |S|`` on source nodes, 0 elsewhere (S is
-      intersected with the node universe first — teleporting onto a
-      node with no edges would strand mass invisibly);
-    * update: the ``(1-d)`` teleport term is paid only to members of S;
-      non-members receive pure in-edge mass. Mass LEAKS by design on
-      non-mirrored graphs (walks that die restart at S) — on a mirrored
-      graph no mass is lost to sinks, as with the global entry.
-
-    Same per-round Pregel shuffle pair; the S-membership flag is a
-    column on the rank table (one semi-join at init), so rounds add no
-    extra join over the global operator. ``assume_none`` dangling
-    contract only — personalize over a graph with sinks by mirroring or
-    pre-filtering, the caller's choice, kept explicit."""
-    src, dst = F.col(src_col), F.col(dst_col)
-    e = edges.select(src.alias("_src"), dst.alias("_dst")).localCheckpoint(
-        eager=True
-    )
-    deg = e.groupBy("_src").agg(F.count("*").alias("_outdeg")).localCheckpoint(
-        eager=True
-    )
-    nodes = deg.select(F.col("_src").alias("_node"))
-    s = (
-        sources.select(F.col(source_col).alias("_node"))
-        .distinct()
-        .join(nodes, "_node", "left_semi")
-    )
-    # membership flag rides the rank table: one row per node, _in_s 0/1
-    flagged = nodes.join(
-        s.withColumn("_in_s", F.lit(1)), "_node", "left"
-    ).select("_node", F.coalesce("_in_s", F.lit(0)).alias("_in_s"))
-    flagged = flagged.localCheckpoint(eager=True)
-    ns_df = flagged.agg(F.sum("_in_s").alias("_ns"))
-    base_num = (damping_den - damping_num) * PAGERANK_SCALE
-    ranks = flagged.join(F.broadcast(ns_df)).select(
-        "_node",
-        "_in_s",
-        F.expr(f"CASE WHEN _in_s = 1 THEN {PAGERANK_SCALE} div _ns ELSE 0L END").alias(
-            "_ri"
-        ),
-    )
-    for _ in range(iterations):
-        contrib = (
-            e.join(ranks, e["_src"] == ranks["_node"])
-            .join(deg, "_src")
-            .select("_dst", F.expr("_ri div _outdeg").alias("_ci"))
-        )
-        sums = contrib.groupBy("_dst").agg(F.sum("_ci").alias("_s"))
-        update = (
-            f"(CASE WHEN _in_s = 1 THEN {base_num} div ({damping_den} * _ns) "
-            f"ELSE 0L END)"
-            f" + (({damping_num} * coalesce(_s, 0L)) div {damping_den})"
-        )
-        ranks = (
-            flagged.join(sums, flagged["_node"] == F.col("_dst"), "left")
-            .join(F.broadcast(ns_df))
-            .select("_node", "_in_s", F.expr(update).alias("_ri"))
-        )
     return ranks.select(
         F.col("_node").alias("node"),
         F.col("_ri").cast("long").alias("pr_fp"),
@@ -360,6 +309,79 @@ def triangle_count(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
     )
 
 
+def _frontier_relax(
+    e: DataFrame, init: DataFrame, keys: list[str], rounds: int
+) -> DataFrame:
+    """Bounded min-plus frontier relaxation: the one round body behind
+    :func:`bfs_hops`, :func:`multi_source_bfs` and :func:`sssp_rounds`.
+
+    ``e`` is ``(_src, _dst, _w)`` with non-negative integer weights and
+    ``init`` is the round-0 distance map ``(*keys, _node, _dist)``, one row
+    per (keys, node). ``keys`` label independent traversals that share
+    one pass (multi-source BFS keys on the seed, so k seeds cost one
+    traversal with k-wide frontiers, not k traversals). Returns
+    ``(*keys, _node, _dist)``: the minimum distance over paths of at most
+    ``rounds`` edges, exact BIGINT arithmetic.
+
+    Each round relaxes only the edges out of nodes whose distance
+    IMPROVED last round (frontier ⋈ e on the source key, 1 exchange),
+    min-aggregates the candidates per (keys, node), and FULL JOINs them
+    onto the distance map (1 exchange) into one state table
+    ``(*keys, _node, _dist, _imp)``. Relaxing from the frontier only is
+    equivalent to full Bellman-Ford relaxation — a node that did not
+    improve already propagated its distance the round it did — but keeps
+    round cost proportional to the improving wave, the reason Pregel
+    vote-to-halt beats naive Bellman-Ford at scale. With unit weights the
+    improved nodes are exactly the newly reached ones: frontier BFS.
+
+    Barrier policy, the one for all three traversals: ``e`` is
+    checkpointed once, and each round's state table is checkpointed once
+    (the superseded one freed). The state is both the next frontier
+    (``where(_imp)``) and the next distance map, so without the barrier
+    round r re-evaluates every earlier round twice over. Measured on a
+    4-core host, local[4], sf0.1, process-tree CPU-s (jobs) per entry —
+    graph_sssp_weighted / graph_bfs_purchases / graph_closeness_centrality:
+    this policy 21.0 (28) / 17.5 (28) / 7.5 (32); no state barrier
+    22.7–24.4 (23) / 17.5–19.0 (23) / 9.6–11.0 (21); checkpointing only
+    the frontier 31.9 (44) / 25.4 (44) / 11.9 (57). More jobs, less CPU:
+    a checkpoint job costs less than re-running the rounds it replaces.
+
+    At 100 TB: pre-partition ``e`` by ``_src`` once so every round's
+    frontier join reuses the layout; state is O(reached) rows.
+    """
+    if rounds < 0:
+        raise ValueError(f"rounds must be >= 0, got {rounds}")
+    from irio_mapreduce_spark.llm.dedup import free_checkpoint
+
+    e = e.localCheckpoint(eager=True)
+    on = [*keys, "_node"]
+    state = init.withColumn("_imp", F.lit(True))
+    for r in range(rounds):
+        frontier = state.where("_imp")
+        cand = (
+            frontier.join(e, frontier["_node"] == e["_src"])
+            .groupBy(*keys, F.col("_dst").alias("_node"))
+            .agg(F.min(F.col("_dist") + F.col("_w")).alias("_cand"))
+        )
+        nxt = (
+            state.drop("_imp")
+            .join(cand, on, "full")
+            .select(
+                *on,
+                F.least("_dist", "_cand").alias("_dist"),
+                # NULL _cand (not reached this round) is not an improvement
+                F.coalesce(
+                    F.col("_cand") < F.col("_dist"), F.col("_dist").isNull()
+                ).alias("_imp"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        if r:  # round 0's state is the caller's init, not a checkpoint
+            free_checkpoint(state)
+        state = nxt
+    return state.drop("_imp")
+
+
 def bfs_hops(
     edges: DataFrame,
     sources: DataFrame,
@@ -372,46 +394,17 @@ def bfs_hops(
     minimum hop distance (0..``max_hops``) from any node in ``sources`` to
     every reachable node within ``max_hops`` hops. Returns
     ``(node, hops)`` — integers, so cross-engine exact by construction.
-
-    Shape per round (identical to one PageRank round, minus the degree
-    join): frontier ⋈ edges on the source key (1 exchange), then
-    ``min(hops)`` against the accumulated distance map (1 exchange) to
-    keep only NEWLY reached nodes as the next frontier — the classic
-    frontier-based BFS that Pregel/GraphX run, expressed as DataFrame
-    joins. The frontier-only join (not visited ⋈ edges) is what keeps
-    round cost proportional to the expanding wave, not the whole graph.
-    ``max_hops`` is a small fixed constant by contract (the catalog entry
-    unrolls 3), so lineage stays shallow without checkpoint barriers; an
-    unbounded variant would reuse the ``llm.dedup.connected_components``
-    convergence-probe + checkpoint-free pattern.
-
-    At 100 TB: pre-partition ``edges`` by ``src`` once so every round's
-    frontier join reuses the layout; state is O(reached) rows of
-    (node, int).
-    """
-    if max_hops < 0:
-        raise ValueError(f"max_hops must be >= 0, got {max_hops}")
-    e = edges.select(
-        F.col(src_col).alias("_src"), F.col(dst_col).alias("_dst")
-    ).localCheckpoint(eager=True)
-    dist = sources.select(
-        F.col(node_col).alias("_node"), F.lit(0).alias("_hops")
-    ).distinct()
-    frontier = dist
-    for h in range(1, max_hops + 1):
-        reached = (
-            frontier.join(e, frontier["_node"] == e["_src"])
-            .select(F.col("_dst").alias("_node"), F.lit(h).alias("_hops"))
-            .distinct()
-        )
-        # New frontier = reached nodes not already at a smaller distance.
-        frontier = reached.join(dist, "_node", "left_anti")
-        dist = dist.unionByName(frontier)
-    # A node can enter `dist` at most once (anti-join guard), so the
-    # min-agg below is belt-and-braces for the unioned lineage.
-    return dist.groupBy("_node").agg(F.min("_hops").alias("hops")).select(
-        F.col("_node").alias("node"), F.col("hops").cast("int").alias("hops")
+    :func:`sssp_rounds` with unit weights."""
+    dist = sssp_rounds(
+        edges.withColumn("_unit", F.lit(1)),
+        sources,
+        src_col,
+        dst_col,
+        "_unit",
+        node_col,
+        max_hops,
     )
+    return dist.select("node", F.col("dist").cast("int").alias("hops"))
 
 
 def multi_source_bfs(
@@ -426,52 +419,56 @@ def multi_source_bfs(
     every node reachable within ``max_hops`` — :func:`bfs_hops` with the
     distance map keyed by (seed, node) instead of node, the primitive
     under closeness/ego-network statistics. Returns
-    ``(seed, node, hops)``, integers, cross-engine exact.
-
-    Shape per round is bfs_hops' exactly (frontier ⋈ edges, then an
-    anti-join against the accumulated map); the seed label rides the
-    frontier rows, so k seeds cost one traversal with k-wide frontiers,
-    NOT k traversals — state is O(k · reached). ``max_hops`` is a small
-    fixed constant by contract (the catalog entry unrolls 4), keeping
-    lineage shallow without checkpoint barriers."""
-    if max_hops < 0:
-        raise ValueError(f"max_hops must be >= 0, got {max_hops}")
-    e = edges.select(
-        F.col(src_col).alias("_src"), F.col(dst_col).alias("_dst")
-    ).localCheckpoint(eager=True)
-    dist = seeds.select(
-        F.col(seed_col).alias("_seed"),
-        F.col(seed_col).alias("_node"),
-        F.lit(0).alias("_hops"),
-    ).distinct()
-    frontier = dist
-    for h in range(1, max_hops + 1):
-        reached = (
-            frontier.join(e, frontier["_node"] == e["_src"])
-            .select(
-                "_seed",
-                F.col("_dst").alias("_node"),
-                F.lit(h).alias("_hops"),
-            )
-            .distinct()
+    ``(seed, node, hops)``, integers, cross-engine exact. The seed label
+    rides the frontier rows of :func:`_frontier_relax`, so state is
+    O(k · reached)."""
+    init = (
+        seeds.select(
+            F.col(seed_col).alias("_seed"), F.col(seed_col).alias("_node")
         )
-        # Materialize each round's frontier: the anti-join consumes the
-        # accumulated dist (a union of every earlier frontier), so
-        # without a per-round barrier round h re-evaluates rounds
-        # 1..h-1's joins — lineage cost compounds with hop count (the
-        # connected_components discipline; measured 14.3 s -> in-family
-        # without/with on the catalog entry at sf0.1).
-        frontier = reached.join(
-            dist, ["_seed", "_node"], "left_anti"
-        ).localCheckpoint(eager=True)
-        dist = dist.unionByName(frontier)
-    return dist.groupBy("_seed", "_node").agg(
-        F.min("_hops").alias("_h")
-    ).select(
+        .distinct()
+        .select("_seed", "_node", F.lit(0).cast("long").alias("_dist"))
+    )
+    e = edges.select(
+        F.col(src_col).alias("_src"),
+        F.col(dst_col).alias("_dst"),
+        F.lit(1).cast("long").alias("_w"),
+    )
+    dist = _frontier_relax(e, init, ["_seed"], max_hops)
+    return dist.select(
         F.col("_seed").alias("seed"),
         F.col("_node").alias("node"),
-        F.col("_h").cast("int").alias("hops"),
+        F.col("_dist").cast("int").alias("hops"),
     )
+
+
+def sssp_rounds(
+    edges: DataFrame,
+    sources: DataFrame,
+    src_col: str,
+    dst_col: str,
+    weight_col: str,
+    node_col: str,
+    rounds: int,
+) -> DataFrame:
+    """Bounded Bellman-Ford: minimum WEIGHTED distance from any node in
+    ``sources`` to every node reachable within ``rounds`` edges, over a
+    directed edge list with non-negative integer weights. Returns
+    ``(node, dist)`` — exact BIGINT arithmetic, so cross-engine exact.
+    :func:`_frontier_relax` (round shape, barrier policy and scale notes
+    there) with the edge weights as given."""
+    e = edges.select(
+        F.col(src_col).alias("_src"),
+        F.col(dst_col).alias("_dst"),
+        F.col(weight_col).cast("long").alias("_w"),
+    )
+    init = (
+        sources.select(F.col(node_col).alias("_node"))
+        .distinct()
+        .select("_node", F.lit(0).cast("long").alias("_dist"))
+    )
+    dist = _frontier_relax(e, init, [], rounds)
+    return dist.select(F.col("_node").alias("node"), F.col("_dist").alias("dist"))
 
 
 def label_propagation(
@@ -618,76 +615,6 @@ def kcore_peel(
     )
     return final_deg.select(
         F.col("_n").alias("node"), F.col("_d").cast("long").alias("degree")
-    )
-
-
-def sssp_rounds(
-    edges: DataFrame,
-    sources: DataFrame,
-    src_col: str,
-    dst_col: str,
-    weight_col: str,
-    node_col: str,
-    rounds: int,
-) -> DataFrame:
-    """Bounded Bellman-Ford: minimum WEIGHTED distance from any node in
-    ``sources`` to every node reachable within ``rounds`` edges, over a
-    directed edge list with non-negative integer weights. Returns
-    ``(node, dist)`` — exact BIGINT arithmetic, so cross-engine exact.
-
-    The weighted twin of ``bfs_hops`` with the same frontier discipline:
-    each round relaxes edges only out of nodes whose distance IMPROVED
-    last round (frontier ⋈ edges, 1 exchange; then a min-merge against
-    the accumulated distance map, 1 exchange). Relaxing from the frontier
-    only is equivalent to full Bellman-Ford relaxation — a node that did
-    not improve already propagated its distance the round it entered —
-    but keeps round cost proportional to the improving wave, the same
-    reason Pregel SSSP vote-to-halt beats naive BF at scale. ``rounds``
-    is a small fixed constant by contract (the catalog entry unrolls 3),
-    so lineage stays shallow without checkpoint barriers.
-
-    At 100 TB: pre-partition ``edges`` by ``src`` once so every round's
-    frontier join reuses the layout; state is O(reached) rows of
-    (node, BIGINT).
-    """
-    if rounds < 0:
-        raise ValueError(f"rounds must be >= 0, got {rounds}")
-    e = edges.select(
-        F.col(src_col).alias("_src"),
-        F.col(dst_col).alias("_dst"),
-        F.col(weight_col).cast("long").alias("_w"),
-    ).localCheckpoint(eager=True)
-    dist = (
-        sources.select(F.col(node_col).alias("_node"))
-        .distinct()
-        .select("_node", F.lit(0).cast("long").alias("_dist"))
-    )
-    frontier = dist
-    for _ in range(rounds):
-        cand = (
-            frontier.join(e, frontier["_node"] == e["_src"])
-            .select(
-                F.col("_dst").alias("_node"),
-                (F.col("_dist") + F.col("_w")).alias("_dist"),
-            )
-            .groupBy("_node")
-            .agg(F.min("_dist").alias("_dist"))
-        )
-        improved = (
-            cand.join(
-                dist.withColumnRenamed("_dist", "_old"), "_node", "left"
-            )
-            .where(F.col("_old").isNull() | (F.col("_dist") < F.col("_old")))
-            .select("_node", "_dist")
-        )
-        dist = (
-            dist.unionByName(cand)
-            .groupBy("_node")
-            .agg(F.min("_dist").alias("_dist"))
-        )
-        frontier = improved
-    return dist.select(
-        F.col("_node").alias("node"), F.col("_dist").alias("dist")
     )
 
 

@@ -22,7 +22,6 @@ from irio_mapreduce_spark.operators.graph import (
     label_propagation,
     multi_source_bfs,
     pagerank,
-    pagerank_personalized,
     triangle_count,
     truss_peel_rounds,
 )
@@ -85,19 +84,7 @@ def graph_pagerank_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-round shuffle budget are documented in
     ``operators.graph.pagerank``; the oracle unrolls the identical three
     rounds as chained CTEs."""
-    orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
-        .select(
-            F.concat(F.lit("C"), F.col("o_custkey").cast("string")).alias("c"),
-            F.concat(F.lit("S"), F.col("l_suppkey").cast("string")).alias("s"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionByName(
-        pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
+    edges = _purchase_edges(spark, sf_dir)
     return pagerank(edges, "src", "dst", iterations=3)
 
 
@@ -192,34 +179,14 @@ def graph_bfs_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph from one nation's customers (supply-chain blast radius: which
     suppliers/customers are within 3 purchase hops of one nation's customer
     base). Per-hop roll-up (count + min/max node) keeps the output
-    driver-comparable at any scale; the frontier-join round structure and
-    its shuffle budget are documented in ``operators.graph.bfs_hops``. The
-    oracle unrolls the same three frontier expansions as chained CTEs —
-    hop distances are integers, so the match is exact by construction."""
-    orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
-        .select(
-            F.concat(F.lit("C"), F.col("o_custkey").cast("string")).alias("c"),
-            F.concat(F.lit("S"), F.col("l_suppkey").cast("string")).alias("s"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionByName(
-        pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
-    nation = read_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_7")
-    sources = (
-        read_table(spark, sf_dir, "customer")
-        .join(
-            F.broadcast(nation.select("n_nationkey")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .select(
-            F.concat(F.lit("C"), F.col("c_custkey").cast("string")).alias("node")
-        )
-    )
+    driver-comparable at any scale; ``operators.graph.bfs_hops`` runs the
+    frontier-relaxation kernel ``operators.graph._frontier_relax`` with
+    unit weights, whose round structure, shuffle budget and barrier
+    policy are documented there. The oracle unrolls the same three
+    frontier expansions as chained CTEs — hop distances are integers, so
+    the match is exact by construction."""
+    edges = _purchase_edges(spark, sf_dir)
+    sources = _nation_customers(spark, sf_dir, "NATION_7")
     dist = bfs_hops(edges, sources, "src", "dst", "node", max_hops=3)
     return dist.groupBy("hops").agg(
         F.count("*").cast("long").alias("n_nodes"),
@@ -231,7 +198,7 @@ def graph_bfs_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
 # One PERSONALIZED PageRank round in DuckDB: identical integer arithmetic
 # to _PR_ROUND, but the (1-d) teleport term is paid only to members of the
 # source set (in_s flag on the node universe) — matching
-# operators.graph.pagerank_personalized exactly.
+# operators.graph.pagerank(..., sources=...) exactly.
 _PPR_ROUND = f"""
     {{out}} AS (
       SELECT f.node,
@@ -292,36 +259,14 @@ def graph_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     hops carry mass (the ``ri > 0`` filter makes that support explicit
     on both sides). Same fixed-point BIGINT arithmetic and per-round
     Pregel shuffle pair as the global entry — the S-membership flag
-    rides the rank table, so personalization adds one init-time
+    rides the node table, so personalization adds one init-time
     semi-join and zero per-round cost
-    (``operators.graph.pagerank_personalized``). The oracle unrolls the
+    (``operators.graph.pagerank`` with ``sources=``). The oracle unrolls the
     identical three personalized rounds as chained CTEs."""
-    orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
-        .select(
-            F.concat(F.lit("C"), F.col("o_custkey").cast("string")).alias("c"),
-            F.concat(F.lit("S"), F.col("l_suppkey").cast("string")).alias("s"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionByName(
-        pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
-    nation = read_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_7")
-    sources = (
-        read_table(spark, sf_dir, "customer")
-        .join(
-            F.broadcast(nation.select("n_nationkey")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .select(
-            F.concat(F.lit("C"), F.col("c_custkey").cast("string")).alias("node")
-        )
-    )
-    return pagerank_personalized(
-        edges, "src", "dst", sources, "node", iterations=3
+    edges = _purchase_edges(spark, sf_dir)
+    sources = _nation_customers(spark, sf_dir, "NATION_7")
+    return pagerank(
+        edges, "src", "dst", iterations=3, sources=sources, source_col="node"
     ).filter(F.col("pr_fp") > 0)
 
 
@@ -480,19 +425,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle possible at all; shuffle budget and the per-round checkpoint
     discipline are documented in ``operators.graph.label_propagation``.
     The oracle replays both rounds as chained CTEs."""
-    orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
-        .select(
-            F.concat(F.lit("C"), F.col("o_custkey").cast("string")).alias("c"),
-            F.concat(F.lit("S"), F.col("l_suppkey").cast("string")).alias("s"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionByName(
-        pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
+    edges = _purchase_edges(spark, sf_dir)
     labels = label_propagation(edges, "src", "dst", iterations=2)
     return labels.groupBy(F.col("label").alias("community")).agg(
         F.count("*").cast("long").alias("n"),
@@ -616,8 +549,9 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     All-integer costs (floor division both engines truncate identically
     on positives), so the oracle's 3 unrolled full-relaxation CTE rounds
     match the frontier-based Spark rounds exactly (a node that did not
-    improve has already propagated its distance). Round structure and
-    scale notes in ``operators.graph.sssp_rounds``."""
+    improve has already propagated its distance). Round structure, barrier
+    policy and scale notes in ``operators.graph._frontier_relax``, the
+    kernel under ``sssp_rounds``."""
     from irio_mapreduce_spark.operators.graph import sssp_rounds
 
     orders = read_table(spark, sf_dir, "orders").select(
@@ -646,21 +580,7 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionByName(
         pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"), "w")
     )
-    nation = read_table(spark, sf_dir, "nation").filter(
-        F.col("n_name") == "NATION_3"
-    )
-    sources = (
-        read_table(spark, sf_dir, "customer")
-        .join(
-            F.broadcast(nation.select("n_nationkey")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .select(
-            F.concat(F.lit("C"), F.col("c_custkey").cast("string")).alias(
-                "node"
-            )
-        )
-    )
+    sources = _nation_customers(spark, sf_dir, "NATION_3")
     dist = sssp_rounds(edges, sources, "src", "dst", "w", "node", rounds=3)
     return (
         dist.where(F.col("dist") > 0)
@@ -708,25 +628,7 @@ def graph_hits_hubs_authorities(
     any tested SF), so no division, no float, no per-round norm
     broadcast; rankings are normalization-invariant. Top-10 per role
     with (score DESC, node) ties — deterministic."""
-    orders = read_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = read_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    edges = (
-        orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
-        .select(
-            F.concat(F.lit("C"), F.col("o_custkey").cast("string")).alias(
-                "c"
-            ),
-            F.concat(F.lit("S"), F.col("l_suppkey").cast("string")).alias(
-                "s"
-            ),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    edges = _purchase_pairs(spark, sf_dir).localCheckpoint(eager=True)
     a1 = edges.groupBy("s").agg(
         (F.count("*").cast("long") * F.lit(1000000)).alias("a")
     )
@@ -764,6 +666,49 @@ def graph_hits_hubs_authorities(
         )
     )
     return top_a.unionByName(top_h)
+
+
+def _purchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct (customer, supplier) purchase pairs from orders ⋈
+    lineitem, as string node ids ``c`` = 'C<custkey>', ``s`` =
+    'S<suppkey>' — the bipartite graph of the PageRank, BFS, label
+    propagation and HITS entries."""
+    orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    return (
+        orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
+        .select(
+            F.concat(F.lit("C"), F.col("o_custkey").cast("string")).alias("c"),
+            F.concat(F.lit("S"), F.col("l_suppkey").cast("string")).alias("s"),
+        )
+        .distinct()
+    )
+
+
+def _purchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The purchase pairs mirrored into a directed ``(src, dst)`` edge
+    list, so every node has out-edges (no dangling mass)."""
+    pairs = _purchase_pairs(spark, sf_dir)
+    return pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionByName(
+        pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
+    )
+
+
+def _nation_customers(spark: SparkSession, sf_dir: str, n_name: str) -> DataFrame:
+    """One nation's customers as purchase-graph node ids (``node`` =
+    'C<custkey>'): the source set of the BFS, personalized PageRank and
+    SSSP entries."""
+    nation = read_table(spark, sf_dir, "nation").filter(F.col("n_name") == n_name)
+    return (
+        read_table(spark, sf_dir, "customer")
+        .join(
+            F.broadcast(nation.select("n_nationkey")),
+            F.col("c_nationkey") == F.col("n_nationkey"),
+        )
+        .select(
+            F.concat(F.lit("C"), F.col("c_custkey").cast("string")).alias("node")
+        )
+    )
 
 
 _COSUPPLY_EDGES_SQL = """

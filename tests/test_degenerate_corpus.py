@@ -118,8 +118,14 @@ def test_second_session_entries_on_empty_corpus(spark):
 
 def test_graph_operators_on_empty_and_trivial_graphs(spark):
     """Empty edge lists: the triangle census returns one (0, 0, 0) row
-    (aggregate semantics), BFS returns just the sources at hop 0."""
-    from irio_mapreduce_spark.operators.graph import bfs_hops, triangle_count
+    (aggregate semantics); BFS, multi-source BFS and SSSP return just the
+    sources at distance 0."""
+    from irio_mapreduce_spark.operators.graph import (
+        bfs_hops,
+        multi_source_bfs,
+        sssp_rounds,
+        triangle_count,
+    )
 
     empty = spark.createDataFrame([], "s long, d long")
     row = triangle_count(empty, "s", "d").head()
@@ -130,3 +136,15 @@ def test_graph_operators_on_empty_and_trivial_graphs(spark):
         r.node: r.hops for r in bfs_hops(empty, srcs, "s", "d", "n", 3).collect()
     }
     assert out == {7: 0}
+
+    weighted = spark.createDataFrame([], "s long, d long, w long")
+    out = {
+        r.node: r.dist
+        for r in sssp_rounds(weighted, srcs, "s", "d", "w", "n", 3).collect()
+    }
+    assert out == {7: 0}
+    out = {
+        (r.seed, r.node): r.hops
+        for r in multi_source_bfs(empty, srcs, "s", "d", "n", 3).collect()
+    }
+    assert out == {(7, 7): 0}

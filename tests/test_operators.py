@@ -296,6 +296,17 @@ def test_pagerank_fixed_point_properties(spark):
     }
     assert again == ranks
 
+    # personalized over every node: the teleport set is the whole
+    # universe, so the ranks are exactly the global ones
+    everyone = local_df(spark, [(n,) for n in ranks], "node string")
+    personal = {
+        r.node: r.pr_fp
+        for r in pagerank(
+            star, "src", "dst", sources=everyone, source_col="node"
+        ).collect()
+    }
+    assert personal == ranks
+
 
 def test_merge_upsert_null_safe_and_schema_guard(spark):
     """NULL == NULL counts as unchanged (null-safe comparison); a schema
@@ -420,6 +431,12 @@ def test_pagerank_dangling_redistribute(spark):
 
     with pytest.raises(ValueError, match="dangling"):
         pagerank(g, "src", "dst", dangling="bogus")
+    # personalization is defined for the assume_none universe only
+    srcs = local_df(spark, [("a",)], "node string")
+    with pytest.raises(ValueError, match="dangling"):
+        pagerank(
+            g, "src", "dst", dangling="redistribute", sources=srcs, source_col="node"
+        )
 
 
 def test_triangle_count_vs_bruteforce(spark):
@@ -464,24 +481,32 @@ def test_triangle_count_vs_bruteforce(spark):
 
 
 def test_bfs_hops_vs_bruteforce(spark):
-    """Frontier BFS equals a Python reference BFS (min hop distance,
-    bounded) on a seeded random digraph with multiple sources, and
-    max_hops truncates the wave exactly."""
+    """The three traversal wrappers of the frontier-relaxation kernel
+    equal Python references on a seeded random digraph, for a bounded
+    round count that truncates the wave exactly: frontier BFS equals a
+    reference BFS (min hop distance, multiple sources), weighted SSSP a
+    bounded Bellman-Ford, multi-source BFS a per-seed BFS, and SSSP with
+    unit weights equals BFS."""
     import random
     from collections import deque
 
-    from irio_mapreduce_spark.operators.graph import bfs_hops
+    from irio_mapreduce_spark.operators.graph import (
+        bfs_hops,
+        multi_source_bfs,
+        sssp_rounds,
+    )
 
     rng = random.Random(11)
     edges = list({(rng.randrange(40), rng.randrange(40)) for _ in range(90)})
+    weighted = [(a, b, rng.randint(1, 9)) for a, b in edges]
     srcs = [0, 1, 2]
 
-    def brute(max_hops):
+    def brute(seeds, max_hops):
         adj = {}
         for a, b in edges:
             adj.setdefault(a, []).append(b)
-        dist = {s: 0 for s in srcs}
-        q = deque(srcs)
+        dist = {s: 0 for s in seeds}
+        q = deque(seeds)
         while q:
             u = q.popleft()
             if dist[u] == max_hops:
@@ -492,14 +517,44 @@ def test_bfs_hops_vs_bruteforce(spark):
                     q.append(v)
         return dist
 
+    def bellman_ford(rounds):
+        # dist after r rounds = min weight over paths of at most r edges
+        dist = {s: 0 for s in srcs}
+        for _ in range(rounds):
+            nxt = dict(dist)
+            for a, b, w in weighted:
+                if a in dist and dist[a] + w < nxt.get(b, float("inf")):
+                    nxt[b] = dist[a] + w
+            dist = nxt
+        return dist
+
     e_df = local_df(spark, edges, "s long, d long")
+    w_df = local_df(spark, weighted, "s long, d long, w long")
+    unit_df = local_df(spark, [(a, b, 1) for a, b in edges], "s long, d long, w long")
     s_df = local_df(spark, [(s,) for s in srcs], "n long")
     for k in (0, 1, 3):
         got = {
             r.node: r.hops
             for r in bfs_hops(e_df, s_df, "s", "d", "n", max_hops=k).collect()
         }
-        assert got == brute(k)
+        assert got == brute(srcs, k)
+
+        sssp = {
+            r.node: r.dist
+            for r in sssp_rounds(w_df, s_df, "s", "d", "w", "n", rounds=k).collect()
+        }
+        assert sssp == bellman_ford(k)
+
+        unit = {
+            r.node: r.dist
+            for r in sssp_rounds(unit_df, s_df, "s", "d", "w", "n", rounds=k).collect()
+        }
+        assert unit == got
+
+        multi = {}
+        for r in multi_source_bfs(e_df, s_df, "s", "d", "n", max_hops=k).collect():
+            multi.setdefault(r.seed, {})[r.node] = r.hops
+        assert multi == {s: brute([s], k) for s in srcs}
 
 
 def test_frequent_items_exact_and_partitioning_invariant(spark):
