@@ -33,7 +33,8 @@ by the driver and pytest at sf0.01.
 
 Env knobs (driver contract):
   SPARK_GRAFT_SF_DIR  input dir  (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS    local[N]   (default 32)
+  SPARK_GRAFT_CPUS    local[N]   (default: the process's CPU-affinity count,
+                                  session.DEFAULT_CPUS)
 """
 
 from __future__ import annotations

@@ -15,6 +15,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from irio_mapreduce_spark.operators.barrier import barrier, free_checkpoint
+from irio_mapreduce_spark.session import session_memo
+
 
 def widen(df: DataFrame, target_partitions: int | None = None) -> DataFrame:
     """Repartition up to the session's shuffle parallelism when the input
@@ -43,26 +46,6 @@ def widen(df: DataFrame, target_partitions: int | None = None) -> DataFrame:
         return df.repartition(target_partitions)
     target = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
     return df.repartition(target) if df.rdd.getNumPartitions() < target else df
-
-
-def free_checkpoint(df: DataFrame) -> None:
-    """Release the executor block-manager blocks behind a
-    ``localCheckpoint``-ed DataFrame NOW, instead of waiting for the
-    nondeterministic ContextCleaner GC cycle. The frame (and every plan
-    built on it) is unusable afterwards — only call on superseded
-    intermediates, never on a frame still reachable by a caller.
-
-    Iterative builders here (``connected_components``) call this on each
-    round's superseded labels; long-running drivers that loop over catalog
-    entries can call it on retired index artifacts to keep block-manager
-    memory flat."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        # Not a checkpoint-backed plan (or a future Spark moved the
-        # accessor): fall back to ContextCleaner GC rather than fail the
-        # job over a memory-hygiene optimization.
-        pass
 
 
 def tokens(text_col: str | Column, lowercase: bool = True) -> Column:
@@ -162,9 +145,6 @@ def _band_key(shingle_col: Column, band: int, rows_per_band: int) -> Column:
     )
 
 
-_BANDED_EXPLODE_MEMO: dict = {}
-
-
 def banded_explode(
     shingle_colname: str, bands: int, rows_per_band: int
 ) -> Column:
@@ -179,30 +159,19 @@ def banded_explode(
     incremental-dedup entries once per run) were paying that per plan.
     A ``Column`` is an immutable expression tree resolved against
     whatever plan it is later applied to, so one instance serves every
-    plan in the context; the memo keys on (applicationId, startTime) —
-    unique per context incarnation — so a restarted JVM can never serve
-    a stale py4j reference (id(sc) could be reused by the allocator
-    after the old context is garbage-collected — r12 ADVICE.md)."""
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    ctx = (sc.applicationId, sc.startTime) if sc is not None else None
-    key = (ctx, shingle_colname, bands, rows_per_band)
-    col = _BANDED_EXPLODE_MEMO.get(key)
-    if col is None:
-        # drop refs minted under a previous (dead) context before caching
-        for k in [k for k in _BANDED_EXPLODE_MEMO if k[0] != ctx]:
-            del _BANDED_EXPLODE_MEMO[k]
-        col = F.explode(
+    plan in the context. ``session_memo`` drops the entry with its
+    context, so a restarted JVM can never serve a stale py4j reference."""
+    return session_memo(
+        ("banded_explode", shingle_colname, bands, rows_per_band),
+        lambda: F.explode(
             F.array(
                 *[
                     _band_key(F.col(shingle_colname), b, rows_per_band)
                     for b in range(bands)
                 ]
             )
-        )
-        _BANDED_EXPLODE_MEMO[key] = col
-    return col
+        ),
+    )
 
 
 def minhash_lsh_pairs(
@@ -250,9 +219,8 @@ def minhash_lsh_pairs(
     # the candidate verification read the same materialized sets. At
     # corpus scale, persist this projection to storage instead of
     # localCheckpoint (same shape: the index outlives the query).
-    pre = (
+    pre = barrier(
         widen(df.select(F.col(id_col).alias("_id"), F.col(shingle_col).alias("_sv")))
-        .localCheckpoint(eager=True)
     )
     keyed = pre.select(
         "_id",
@@ -268,7 +236,7 @@ def minhash_lsh_pairs(
     # keying (and the bucket-size window, when capped) replays per side.
     # (id, bucket) longs only — ``bands`` rows per document, the LSH index
     # table a production pipeline persists.
-    sized = sized.localCheckpoint(eager=True)
+    sized = barrier(sized)
     a = sized.select(F.col("_id").alias("id1"), "_bucket")
     b = sized.select(F.col("_id").alias("id2"), "_bucket")
     pairs = (
@@ -527,9 +495,11 @@ def simhash_near_pairs(
     # signature pipeline twice). The barrier frame is (id, 64-bit long) —
     # bytes per row — so this is the canonical "persist the fingerprint
     # table, not the payloads" index shape at any scale.
-    sh = simhash_signatures(
-        widen(df, target_partitions), id_col, shingles(tokens(text_col), ngram)
-    ).localCheckpoint(eager=True)
+    sh = barrier(
+        simhash_signatures(
+            widen(df, target_partitions), id_col, shingles(tokens(text_col), ngram)
+        )
+    )
     banded = sh.select(
         "_id",
         "_sh",
@@ -583,17 +553,13 @@ def connected_components(
     self-contained shuffle on the (long, long) label table — no state ever
     exceeds one row per node plus the edge list.
 
-    Iteration mechanics that matter in Spark: every round's result is
-    ``localCheckpoint``-ed (eager). Without it the logical plan doubles in
-    depth per round (each join references the previous round's full plan
-    twice: once for propagation, once for the convergence check), and
-    optimizer time — not the data — becomes the bottleneck. The edge list
-    is checkpointed once and reused every round. ``localCheckpoint``
-    trades fault-tolerance for speed (blocks live on executors; an
-    executor loss mid-iteration fails the job rather than recomputing) —
-    on a long-running 1000-executor job, set a reliable
-    ``spark.sparkContext.setCheckpointDir`` and swap in ``checkpoint()``;
-    the loop structure is unchanged.
+    Iteration mechanics that matter in Spark: every round's result goes
+    behind a :func:`~irio_mapreduce_spark.operators.barrier.barrier`.
+    Without it the logical plan doubles in depth per round (each join
+    references the previous round's full plan twice: once for
+    propagation, once for the convergence check), and optimizer time —
+    not the data — becomes the bottleneck. The edge list is materialized
+    once and reused every round.
 
     Convergence is verified, not assumed: a round with zero improved labels
     ends the loop; hitting ``max_iter`` without converging raises (a silent
@@ -614,20 +580,16 @@ def connected_components(
             e.join(n.withColumnRenamed("_n", "_u"), "_u", "left_semi")
             .join(n.withColumnRenamed("_n", "_v"), "_v", "left_semi")
         )
-        e = e.distinct().localCheckpoint(eager=True)
-    else:
-        e = e.distinct().localCheckpoint(eager=True)
+    e = barrier(e.distinct())
+    if nodes is None:
         n = e.select(F.col("_u").alias("_n")).distinct()
-    labels = n.select("_n", F.col("_n").alias("_c")).localCheckpoint(eager=True)
+    labels = barrier(n.select("_n", F.col("_n").alias("_c")))
     for _ in range(max_iter):
         nbr = e.join(labels, e["_u"] == labels["_n"]).select(
             F.col("_v").alias("_n"), "_c"
         )
-        new = (
-            labels.unionByName(nbr)
-            .groupBy("_n")
-            .agg(F.min("_c").alias("_c"))
-            .localCheckpoint(eager=True)
+        new = barrier(
+            labels.unionByName(nbr).groupBy("_n").agg(F.min("_c").alias("_c"))
         )
         improved = (
             new.join(labels.withColumnRenamed("_c", "_old"), "_n")
@@ -689,9 +651,8 @@ def connected_components_star(
     canonical (min, max) edge set unchanged (checked with ``exceptAll`` in
     BOTH directions on the (long, long) pairs — cheap, and exact even with
     duplicate-free invariants violated). Same checkpoint discipline as
-    ``connected_components``: eager ``localCheckpoint`` per round (plan
-    depth would otherwise double per round), superseded rounds freed
-    immediately; swap in reliable ``checkpoint()`` for long cluster jobs.
+    ``connected_components``: one barrier per round (plan depth would
+    otherwise double per round), superseded rounds freed immediately.
 
     Returns one row per node: (``id_col``, ``component``) with component =
     min node id of the component — bit-identical contract to
@@ -714,16 +675,15 @@ def connected_components_star(
             .distinct()
         )
     # Canonical (small, large) orientation; self-loops carry no information.
-    cur = (
+    cur = barrier(
         e.filter(F.col("_u") != F.col("_v"))
         .select(
             F.least("_u", "_v").alias("_v"), F.greatest("_u", "_v").alias("_u")
         )
         .select("_u", "_v")
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    n = n.localCheckpoint(eager=True)
+    n = barrier(n)
 
     # r12 (guide §2.4/§1.2): each round used to cost ~6 jobs — two
     # groupBy-min + join pairs (each min re-attached to its edges via an
@@ -760,7 +720,7 @@ def connected_components_star(
         # self-loops fall to the shared filter, duplicate root edges to
         # the distinct.
         lg = large.withColumn("_m", F.min("_v").over(w_u))
-        new = (
+        new = barrier(
             lg.select(
                 F.explode(
                     F.array(
@@ -777,7 +737,6 @@ def connected_components_star(
             .filter(F.col("_small") != F.col("_big"))
             .select(F.col("_big").alias("_u"), F.col("_small").alias("_v"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
         changed = (
             0
@@ -904,14 +863,13 @@ def incremental_dedup(
     # persisted corpus index the production note below describes. The
     # corpus is a union-shaped input, so the target width is passed
     # explicitly (widen's probe path is expensive on multi-branch plans).
-    c_idx = (
+    c_idx = barrier(
         widen(
             corpus.select(
                 F.col(id_col).alias("_cid"), fp.alias("_cfp"), sh.alias("_csh")
             ),
             target_partitions=target,
         )
-        .localCheckpoint(eager=True)
     )
     return incremental_dedup_against_index(
         c_idx,
@@ -970,12 +928,14 @@ def build_incremental_index(
     # Build PRE-WIDENED and checkpoint once: the three writes all read this
     # (a 1-2-file layout made the probe's corpus scan single-threaded —
     # measured 16.8 s vs 6.1 s for the rebuild path at sf0.1).
-    idx = widen(
-        corpus.select(
-            F.col(id_col).alias("_cid"), fp.alias("_cfp"), sh.alias("_csh")
-        ),
-        target_partitions=target,
-    ).localCheckpoint(eager=True)
+    idx = barrier(
+        widen(
+            corpus.select(
+                F.col(id_col).alias("_cid"), fp.alias("_cfp"), sh.alias("_csh")
+            ),
+            target_partitions=target,
+        )
+    )
     try:
         idx.select("_cid", "_csh").write.mode("overwrite").parquet(
             _os.path.join(out_dir, "docs")
@@ -1106,12 +1066,11 @@ def _probe_corpus_index(
     # column rides the exact-pass survivors, so the survivors frame and the
     # probe-side shingle index land in a single materialization job and the
     # shingles compute once.
-    combined = (
+    combined = barrier(
         batch.withColumn("_fp", fp)
         .join(c_fps, "_fp", "left_anti")
         .drop("_fp")
         .withColumn("_bsh", sh)
-        .localCheckpoint(eager=True)
     )
     survivors = combined.drop("_bsh")
     b_idx = combined.select(F.col(id_col).alias("_bid"), "_bsh")
@@ -1490,12 +1449,14 @@ def build_streaming_index_base(
         corpus.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
     )
     artifacts.begin_build(out_dir)
-    idx = widen(
-        corpus.select(
-            F.col(id_col).alias("_cid"), fp.alias("_cfp"), sh.alias("_csh")
-        ),
-        target_partitions=target,
-    ).localCheckpoint(eager=True)
+    idx = barrier(
+        widen(
+            corpus.select(
+                F.col(id_col).alias("_cid"), fp.alias("_cfp"), sh.alias("_csh")
+            ),
+            target_partitions=target,
+        )
+    )
     try:
         _write_index_segment(idx, out_dir, "base", bands, rows_per_band)
     finally:
@@ -1593,13 +1554,12 @@ def index_maintenance_handler(
         # r12: the probe already computed (and checkpointed) the
         # survivors' shingle sets — reuse them instead of re-tokenizing
         # and re-shingling the same rows for the segment write.
-        idx = (
+        idx = barrier(
             survivors.select(
                 F.col(id_col).alias("_cid"),
                 F.sha2(F.col(text_col), 256).alias("_cfp"),
                 F.col("_kept_sh").alias("_csh"),
             )
-            .localCheckpoint(eager=True)
         )
         try:
             _write_index_segment(idx, index_dir, own, bands, rows_per_band)

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from irio_mapreduce_spark.llm.dedup import widen
+from irio_mapreduce_spark.operators.barrier import barrier
 
 
 def as_double(vec_col: Column) -> Column:
@@ -437,11 +438,13 @@ def dedup_embedding_cosine(
     # LSH bucketing pass) and the corpus scan replay per side. Checkpointing
     # BEFORE the explode keeps the barrier at one row per vector — the
     # persisted-LSH-index shape (fingerprints, not payload fan-out).
-    sig = widen(df).select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        keys.alias("_keys"),
-    ).localCheckpoint(eager=True)
+    sig = barrier(
+        widen(df).select(
+            F.col(id_col).alias("_id"),
+            F.col(vec_col).alias("_v"),
+            keys.alias("_keys"),
+        )
+    )
     banded = sig.select(
         "_id",
         "_v",
@@ -530,7 +533,14 @@ def semdedup(
     )
     # argmax(cs) with min-cid tie-break as max(struct(cs, -cid)): one
     # partial-aggregable reduction, no window shuffle of k rows per doc.
-    assign = (
+    # Materialize the assignment table ONCE (eager barrier): it feeds
+    # BOTH sides of the within-cluster pair join AND the final
+    # keep/drop join — three references that would each replay the
+    # broadcast×anchors scoring pass (k interpreted dot products per
+    # corpus row, the operator's dominant cost). One row per input
+    # vector — the SemDeDup "cluster assignment" artifact a production
+    # run would persist anyway.
+    assign = barrier(
         scored.groupBy("_id")
         .agg(
             F.max(F.struct(F.col("_cs"), (-F.col("_acid")).alias("_nc"))).alias("_m"),
@@ -544,14 +554,6 @@ def semdedup(
             (-F.col("_m._nc")).alias("_cid"),
             F.col("_m._cs").alias("_cent"),
         )
-        # Materialize the assignment table ONCE (eager barrier): it feeds
-        # BOTH sides of the within-cluster pair join AND the final
-        # keep/drop join — three references that would each replay the
-        # broadcast×anchors scoring pass (k interpreted dot products per
-        # corpus row, the operator's dominant cost). One row per input
-        # vector — the SemDeDup "cluster assignment" artifact a production
-        # run would persist anyway.
-        .localCheckpoint(eager=True)
     )
     left = assign.select(
         F.col("_id").alias("_id1"),

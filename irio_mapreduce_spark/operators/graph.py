@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from irio_mapreduce_spark.operators.barrier import barrier
+
 #: Fixed-point scale for rank values: 1.0 of rank mass == 10^12 units.
 #: Large enough that per-edge floor-truncation (≤1 unit per contribution)
 #: is negligible, small enough that 100 * sum(ranks) stays far inside
@@ -111,23 +113,16 @@ def pagerank(
     # references edges and degrees, and without a barrier Catalyst replays
     # the full edge-build lineage per round — measured 7.3 s -> ~3 s on the
     # catalog entry (3 rounds over a join-derived edge list), and the plan
-    # shrinks from ~66 exchanges to the per-round Pregel pair. Same
-    # discipline as llm.dedup's iterative builders; swap for reliable
-    # checkpointing on long cluster jobs.
-    e = edges.select(src.alias("_src"), dst.alias("_dst")).localCheckpoint(
-        eager=True
-    )
-    deg = e.groupBy("_src").agg(F.count("*").alias("_outdeg")).localCheckpoint(
-        eager=True
-    )
+    # shrinks from ~66 exchanges to the per-round Pregel pair.
+    e = barrier(edges.select(src.alias("_src"), dst.alias("_dst")))
+    deg = barrier(e.groupBy("_src").agg(F.count("*").alias("_outdeg")))
     if dangling == "redistribute":
         # Arbitrary edge lists: the universe includes pure sinks (nodes
         # that only ever appear as _dst), which hold rank but emit none.
-        nodes = (
+        nodes = barrier(
             e.select(F.col("_src").alias("_node"))
             .union(e.select(F.col("_dst").alias("_node")))
             .distinct()
-            .localCheckpoint(eager=True)
         )
     else:
         nodes = deg.select(F.col("_src").alias("_node"))
@@ -143,10 +138,9 @@ def pagerank(
             .distinct()
             .join(nodes, "_node", "left_semi")
         )
-        nodes = (
+        nodes = barrier(
             nodes.join(s.withColumn("_in_s", F.lit(1)), "_node", "left")
             .select("_node", F.coalesce("_in_s", F.lit(0)).alias("_in_s"))
-            .localCheckpoint(eager=True)
         )
         n_df = nodes.agg(F.sum("_in_s").alias("_n"))
         init = f"CASE WHEN _in_s = 1 THEN {init} ELSE 0L END"
@@ -154,19 +148,12 @@ def pagerank(
     ranks = nodes.join(F.broadcast(n_df)).select(
         "_node", F.expr(init).alias("_ri")
     )
-    from irio_mapreduce_spark.llm.dedup import free_checkpoint
-
     prev_ckpt = None
     for _ in range(iterations):
         if dangling == "redistribute":
             # The round reads `ranks` twice (contrib AND the dangling
-            # aggregate); materialize it once per round so the lineage
-            # stays linear instead of doubling per iteration, and free
-            # the superseded round's blocks immediately.
-            ranks = ranks.localCheckpoint(eager=True)
-            if prev_ckpt is not None:
-                free_checkpoint(prev_ckpt)
-            prev_ckpt = ranks
+            # aggregate), so only this mode needs a per-round barrier.
+            ranks = prev_ckpt = barrier(ranks, supersedes=prev_ckpt)
         contrib = (
             e.join(ranks, e["_src"] == ranks["_node"])
             .join(deg, "_src")
@@ -351,9 +338,7 @@ def _frontier_relax(
     """
     if rounds < 0:
         raise ValueError(f"rounds must be >= 0, got {rounds}")
-    from irio_mapreduce_spark.llm.dedup import free_checkpoint
-
-    e = e.localCheckpoint(eager=True)
+    e = barrier(e)
     on = [*keys, "_node"]
     state = init.withColumn("_imp", F.lit(True))
     for r in range(rounds):
@@ -363,7 +348,7 @@ def _frontier_relax(
             .groupBy(*keys, F.col("_dst").alias("_node"))
             .agg(F.min(F.col("_dist") + F.col("_w")).alias("_cand"))
         )
-        nxt = (
+        state = barrier(
             state.drop("_imp")
             .join(cand, on, "full")
             .select(
@@ -373,12 +358,10 @@ def _frontier_relax(
                 F.coalesce(
                     F.col("_cand") < F.col("_dist"), F.col("_dist").isNull()
                 ).alias("_imp"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            # round 0's state is the caller's init, not a checkpoint
+            supersedes=state if r else None,
         )
-        if r:  # round 0's state is the caller's init, not a checkpoint
-            free_checkpoint(state)
-        state = nxt
     return state.drop("_imp")
 
 
@@ -495,27 +478,23 @@ def label_propagation(
     Round shape = the Pregel pair: one join keyed on the edge source
     (neighbor labels), one aggregation on (node, label) for the votes,
     one per-node window for the argmax, then a left join back onto the
-    node universe so isolated nodes keep their labels. Per-round
-    ``localCheckpoint`` keeps the lineage linear (each round reads the
-    previous labels twice: votes + carry-forward), mirroring
-    ``pagerank``'s redistribute mode. ``iterations`` is a small fixed
-    constant by contract; communities typically stabilize in a handful
-    of rounds on short-diameter graphs.
+    node universe so isolated nodes keep their labels. Each round's labels
+    go behind a barrier because the round reads them twice (votes +
+    carry-forward), mirroring ``pagerank``'s redistribute mode.
+    ``iterations`` is a small fixed constant by contract; communities
+    typically stabilize in a handful of rounds on short-diameter graphs.
     """
     from pyspark.sql.window import Window
 
-    from irio_mapreduce_spark.llm.dedup import free_checkpoint
-
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    e = edges.select(
-        F.col(src_col).alias("_src"), F.col(dst_col).alias("_dst")
-    ).localCheckpoint(eager=True)
-    nodes = (
+    e = barrier(
+        edges.select(F.col(src_col).alias("_src"), F.col(dst_col).alias("_dst"))
+    )
+    nodes = barrier(
         e.select(F.col("_src").alias("_node"))
         .union(e.select(F.col("_dst").alias("_node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     labels = nodes.select("_node", F.col("_node").alias("_lab"))
     prev_ckpt = None
@@ -523,10 +502,7 @@ def label_propagation(
         F.col("_c").desc(), F.col("_vlab").asc()
     )
     for _ in range(iterations):
-        labels = labels.localCheckpoint(eager=True)
-        if prev_ckpt is not None:
-            free_checkpoint(prev_ckpt)
-        prev_ckpt = labels
+        labels = prev_ckpt = barrier(labels, supersedes=prev_ckpt)
         votes = (
             e.join(labels, e["_dst"] == labels["_node"])
             .groupBy(
@@ -582,14 +558,11 @@ def kcore_peel(
     if k < 1 or rounds < 1:
         raise ValueError(f"need k >= 1 and rounds >= 1, got k={k}, rounds={rounds}")
     a, b = F.col(src_col), F.col(dst_col)
-    cur = (
+    cur = barrier(
         edges.select(F.least(a, b).alias("_a"), F.greatest(a, b).alias("_b"))
         .filter(F.col("_a") != F.col("_b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    from irio_mapreduce_spark.llm.dedup import free_checkpoint
-
     deg = None
     for _ in range(rounds):
         deg = (
@@ -599,13 +572,11 @@ def kcore_peel(
             .agg(F.count("*").alias("_d"))
         )
         keep = deg.filter(F.col("_d") >= k).select("_n")
-        nxt = (
+        cur = barrier(
             cur.join(keep, cur["_a"] == keep["_n"], "left_semi")
-            .join(keep, F.col("_b") == keep["_n"], "left_semi")
-            .localCheckpoint(eager=True)
+            .join(keep, F.col("_b") == keep["_n"], "left_semi"),
+            supersedes=cur,
         )
-        free_checkpoint(cur)
-        cur = nxt
     final_deg = (
         cur.select(F.col("_a").alias("_n"))
         .unionAll(cur.select(F.col("_b").alias("_n")))
@@ -629,7 +600,7 @@ def truss_peel_rounds(
     every edge supported by fewer than k−2 triangles", recomputing
     per-edge triangle support each round over the canonicalized
     undirected edge list. Returns the edge frames for rounds 0..rounds
-    (round 0 = the input, canonicalized), each ``localCheckpoint``-ed so
+    (round 0 = the input, canonicalized), each behind a barrier so
     callers can consume all of them without lineage blow-up — the
     trajectory IS the result for audit-style consumers.
 
@@ -652,11 +623,10 @@ def truss_peel_rounds(
     if k < 3 or rounds < 1:
         raise ValueError(f"need k >= 3 and rounds >= 1, got k={k}, rounds={rounds}")
     a, b = F.col(src_col), F.col(dst_col)
-    cur = (
+    cur = barrier(
         edges.select(F.least(a, b).alias("_a"), F.greatest(a, b).alias("_b"))
         .filter(F.col("_a") != F.col("_b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     out = [cur]
     for _ in range(rounds):
@@ -682,11 +652,10 @@ def truss_peel_rounds(
             .groupBy("_a", "_b")
             .agg(F.count("*").alias("_tri"))
         )
-        cur = (
+        cur = barrier(
             cur.join(sup, ["_a", "_b"], "left")
             .filter(F.coalesce(F.col("_tri"), F.lit(0)) >= k - 2)
             .select("_a", "_b")
-            .localCheckpoint(eager=True)
         )
         out.append(cur)
     return out

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from irio_mapreduce_spark.operators.barrier import barrier
+
 
 def top_k(df: DataFrame, order_by: list[Column], k: int) -> DataFrame:
     """Global top-k (TakeOrderedAndProject — no global sort)."""
@@ -73,11 +75,10 @@ def global_rank(
     import pandas as pd
 
     parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    laid = (
+    laid = barrier(
         df.repartitionByRange(parts, *[F.col(c) for c in order_cols])
         .sortWithinPartitions(*[F.col(c) for c in order_cols])
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
     )
     counts = {
         r._pid: r.n

@@ -37,6 +37,7 @@ from irio_mapreduce_spark.llm.similarity import (
     dedup_embedding_cosine as dedup_embedding_cosine_op,
 )
 from irio_mapreduce_spark.llm.similarity import semdedup as semdedup_op
+from irio_mapreduce_spark.operators.barrier import barrier
 from irio_mapreduce_spark.queries.catalog import register
 
 # Shared DuckDB fragment: distinct word trigrams per document, matching
@@ -1104,16 +1105,14 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     #    (self-join input; lazy measured ≈ eager-barrier cost here and
     #    a localCheckpoint never pins a CacheManager entry the way the
     #    old persist() did — r12 ADVICE.md).
-    sh = (
-        widen(docs)
-        .select("doc_id", shingles(tokens(F.col("text")), 3).alias("s"))
-        .localCheckpoint(eager=True)
+    sh = barrier(
+        widen(docs).select("doc_id", shingles(tokens(F.col("text")), 3).alias("s"))
     )
     ex = sh.select("doc_id", F.explode("s").alias("tk"))
     dfreq = ex.groupBy("tk").agg(F.count("*").cast("long").alias("df"))
     w_pos = Window.partitionBy("doc_id").orderBy("df", "tk")
     w_doc = Window.partitionBy("doc_id")
-    pref = (
+    pref = barrier(
         ex.join(dfreq, "tk")
         .select(
             "doc_id",
@@ -1127,8 +1126,8 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             - F.expr("(3 * n + 4) div 5").cast("long")
             + 1
         )
-        .select("doc_id", "tk", "pos", "n")
-        .localCheckpoint(eager=False)
+        .select("doc_id", "tk", "pos", "n"),
+        eager=False,
     )
     a = pref.select(
         F.col("doc_id").alias("id1"),

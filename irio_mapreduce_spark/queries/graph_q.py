@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from irio_mapreduce_spark.io import read_table
+from irio_mapreduce_spark.operators.barrier import barrier
 from irio_mapreduce_spark.operators.graph import (
     PAGERANK_SCALE,
     bfs_hops,
@@ -628,7 +629,7 @@ def graph_hits_hubs_authorities(
     any tested SF), so no division, no float, no per-round norm
     broadcast; rankings are normalization-invariant. Top-10 per role
     with (score DESC, node) ties — deterministic."""
-    edges = _purchase_pairs(spark, sf_dir).localCheckpoint(eager=True)
+    edges = barrier(_purchase_pairs(spark, sf_dir))
     a1 = edges.groupBy("s").agg(
         (F.count("*").cast("long") * F.lit(1000000)).alias("a")
     )
@@ -732,13 +733,12 @@ def _cosupply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     only then dropped ~96% of the product against the filtered orders;
     inner⋈ on the unique o_orderkey commutes with the self-join, and the
     semi-join form cannot duplicate rows regardless of key multiplicity.
-    (b) The distinct edge list is eagerly localCheckpoint-ed: every caller
+    (b) The distinct edge list goes behind an eager barrier: every caller
     references it several times in one plan (adjacency mirror + degree +
     wedge sides + anti-join), and without the barrier Catalyst replays
     the join-distinct subtree per reference (5x in the link-prediction
     entry). The edge list is orders-of-magnitude smaller than lineitem —
-    materializing it once is the guide's truncate-the-plan move; swap for
-    reliable checkpoint() on long cluster jobs."""
+    materializing it once is the guide's truncate-the-plan move."""
     oq = (
         read_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate").between("1995-01-01", "1995-03-31"))
@@ -751,7 +751,7 @@ def _cosupply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = li.alias("a")
     b = li.alias("b")
-    return (
+    return barrier(
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -762,7 +762,6 @@ def _cosupply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.l_suppkey").alias("s2"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
 
@@ -958,7 +957,7 @@ def graph_modularity_components(
     an exact BIGINT per component and Q = Σ q_term / 4m² — so the score
     is integer-exact, the fixed-point discipline of the PageRank family.
     Components come from ``llm.dedup.connected_components`` (min-label
-    propagation, per-round localCheckpoint); per-component edge and
+    propagation, a barrier per round); per-component edge and
     degree masses are two co-partitioned joins against the label table.
     The oracle recomputes components with a recursive-CTE reachability
     closure — a genuinely different algorithm, so the hash match pins
@@ -1117,40 +1116,32 @@ def graph_local_max_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     round removes a constant expected fraction, so rounds are
     O(log n) — each of the 4 rounds here is one windowed rank + one
     anti-join, frontier-only, with the shrinking edge frame
-    localCheckpoint-ed per round exactly like the BFS/closeness loops).
+    behind a barrier per round exactly like the BFS/closeness loops).
     The matching property itself (no vertex twice) plus greedy local
     optimality are what matchings are FOR — dedup pairing, resource
     assignment, one-to-one entity linking at scale. Output: matched
     (part, supplier, weight, round) — the hash pins every round's
     frontier, not just the final cardinality."""
-    edges = (
+    edges = barrier(
         read_table(spark, sf_dir, "lineitem")
-        .groupBy(
-            F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s")
-        )
+        .groupBy(F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s"))
         .agg(F.count("*").cast("long").alias("w"))
-        .localCheckpoint(eager=True)
     )
     matched_rounds = []
     e = edges
     for rnd in range(1, 5):
         wp = Window.partitionBy("p").orderBy(F.col("w").desc(), "s")
         ws = Window.partitionBy("s").orderBy(F.col("w").desc(), "p")
-        m = (
+        m = barrier(
             e.withColumn("rp", F.row_number().over(wp))
             .withColumn("rs", F.row_number().over(ws))
             .filter((F.col("rp") == 1) & (F.col("rs") == 1))
             .select("p", "s", "w", F.lit(rnd).cast("long").alias("rnd"))
-            .localCheckpoint(eager=True)
         )
         matched_rounds.append(m)
         mp = m.select("p").distinct()
         ms = m.select("s").distinct()
-        e = (
-            e.join(mp, "p", "left_anti")
-            .join(ms, "s", "left_anti")
-            .localCheckpoint(eager=True)
-        )
+        e = barrier(e.join(mp, "p", "left_anti").join(ms, "s", "left_anti"))
     out = matched_rounds[0]
     for m in matched_rounds[1:]:
         out = out.unionAll(m)
@@ -1216,13 +1207,13 @@ def graph_functional_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ends on a cycle, and covers it). Output per SCC: (cycle_id,
     cycle_len, basin_size) — exact integers.
 
-    Scale: N rows per table, K ≈ log₂N self-joins, each localCheckpointed
+    Scale: N rows per table, K ≈ log₂N self-joins, each behind a barrier
     (the iterative-loop lineage discipline); the naive walk is O(N)
     ROUNDS — the oracle uses exactly that O(N²) recursive-CTE walk,
     feasible only because the oracle graph is bounded; at 10⁹ nodes only
     the doubling form survives. The one driver-side scalar is N itself
     (a bounded 1-value collect, the documented artifact pattern)."""
-    users = (
+    users = barrier(
         read_table(spark, sf_dir, "events")
         .select("user_id")
         .distinct()
@@ -1233,29 +1224,28 @@ def graph_functional_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("u")
         )
-        .localCheckpoint(eager=True)
     )
     n = users.count()
     a, c = 2 * (n // 3) + 1, 17 % n
     # T_0 / M_0: one jump; min over the singleton path {u}
-    t = users.select(
-        "u",
-        ((F.col("u") * a + c) % n).alias("t"),
-        F.col("u").alias("m"),
-    ).localCheckpoint(eager=True)
+    t = barrier(
+        users.select(
+            "u",
+            ((F.col("u") * a + c) % n).alias("t"),
+            F.col("u").alias("m"),
+        )
+    )
     k = 0
     while (1 << k) < n:
         nxt = t.select(
             F.col("u").alias("u2"), F.col("t").alias("t2"), F.col("m").alias("m2")
         )
-        t = (
-            t.join(nxt, t.t == nxt.u2)
-            .select(
+        t = barrier(
+            t.join(nxt, t.t == nxt.u2).select(
                 "u",
                 F.col("t2").alias("t"),
                 F.least("m", "m2").alias("m"),
             )
-            .localCheckpoint(eager=True)
         )
         k += 1
     # F(u) = T_K(u); cycle_id(u) = M_K(F(u)) (min over >= one full lap)
@@ -1353,7 +1343,7 @@ def graph_ktruss_peel_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     disjoint by construction — the truss computation is embarrassingly
     parallel across nations, the partition-key design a 100 TB tenant
     graph wants); 3 synchronous peel rounds via
-    ``operators.graph.truss_peel_rounds``, which localCheckpoints every
+    ``operators.graph.truss_peel_rounds``, which puts a barrier after every
     round so the emitted TRAJECTORY (nation, round, n_edges, n_nodes
     for rounds 0..3) reads all four frames without lineage blow-up. The
     quarter filter is a pushed-down orders predicate; the fixed round

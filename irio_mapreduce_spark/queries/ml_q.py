@@ -18,6 +18,7 @@ from irio_mapreduce_spark.llm.clustering import (
     knn_classify,
     scaled_vec,
 )
+from irio_mapreduce_spark.operators.barrier import barrier
 from irio_mapreduce_spark.queries.catalog import register
 
 _K = 8
@@ -1369,11 +1370,10 @@ def ml_adaboost_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(0))
         .alias("pos"),
     )
-    state = (
+    state = barrier(  # the ONE big pass; rounds run tiny
         pts.groupBy("q", "d", "pos")
         .agg(F.count("*").cast(dec).alias("cnt"))
         .withColumn("w", F.lit(1).cast(dec))
-        .localCheckpoint(eager=True)  # the ONE big pass; rounds run tiny
     )
     out: list[tuple] = []
     for rnd in (1, 2, 3):
@@ -1450,9 +1450,7 @@ def ml_adaboost_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
                 pred != F.col("pos"),
                 F.lit(str(w_all - w_mis)).cast(dec),
             ).otherwise(F.lit(str(w_mis)).cast(dec))
-            state = state.withColumn("w", F.col("w") * mult).localCheckpoint(
-                eager=True
-            )
+            state = barrier(state.withColumn("w", F.col("w") * mult))
     return spark.createDataFrame(
         out,
         "round long, feat string, threshold long, left_positive long, "
@@ -1535,10 +1533,10 @@ def ml_kmeans_parallel_init(spark: SparkSession, sf_dir: str) -> DataFrame:
     from irio_mapreduce_spark.llm.clustering import _sq_dist
 
     dec = "decimal(38,0)"
-    pts = (
-        read_table(spark, sf_dir, "embeddings")
-        .select("vec_id", scaled_vec(F.col("embedding")).alias("s"))
-        .localCheckpoint(eager=True)
+    pts = barrier(
+        read_table(spark, sf_dir, "embeddings").select(
+            "vec_id", scaled_vec(F.col("embedding")).alias("s")
+        )
     )
 
     def h(r: int) -> F.Column:
@@ -1556,7 +1554,7 @@ def ml_kmeans_parallel_init(spark: SparkSession, sf_dir: str) -> DataFrame:
             10,
         ).cast("long")
 
-    cands = (
+    cands = barrier(
         pts.orderBy(h(0).asc(), F.col("vec_id").asc())
         .limit(1)
         .select(
@@ -1564,7 +1562,6 @@ def ml_kmeans_parallel_init(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s").alias("c"),
             F.lit(0).alias("rnd"),
         )
-        .localCheckpoint(eager=True)
     )
     for r in (1, 2):
         d2 = (
@@ -1579,13 +1576,15 @@ def ml_kmeans_parallel_init(spark: SparkSession, sf_dir: str) -> DataFrame:
             * F.col("d2").cast(dec)
             * F.lit(4294967296).cast(dec)
         ).select("vec_id")
-        cands = cands.unionByName(
-            sel.join(pts, "vec_id").select(
-                F.col("vec_id").alias("cid"),
-                F.col("s").alias("c"),
-                F.lit(r).alias("rnd"),
+        cands = barrier(
+            cands.unionByName(
+                sel.join(pts, "vec_id").select(
+                    F.col("vec_id").alias("cid"),
+                    F.col("s").alias("c"),
+                    F.lit(r).alias("rnd"),
+                )
             )
-        ).localCheckpoint(eager=True)
+        )
     w = Window.partitionBy("vec_id").orderBy(
         F.col("_d").asc(), F.col("cid").asc()
     )
@@ -1848,9 +1847,9 @@ def ml_gbt_residual_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("l_discount") * 100 + 0.5).cast("long").alias("y"),
         )
     )
-    best1 = _gbt_best_split(
-        pts.select(F.col("q"), F.col("y").alias("_y")), "q"
-    ).localCheckpoint(eager=True)
+    best1 = barrier(
+        _gbt_best_split(pts.select(F.col("q"), F.col("y").alias("_y")), "q")
+    )
     b = F.broadcast(
         best1.select(
             F.col("t").alias("_t"),

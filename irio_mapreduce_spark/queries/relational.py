@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from irio_mapreduce_spark.io import load_tables, read_table
 from irio_mapreduce_spark.operators.aggregates import salted_agg
+from irio_mapreduce_spark.operators.barrier import barrier
 from irio_mapreduce_spark.operators.joins import (
     asof_join,
     asof_join_bucketed,
@@ -21,6 +22,7 @@ from irio_mapreduce_spark.operators.joins import (
 )
 from irio_mapreduce_spark.operators.topk import top_k_per_group
 from irio_mapreduce_spark.queries.catalog import register
+from irio_mapreduce_spark.session import session_memo
 
 # ---------------------------------------------------------------------------
 # Mergeable sketches (registered first: see queries/__init__.py order note)
@@ -1718,18 +1720,16 @@ def agg_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(F.col("o_orderdate")).alias("ts_us"),
         F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("cents"),
     )
-    # Eager checkpoint (not persist): the cutoff scalar, the row count and
+    # Eager barrier (not persist): the cutoff scalar, the row count and
     # all three stacked branches read the materialized rollup; checkpoint
     # blocks are ContextCleaner-freed once the frame is unreachable,
     # where persist() would pin a CacheManager entry for the session.
-    rfm0 = (
-        o.groupBy("o_custkey")
-        .agg(
+    rfm0 = barrier(
+        o.groupBy("o_custkey").agg(
             F.max("ts_us").alias("last_us"),
             F.count("*").cast("long").alias("freq"),
             F.sum("cents").cast("long").alias("mon"),
         )
-        .localCheckpoint(eager=True)
     )
     # global max(ts) == max of the per-customer maxes, and the ranking
     # universe size == the rollup's row count — both derived from the
@@ -4573,8 +4573,6 @@ def stats_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         table_path(sf_dir, "lineitem"),
     )
-    from irio_mapreduce_spark.queries.stats_q import _memo_exprs
-
     def _build_aggs():
         aggs = [
             F.count("*").cast("long").alias("n"),
@@ -4604,8 +4602,8 @@ def stats_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r13: the 40 md5 conditional aggregates are ~1.4 s of py4j
     # construction per call — input-independent Column trees, memoized
-    # per context (stats_q._memo_exprs, the BH treatment).
-    one = pts.agg(*_memo_exprs("perm_aggs", _build_aggs))
+    # per context (session_memo, the BH treatment).
+    one = pts.agg(*session_memo(("perm_aggs",), _build_aggs))
     stack_args = ", ".join(
         f"CAST({b} AS BIGINT), n1_{b}, s1_{b}" for b in range(20)
     )

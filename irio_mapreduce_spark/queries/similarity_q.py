@@ -22,6 +22,7 @@ from irio_mapreduce_spark.llm.similarity import (
     rp_lsh_multiprobe_topk,
     rp_lsh_topk,
 )
+from irio_mapreduce_spark.operators.barrier import barrier
 from irio_mapreduce_spark.queries.catalog import register
 
 _QUERY_VEC_ID = 0  # the fixed query point: embedding of vec_id 0
@@ -607,11 +608,10 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     w = Window.partitionBy("qid").orderBy(F.col("rel_u").desc(), "id")
-    cand = (
+    cand = barrier(
         base.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= 10)
         .drop("rk")
-        .localCheckpoint(eager=True)
     )
     a, b = cand.alias("a"), cand.alias("b")
     pairs = (

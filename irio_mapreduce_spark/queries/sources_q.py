@@ -30,7 +30,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from irio_mapreduce_spark.io import read_table
+from irio_mapreduce_spark.operators.barrier import barrier
 from irio_mapreduce_spark.queries.catalog import register
+from irio_mapreduce_spark.session import session_memo
 
 
 def _scratch(sf_dir: str, leaf: str) -> str:
@@ -284,17 +286,19 @@ def source_malformed_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SPLIT-WRITE immediately (good rows -> table, bad rows ->
     # badRecordsPath-style quarantine dir) instead of caching the input.
     back = back.cache()
-    result = back.agg(
-        F.count(F.when(F.col("_corrupt_record").isNull(), 1)).cast("long").alias(
-            "n_good"
-        ),
-        F.count(F.when(F.col("_corrupt_record").isNotNull(), 1)).cast("long").alias(
-            "n_bad"
-        ),
-        F.sum(F.when(F.col("_corrupt_record").isNull(), F.col("s_suppkey")))
-        .cast("long")
-        .alias("good_key_sum"),
-    ).localCheckpoint(eager=True)
+    result = barrier(
+        back.agg(
+            F.count(F.when(F.col("_corrupt_record").isNull(), 1))
+            .cast("long")
+            .alias("n_good"),
+            F.count(F.when(F.col("_corrupt_record").isNotNull(), 1))
+            .cast("long")
+            .alias("n_bad"),
+            F.sum(F.when(F.col("_corrupt_record").isNull(), F.col("s_suppkey")))
+            .cast("long")
+            .alias("good_key_sum"),
+        )
+    )
     # the aggregate is materialized above, so the cached CSV can be
     # released immediately instead of pinning executor storage until GC
     back.unpersist()
@@ -692,30 +696,29 @@ def source_malformed_json(spark: SparkSession, sf_dir: str) -> DataFrame:
         .json(path)
     )
     back = back.cache()
-    result = back.agg(
-        F.count(F.when(F.col("_corrupt_record").isNull(), 1)).cast("long").alias(
-            "n_good"
-        ),
-        F.count(F.when(F.col("_corrupt_record").isNotNull(), 1)).cast("long").alias(
-            "n_bad"
-        ),
-        F.sum(F.when(F.col("_corrupt_record").isNull(), F.col("s_nationkey")))
-        .cast("long")
-        .alias("good_nation_sum"),
-    ).localCheckpoint(eager=True)
+    result = barrier(
+        back.agg(
+            F.count(F.when(F.col("_corrupt_record").isNull(), 1))
+            .cast("long")
+            .alias("n_good"),
+            F.count(F.when(F.col("_corrupt_record").isNotNull(), 1))
+            .cast("long")
+            .alias("n_bad"),
+            F.sum(F.when(F.col("_corrupt_record").isNull(), F.col("s_nationkey")))
+            .cast("long")
+            .alias("good_nation_sum"),
+        )
+    )
     back.unpersist()
     return result
-
-
-_PART_PRUNE_DIRS: dict[tuple[str, str], str] = {}
 
 
 def _events_by_day_dir(spark: SparkSession, sf_dir: str) -> str:
     """``events`` rewritten ``partitionBy(day)`` once per session — the
     shared fixture of the two partition-pruning entries (static range +
     dynamic join-driven)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PART_PRUNE_DIRS:
+
+    def build() -> str:
         d = tempfile.mkdtemp(prefix="part_prune_") + "/events_by_day"
         (
             read_table(spark, sf_dir, "events")
@@ -724,8 +727,9 @@ def _events_by_day_dir(spark: SparkSession, sf_dir: str) -> str:
             .mode("overwrite")
             .parquet(d)
         )
-        _PART_PRUNE_DIRS[key] = d
-    return _PART_PRUNE_DIRS[key]
+        return d
+
+    return session_memo(("events_by_day", sf_dir), build)
 
 
 @register(
@@ -839,9 +843,6 @@ def join_dynamic_partition_pruning(
     return out
 
 
-_RG_PRUNE_DIRS: dict[tuple[str, str], str] = {}
-
-
 @register(
     "source_rowgroup_stats_pruning",
     oracle="""
@@ -880,8 +881,7 @@ def source_rowgroup_stats_pruning(
     import os
     import tempfile
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _RG_PRUNE_DIRS:
+    def build_copies() -> str:
         d = tempfile.mkdtemp(prefix="rg_prune_")
         li = read_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_quantity"
@@ -899,8 +899,9 @@ def source_rowgroup_stats_pruning(
             .mode("overwrite")
             .parquet(os.path.join(d, "unsorted"))
         )
-        _RG_PRUNE_DIRS[key] = d
-    d = _RG_PRUNE_DIRS[key]
+        return d
+
+    d = session_memo(("rowgroup_copies", sf_dir), build_copies)
     aqe_key = "spark.sql.adaptive.enabled"
     saved = spark.conf.get(aqe_key)
     spark.conf.set(aqe_key, "false")
@@ -1480,9 +1481,6 @@ def source_parquet_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_NESTED_PRUNE_DIRS: dict[tuple[str, str], str] = {}
-
-
 @register(
     "source_parquet_nested_pruning",
     oracle="""
@@ -1526,8 +1524,7 @@ def source_parquet_nested_pruning(
     hence cust_sum = Σ(3c+1) and cents doubled."""
     import os
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _NESTED_PRUNE_DIRS:
+    def build_nested() -> str:
         d = _scratch(sf_dir, "nested_orders")
         src = read_table(spark, sf_dir, "orders").select(
             F.col("o_orderkey"),
@@ -1551,8 +1548,9 @@ def source_parquet_nested_pruning(
             ).alias("items"),
         )
         src.write.mode("overwrite").parquet(d)
-        _NESTED_PRUNE_DIRS[key] = d
-    nested = spark.read.parquet(_NESTED_PRUNE_DIRS[key])
+        return d
+
+    nested = spark.read.parquet(session_memo(("nested_orders", sf_dir), build_nested))
 
     def read_schema_of(df: DataFrame) -> str:
         plan = df._jdf.queryExecution().executedPlan().toString()

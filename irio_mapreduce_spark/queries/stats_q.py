@@ -36,31 +36,15 @@ from pyspark.sql import functions as F
 
 from irio_mapreduce_spark.io import read_table
 from irio_mapreduce_spark.queries.catalog import register
+from irio_mapreduce_spark.session import session_memo
 
 # r13 (guide §1.2 "know where time goes"): the md5-derandomized entries
 # build hundreds of Column sub-expressions through py4j — phase-splitting
 # stats_benjamini_hochberg showed 2.6-3.5 s of pure DRIVER-side
 # construction per call vs ~1.5 s of execution. A Column is an immutable
 # expression tree resolved against whatever plan it is applied to, so the
-# input-independent trees are built ONCE per SparkContext incarnation and
-# reused — the same memo discipline (and context token) as
-# ``llm.dedup.banded_explode``. Executed plans are byte-identical.
-_EXPR_MEMO: dict = {}
-
-
-def _memo_exprs(name: str, builder):
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    ctx = (sc.applicationId, sc.startTime) if sc is not None else None
-    key = (ctx, name)
-    val = _EXPR_MEMO.get(key)
-    if val is None:
-        for k in [k for k in _EXPR_MEMO if k[0] != ctx]:
-            del _EXPR_MEMO[k]
-        val = builder()
-        _EXPR_MEMO[key] = val
-    return val
+# input-independent trees are built ONCE per SparkContext incarnation
+# (``session_memo``) and reused. Executed plans are byte-identical.
 
 
 def _nation_monthly_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -431,8 +415,8 @@ def stats_bootstrap_poisson(spark: SparkSession, sf_dir: str) -> DataFrame:
         return aggs
 
     # r13: ~1.5 s of py4j construction for the 40 threshold aggregates,
-    # memoized per context (see _memo_exprs).
-    one = pts.agg(*_memo_exprs("boot_aggs", _build_aggs))
+    # memoized per context.
+    one = pts.agg(*session_memo(("boot_aggs",), _build_aggs))
     stack_args = ", ".join(
         f"CAST({b} AS BIGINT), n_{b}, s_{b}" for b in range(20)
     )
@@ -734,8 +718,8 @@ def stats_benjamini_hochberg(spark: SparkSession, sf_dir: str) -> DataFrame:
         return aggs
 
     # ~2.6-3.5 s of py4j construction (48 md5 conditional aggregates)
-    # memoized per context — see _memo_exprs.
-    aggs = _memo_exprs("bh_aggs", _build_aggs)
+    # memoized per context.
+    aggs = session_memo(("bh_aggs",), _build_aggs)
     t = pts.groupBy("event_type").agg(*aggs)
     # k = 1 + Σ_b [ |Δ_b| ≥ |Δ_obs| ], compared by FULL cross-
     # multiplication in DECIMAL(38,0) (group sizes differ per universe).
@@ -766,7 +750,7 @@ def stats_benjamini_hochberg(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return obs, obs_w, uni
 
-    obs, obs_w, uni = _memo_exprs("bh_obs", _build_obs)
+    obs, obs_w, uni = session_memo(("bh_obs",), _build_obs)
     ex_u = t.select(
         "event_type", "n", "s", "n1_o", "s1_o", F.explode(uni).alias("u")
     )

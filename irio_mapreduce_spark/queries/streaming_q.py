@@ -16,7 +16,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from irio_mapreduce_spark.operators.barrier import barrier
 from irio_mapreduce_spark.queries.catalog import register
+from irio_mapreduce_spark.session import session_memo
 from irio_mapreduce_spark.streaming import (
     dedup_events,
     stream_stream_interval_join,
@@ -37,16 +39,13 @@ from irio_mapreduce_spark.streaming import (
 # One materialized replay per (session, sf_dir): the chunking is
 # deterministic (event_id % n_chunks), so every streaming entry can stream
 # the same directory — re-materializing per entry was 4 write jobs each.
-_REPLAY_DIRS: dict[tuple[str, str], str] = {}
-
-
 def _replay_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _REPLAY_DIRS:
-        _REPLAY_DIRS[key] = replay_chunks(
+    return session_memo(
+        ("replay", sf_dir),
+        lambda: replay_chunks(
             spark, sf_dir, tempfile.mkdtemp(prefix="stream_q_") + "/events", n_chunks=4
-        )
-    return _REPLAY_DIRS[key]
+        ),
+    )
 
 
 @contextlib.contextmanager
@@ -214,34 +213,28 @@ def _drain_stateful_totals(
 # the real user-id range.
 _SESSION_SENTINEL = 101 * 10**7
 
-_ORDERED_DIRS: dict[tuple[str, str], str] = {}
-
 # r12 (guide §1.3): seven entries each re-materialized their own
 # time-ordered replay (events scan + quantile chunking + write job,
 # ~2.3 s warm at sf0.1) only to then append entry-specific sentinel or
 # straggler files. The chunking is deterministic, so the BASE chunk files
-# are built once per (session, sf_dir, n_chunks) — same memo discipline as
-# _REPLAY_DIRS above — and copied (shutil.copy2 preserves the mtimes the
-# file source replays by) into a private per-entry directory the entry is
-# free to append to.
-_ORDERED_BASE_DIRS: dict[tuple[str, str, int], str] = {}
-
-
+# are built once per (session, sf_dir, n_chunks) and copied
+# (shutil.copy2 preserves the mtimes the file source replays by) into a
+# private per-entry directory the entry is free to append to.
 def _fresh_ordered_replay(
     spark: SparkSession, sf_dir: str, n_chunks: int, prefix: str
 ) -> str:
     import os
     import shutil
 
-    key = (spark.sparkContext.applicationId, sf_dir, n_chunks)
-    if key not in _ORDERED_BASE_DIRS:
-        _ORDERED_BASE_DIRS[key] = replay_time_ordered(
+    base = session_memo(
+        ("ordered_base", sf_dir, n_chunks),
+        lambda: replay_time_ordered(
             spark,
             sf_dir,
             tempfile.mkdtemp(prefix=f"stream_q_obase{n_chunks}_") + "/events",
             n_chunks=n_chunks,
-        )
-    base = _ORDERED_BASE_DIRS[key]
+        ),
+    )
     d = tempfile.mkdtemp(prefix=prefix) + "/events"
     os.makedirs(d)
     for f in os.listdir(base):
@@ -250,16 +243,16 @@ def _fresh_ordered_replay(
 
 
 def _ordered_replay_dir(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ORDERED_DIRS:
-        _ORDERED_DIRS[key] = replay_time_ordered(
+    return session_memo(
+        ("ordered_replay", sf_dir),
+        lambda: replay_time_ordered(
             spark,
             sf_dir,
             tempfile.mkdtemp(prefix="stream_q_ord_") + "/events",
             n_chunks=4,
             sentinel_user=_SESSION_SENTINEL,
-        )
-    return _ORDERED_DIRS[key]
+        ),
+    )
 
 
 @register(
@@ -448,15 +441,15 @@ def stream_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             read_events_stream(spark, d, max_files_per_trigger=2), out, ck
         )
     # Simulate the retried batch: re-run the final batch's idempotent
-    # write (same rows, same partition, overwrite). localCheckpoint first
-    # — overwriting a path that is also the read source is illegal.
+    # write (same rows, same partition, overwrite). Barrier first —
+    # overwriting a path that is also the read source is illegal.
     batches = sorted(
         int(p.split("=")[1])
         for p in _os.listdir(out)
         if p.startswith("_batch_id=")
     )
     last_dir = _os.path.join(out, f"_batch_id={batches[-1]}")
-    replay_rows = spark.read.parquet(last_dir).localCheckpoint(eager=True)
+    replay_rows = barrier(spark.read.parquet(last_dir))
     replay_rows.write.mode("overwrite").parquet(last_dir)
     return (
         spark.read.parquet(out)
@@ -1043,26 +1036,23 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-_NEAREST_DIRS: dict[tuple[str, str], str] = {}
-
-
 def _nearest_replay_dir(spark: SparkSession, sf_dir: str) -> str:
     """Time-ordered events replay with a TWO-TYPE far-future sentinel
     (one 'purchase', one 'click' row, negative ids): the nearest-as-of
     entry filters each join side to one type, and the watermark node on
     each side only sees post-filter rows — so flushing BOTH sides' state
     needs a sentinel that passes each side's filter."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _NEAREST_DIRS:
-        from irio_mapreduce_spark.io import read_table
+    from irio_mapreduce_spark.io import read_table
 
+    def build() -> str:
         d = _fresh_ordered_replay(spark, sf_dir, 4, "stream_q_near_")
         ev = read_table(spark, sf_dir, "events")
         sentinel_events(
             ev, _SESSION_SENTINEL, types=[(-1, "purchase"), (-2, "click")]
         ).coalesce(1).write.mode("append").parquet(d)
-        _NEAREST_DIRS[key] = d
-    return _NEAREST_DIRS[key]
+        return d
+
+    return session_memo(("nearest_replay", sf_dir), build)
 
 
 @register(

@@ -21,12 +21,17 @@ partitions default to the same N. At cluster scale the same builder is
 used with ``master`` unset (taken from spark-submit), AQE handles runtime
 partition coalescing and skew-join splitting, and shuffle partitions
 should be ~2-3x total executor cores.
+
+Per-session state (replay fixtures written once per context, py4j-built
+``Column`` trees) is kept in one memo, :func:`session_memo`.
 """
 
 from __future__ import annotations
 
 import os
+from collections import Counter
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
@@ -118,3 +123,39 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# (context token, name, *parts) -> value, for session_memo.
+_MEMO: dict[tuple, object] = {}
+# Lookups per memo name, so a run can show which fixtures it reused.
+_MEMO_HITS: Counter[str] = Counter()
+_MEMO_MISSES: Counter[str] = Counter()
+
+
+def _context_token() -> tuple[str, int] | None:
+    """``(applicationId, startTime)`` of the active SparkContext, or None.
+    Unique per context incarnation; ``id(sc)`` is not, since the allocator
+    may reuse it once a stopped context is collected."""
+    sc = SparkContext._active_spark_context
+    return (sc.applicationId, sc.startTime) if sc is not None else None
+
+
+def session_memo(key: tuple, build):
+    """The value ``build()`` returns, built once per ``key`` per SparkContext
+    incarnation and returned from the memo on later calls.
+
+    ``key[0]`` names the memo (hits and misses are counted per name in
+    ``_MEMO_HITS`` / ``_MEMO_MISSES``); the rest tells its entries apart
+    (``sf_dir``, chunk count, ...). Values may hold py4j references or
+    name files a context wrote, so no entry outlives its context: the first
+    miss under a new context drops every entry of the previous ones."""
+    ctx = _context_token()
+    full = (ctx, *key)
+    if full in _MEMO:
+        _MEMO_HITS[key[0]] += 1
+        return _MEMO[full]
+    _MEMO_MISSES[key[0]] += 1
+    for k in [k for k in _MEMO if k[0] != ctx]:
+        _MEMO.pop(k, None)
+    value = _MEMO[full] = build()
+    return value

@@ -41,6 +41,8 @@ import zipfile
 
 from pyspark.sql import SparkSession
 
+from irio_mapreduce_spark.session import session_memo
+
 # Public google-cloud-sdk install layouts; first hit wins.
 _CANDIDATE_ROOTS = (
     "/usr/lib/google-cloud-sdk/platform/google_appengine",
@@ -74,10 +76,6 @@ def ValidateProtobufRuntimeVersion(  # noqa: F811
             gen_domain, gen_major, gen_minor, gen_patch, gen_suffix, location
         )
 '''
-
-# applicationId -> zip path (or None when no runtime was found)
-_SHIPPED: dict[str, str | None] = {}
-
 
 def _find_runtime_root() -> str | None:
     for root in _CANDIDATE_ROOTS:
@@ -126,23 +124,23 @@ def ensure_protobuf(spark: SparkSession) -> bool:
     Returns True when the import works (already-present or vendored),
     False when no local runtime exists — callers keep their environment
     gate in that case. Never touches the network; memoized per
-    application so repeated streaming entries pay the zip once.
+    SparkContext so repeated streaming entries pay the zip once.
     """
+    return session_memo(("protobuf_vendor",), lambda: _vendor(spark))
+
+
+def _vendor(spark: SparkSession) -> bool:
     try:
         import google.protobuf  # noqa: F401
 
         return True
     except ImportError:
         pass
-    app_id = spark.sparkContext.applicationId
-    if app_id not in _SHIPPED:
-        root = _find_runtime_root()
-        _SHIPPED[app_id] = _build_zip(root) if root else None
-        if _SHIPPED[app_id]:
-            spark.sparkContext.addPyFile(_SHIPPED[app_id])
-    zip_path = _SHIPPED[app_id]
-    if zip_path is None:
+    root = _find_runtime_root()
+    if root is None:
         return False
+    zip_path = _build_zip(root)
+    spark.sparkContext.addPyFile(zip_path)
     if zip_path not in sys.path:
         sys.path.insert(0, zip_path)
     # addPyFile reaches executor TASK workers, but the JVM-spawned

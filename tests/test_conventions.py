@@ -281,3 +281,47 @@ def test_bench_unmeasured_warmup_list_is_pinned():
         and node.func.id == "_force"
     )
     assert force_count == 4, force_count  # footer, window loop, pysource, timed loop
+
+
+def test_one_session_memo_and_one_barrier_module():
+    """Per-context state goes through ``session.session_memo`` and every
+    materialization barrier through ``operators/barrier.py``: no
+    ``localCheckpoint(`` call outside the barrier module, no
+    ``applicationId`` read outside ``session.py``, and no import from
+    ``llm/`` in ``operators/`` (the layering the barrier module keeps)."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(catalog.__file__).resolve().parent.parent
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        for node in ast.walk(ast.parse(path.read_text(), rel)):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "localCheckpoint"
+                and rel != "operators/barrier.py"
+            ):
+                found.append(f"{rel}:{node.lineno} localCheckpoint(")
+            elif (
+                isinstance(node, ast.Attribute)
+                and node.attr == "applicationId"
+                and rel != "session.py"
+            ):
+                found.append(f"{rel}:{node.lineno} applicationId")
+            elif rel.startswith("operators/") and (
+                (
+                    isinstance(node, ast.ImportFrom)
+                    and (node.module or "").startswith("irio_mapreduce_spark.llm")
+                )
+                or (
+                    isinstance(node, ast.Import)
+                    and any(
+                        a.name.startswith("irio_mapreduce_spark.llm")
+                        for a in node.names
+                    )
+                )
+            ):
+                found.append(f"{rel}:{node.lineno} imports llm")
+    assert not found, "\n".join(found)

@@ -482,8 +482,9 @@ def test_incremental_dedup_batch_vs_corpus(spark):
 def test_free_checkpoint_releases_blocks(spark):
     """ADVICE fix: free_checkpoint drops a localCheckpoint's block-manager
     blocks immediately (no waiting for ContextCleaner GC), and is a no-op
-    on non-checkpointed frames."""
-    from irio_mapreduce_spark.llm.dedup import free_checkpoint
+    on non-checkpointed frames. ``barrier(nxt, supersedes=old)`` frees
+    ``old`` only after ``nxt`` (whose plan reads ``old``) is materialized."""
+    from irio_mapreduce_spark.operators.barrier import barrier, free_checkpoint
 
     def persistent_count() -> int:
         m = spark.sparkContext._jsc.sc().getPersistentRDDs()
@@ -500,6 +501,16 @@ def test_free_checkpoint_releases_blocks(spark):
     assert persistent_count() == base
     # harmless on a plain (non-checkpointed) frame
     free_checkpoint(spark.range(5))
+
+    old = barrier(spark.range(1000).selectExpr("id", "id * 2 AS y"))
+    assert persistent_count() == base + 1
+    nxt = barrier(old.selectExpr("id", "y + 1 AS y"), supersedes=old)
+    # old's blocks are released, nxt's are pinned, and nxt still reads
+    assert persistent_count() == base + 1
+    assert nxt.count() == 1000
+    assert nxt.agg({"y": "sum"}).collect()[0][0] == 1000 * 999 + 1000
+    free_checkpoint(nxt)
+    assert persistent_count() == base
 
 
 def test_connected_components_frees_intermediate_checkpoints(spark):

@@ -833,9 +833,11 @@ def test_protobuf_vendor_zip_contents(spark, tmp_path):
         rv = zf.read("google/protobuf/runtime_version.py").decode()
     assert "vendored patch" in rv
     assert "gen_major != MAJOR" in rv
-    # ensure_protobuf memoizes per application and reports importable
+    # ensure_protobuf memoizes per context and reports importable: the
+    # second call is a session_memo hit
+    from irio_mapreduce_spark import session
+
     assert pv.ensure_protobuf(spark) is True
-    app_id = spark.sparkContext.applicationId
-    first = pv._SHIPPED.get(app_id)
+    hits = session._MEMO_HITS["protobuf_vendor"]
     assert pv.ensure_protobuf(spark) is True
-    assert pv._SHIPPED.get(app_id) == first
+    assert session._MEMO_HITS["protobuf_vendor"] == hits + 1
