@@ -144,14 +144,6 @@ def spread_scan(
     return df.repartition(par)
 
 
-def read_table_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """``read_table`` + :func:`spread_scan` — for operators whose per-row
-    work (not the scan itself) dominates; see ``spread_scan``."""
-    return spread_scan(
-        spark, read_table(spark, sf_dir, name), table_path(sf_dir, name)
-    )
-
-
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
     """Read several tables at once: ``t = load_tables(spark, d, "orders", ...)``."""
     return {n: read_table(spark, sf_dir, n) for n in (names or TABLES)}

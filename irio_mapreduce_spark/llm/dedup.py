@@ -102,24 +102,6 @@ def exact_dedup(
     return out.drop("_fp")
 
 
-def minhash_signature(shingle_col: Column, num_hashes: int = 128) -> Column:
-    """MinHash signature as an array<long> of length ``num_hashes``.
-
-    Hash family = ``xxhash64(shingle, j)`` for seed column j — independent
-    enough for banding, deterministic across runs/retries. Computed entirely
-    with higher-order functions: per row, JVM codegen, no shuffle, no UDF.
-
-    NB: the per-seed lambda must be built by a 1-arg closure factory — a
-    ``lambda s, j=j`` would have arity 2, which PySpark dispatches as the
-    (element, index) form, silently replacing the seed with the array index.
-    """
-
-    def _minhash(j: int) -> Column:
-        return F.array_min(F.transform(shingle_col, lambda s: F.xxhash64(s, F.lit(j))))
-
-    return F.array(*[_minhash(j) for j in range(num_hashes)])
-
-
 def _band_key(shingle_col: Column, band: int, rows_per_band: int) -> Column:
     """Bucket key for one LSH band: xxhash64 of the band's min-hash rows.
     Two documents collide in band b iff all rows of that band agree — the
@@ -130,6 +112,9 @@ def _band_key(shingle_col: Column, band: int, rows_per_band: int) -> Column:
     shared signature expression would be re-evaluated once per band —
     32x the hashing work (measured: 195s -> ~6s at sf0.1)."""
 
+    # a 1-arg closure factory per seed: a ``lambda s, j=j`` would have
+    # arity 2, which PySpark dispatches as the (element, index) form,
+    # silently replacing the seed with the array index
     def _minhash(j: int) -> Column:
         return F.array_min(F.transform(shingle_col, lambda s: F.xxhash64(s, F.lit(j))))
 

@@ -3,7 +3,13 @@
 Stance (per the build brief): image/audio/video payloads are opaque
 ``binary`` columns with a typed metadata struct; decode / feature-extract /
 resize / frame-sample run as Arrow-batched pandas stages over
-``mapInPandas``. Two tiers of decode:
+``mapInPandas``. Every such stage is one call of the private batch kernel
+:func:`_map_rows`, which ships this package to the executors once per
+SparkContext and maps each input row to 0..n output rows with a per-row
+function; the stage supplies only that function and its output schema.
+Synthetic media come from :func:`synthesize_media` over the format table
+``_MEDIA_FORMATS``, where each format states its dims formula, mime string
+and generator call once. Two tiers of decode:
 
 * REAL codecs, written to spec from first principles, for every format
   expressible without a codec library: BMP and WAV (struct-level header /
@@ -33,11 +39,12 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from irio_mapreduce_spark.session import session_memo
 
 
 def ensure_package_shipped(spark: SparkSession) -> None:
@@ -49,20 +56,51 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     at unpickle. Shipping the package via ``addPyFile`` is the Spark
     mechanism for exactly this — the analog of the reference's binary
     distribution + per-worker cache (``TaskProcessor.java:21,36-38``).
-    Idempotent per session."""
-    if spark.conf.get("spark.irio_mapreduce.shipped", None) == "true":
-        return
-    import irio_mapreduce_spark
+    Idempotent per SparkContext (a ``session_memo`` entry), so every
+    session on one context shares the one shipped zip."""
 
-    pkg_dir = os.path.dirname(os.path.abspath(irio_mapreduce_spark.__file__))
-    zip_path = shutil.make_archive(
-        os.path.join(tempfile.mkdtemp(prefix="imrs_py_"), "irio_mapreduce_spark"),
-        "zip",
-        root_dir=os.path.dirname(pkg_dir),
-        base_dir="irio_mapreduce_spark",
-    )
-    spark.sparkContext.addPyFile(zip_path)
-    spark.conf.set("spark.irio_mapreduce.shipped", "true")
+    def ship() -> str:
+        import irio_mapreduce_spark
+
+        pkg_dir = os.path.dirname(os.path.abspath(irio_mapreduce_spark.__file__))
+        zip_path = shutil.make_archive(
+            os.path.join(tempfile.mkdtemp(prefix="imrs_py_"), "irio_mapreduce_spark"),
+            "zip",
+            root_dir=os.path.dirname(pkg_dir),
+            base_dir="irio_mapreduce_spark",
+        )
+        spark.sparkContext.addPyFile(zip_path)
+        return zip_path
+
+    session_memo(("package_shipped",), ship)
+
+
+def _map_rows(df: DataFrame, cols: list[str], row_fn, schema) -> DataFrame:
+    """The one batch kernel behind every media stage: ``row_fn(*values)``
+    maps the ``cols`` values of each input row to an iterable of 0..n
+    output rows, each a dict keyed by ``schema``'s field names (extra keys
+    are dropped), inside one Arrow-batched ``mapInPandas`` — payload bytes
+    never visit the driver. ``schema`` is a ``StructType`` or a DDL
+    string. The package is shipped first, so ``row_fn`` may reference
+    this module's globals by name."""
+    ensure_package_shipped(df.sparkSession)
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    names = schema.names
+
+    def run(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            rows = [
+                out
+                for values in zip(*(pdf[c] for c in cols))
+                for out in row_fn(*values)
+            ]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.select(*cols).mapInPandas(run, schema=schema)
+
 
 # Typed metadata carried next to every payload.
 MEDIA_META_TYPE = T.StructType(
@@ -124,33 +162,28 @@ def decode_image_features(
     once (maxRecordsPerBatch is the session-level knob; this documents the
     intent at the operator level).
     """
-    ensure_package_shipped(media.sparkSession)
 
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        for pdf in batches:
-            if strict:
-                raise NotImplementedError(
-                    "generic real image decode requires PIL/libvips — not "
-                    "available; use strict=False for the deterministic fake, "
-                    "or decode_real_media_features for the from-first-"
-                    "principles BMP/PNG/GIF/TIFF/baseline-JPEG codecs"
-                )
-            out = pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": pdf["meta"].map(lambda m: m["width"] if m else None),
-                    "height": pdf["meta"].map(lambda m: m["height"] if m else None),
-                    "channels": 3,
-                    "features": pdf["payload"].map(
-                        lambda p: _fake_decode(bytes(p or b""), n_features)
-                    ),
-                }
+    def row(mid, payload, meta):
+        if strict:
+            raise NotImplementedError(
+                "generic real image decode requires PIL/libvips — not "
+                "available; use strict=False for the deterministic fake, "
+                "or decode_real_media_features for the from-first-"
+                "principles BMP/PNG/GIF/TIFF/baseline-JPEG codecs"
             )
-            yield out
+        return [
+            {
+                "media_id": mid,
+                "width": meta["width"] if meta else None,
+                "height": meta["height"] if meta else None,
+                "channels": 3,
+                "features": _fake_decode(bytes(payload or b""), n_features),
+            }
+        ]
 
-    return media.mapInPandas(run, schema=IMAGE_FEATURES_SCHEMA)
+    return _map_rows(
+        media, ["media_id", "payload", "meta"], row, IMAGE_FEATURES_SCHEMA
+    )
 
 
 def resize_images(
@@ -159,18 +192,14 @@ def resize_images(
     """Resize stage: payload -> payload with updated meta dims. Stubbed
     decode (libraries absent): the fake keeps the payload and rewrites the
     metadata — the schema/partitioning contract is the real part."""
-    ensure_package_shipped(media.sparkSession)
 
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        for pdf in batches:
-            if strict:
-                raise NotImplementedError("real resize requires PIL/libvips")
-            meta = pdf["meta"].map(
-                lambda m: {**(m or {}), "width": width, "height": height}
-            )
-            yield pdf.assign(meta=meta)
+    def row(mid, payload, meta):
+        if strict:
+            raise NotImplementedError("real resize requires PIL/libvips")
+        meta = {**(meta or {}), "width": width, "height": height}
+        return [{"media_id": mid, "payload": payload, "meta": meta}]
 
-    return media.mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _map_rows(media, MEDIA_SCHEMA.names, row, MEDIA_SCHEMA)
 
 
 def sample_frames(
@@ -181,38 +210,29 @@ def sample_frames(
     bytes deterministically; a real implementation decodes with av/ffmpeg.
     The 1->N Arrow shape (a flatMap in MapReduce terms, reference R2) is
     what the stub proves."""
-    ensure_package_shipped(media.sparkSession)
 
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
+    def row(mid, payload, meta):
+        if strict:
+            raise NotImplementedError("real frame sampling requires av/ffmpeg")
+        payload = bytes(payload or b"")
+        dur = (meta or {}).get("duration_ms") or len(payload)  # fake: 1 ms per byte
+        n = max(1, min(max_frames, int(dur // every_ms) or 1))
+        step = max(1, len(payload) // n)
+        return [
+            {
+                "media_id": mid,
+                "frame_idx": i,
+                "ts_ms": i * every_ms,
+                "payload": payload[i * step : (i + 1) * step],
+            }
+            for i in range(n)
+        ]
 
-        for pdf in batches:
-            if strict:
-                raise NotImplementedError("real frame sampling requires av/ffmpeg")
-            out = []
-            for _, row in pdf.iterrows():
-                payload = bytes(row["payload"] or b"")
-                dur = (row["meta"] or {}).get("duration_ms") or (
-                    len(payload)  # fake: 1 ms per byte
-                )
-                n = max(1, min(max_frames, int(dur // every_ms) or 1))
-                step = max(1, len(payload) // n)
-                for i in range(n):
-                    out.append(
-                        {
-                            "media_id": row["media_id"],
-                            "frame_idx": i,
-                            "ts_ms": i * every_ms,
-                            "payload": payload[i * step : (i + 1) * step],
-                        }
-                    )
-            yield pd.DataFrame(
-                out, columns=["media_id", "frame_idx", "ts_ms", "payload"]
-            )
-
-    return media.mapInPandas(
-        run,
-        schema="media_id long, frame_idx int, ts_ms long, payload binary",
+    return _map_rows(
+        media,
+        MEDIA_SCHEMA.names,
+        row,
+        "media_id long, frame_idx int, ts_ms long, payload binary",
     )
 
 
@@ -413,53 +433,49 @@ REAL_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def synthesize_real_media(ids: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """Materialize a media table with REAL payload bytes: even ids become
-    24-bit BMPs (dims a function of the id), odd ids become PCM16 WAVs.
-    Runs distributed (mapInPandas); payload bytes never visit the
-    driver."""
-    ensure_package_shipped(ids.sparkSession)
-
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        from irio_mapreduce_spark.llm import multimodal as mm
-
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                if mid % 2 == 0:
-                    w, h = 8 + mid % 9, 6 + mid % 7
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "payload": mm.synth_bmp(mid, w, h),
-                            "meta": {
-                                "kind": "image", "mime": "image/bmp",
-                                "width": w, "height": h,
-                                "sample_rate": None, "duration_ms": None,
-                            },
-                        }
-                    )
-                else:
-                    sr = 4000 + (mid % 5) * 1000
-                    n = 64 + mid % 129
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "payload": mm.synth_wav(mid, sr, n),
-                            "meta": {
-                                "kind": "audio", "mime": "audio/wav",
-                                "width": None, "height": None,
-                                "sample_rate": sr,
-                                "duration_ms": 1000 * n // sr,
-                            },
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=["media_id", "payload", "meta"])
-
-    return ids.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+def _real_features(mid, payload) -> list[dict]:
+    """:func:`decode_real_media_features`' row: dispatch on the payload's
+    own magic bytes, decode, emit one row of exact integer features."""
+    payload = bytes(payload or b"")
+    row = dict.fromkeys(REAL_FEATURES_SCHEMA.names)
+    row["media_id"] = int(mid)
+    if payload[:2] == b"BM":
+        row.update(kind="image", **decode_bmp(payload))
+    elif payload[: len(_PNG_MAGIC)] == _PNG_MAGIC:
+        row.update(kind="image", **decode_png(payload))
+    elif payload[:6] in (b"GIF87a", b"GIF89a"):
+        row.update(kind="image", **decode_gif(payload))
+    elif payload[:4] in (b"II\x2a\x00", b"MM\x00\x2a"):
+        # marker paired with ITS OWN byte order — II with
+        # big-endian 42 (or vice versa) is not a TIFF and
+        # falls through to kind='unknown' instead of a raise
+        row.update(kind="image", **decode_tiff(payload))
+    elif payload[:2] == b"\xff\xd8":
+        row.update(kind="image", **decode_jpeg(payload))
+    elif payload[:2] in (b"P6", b"P5"):
+        row.update(kind="image", **decode_ppm(payload))
+    elif payload[:4] == b"\x00\x00\x01\x00":
+        row.update(kind="image", **decode_ico(payload))
+    elif payload[:4] == b"RIFF":
+        # PCM and mu-law share the RIFF magic; the fmt
+        # chunk's format tag is the real discriminator —
+        # parsed once so each decoder's own error surfaces
+        # for its own corrupt inputs
+        if _riff_format_tag(payload) == 7:
+            row.update(kind="audio", **decode_wav_mulaw(payload))
+        else:
+            row.update(kind="audio", **decode_wav(payload))
+    elif payload[:4] == b"FORM" and payload[8:12] == b"AIFF":
+        row.update(kind="audio", **decode_aiff(payload))
+    elif payload[:4] == _QOI_MAGIC:
+        row.update(kind="image", **decode_qoi(payload))
+    elif payload[-18:] == _TGA_SIGNATURE:
+        # TGA has NO leading magic — the 2.0 footer signature
+        # is the only sniffable identity, checked last
+        row.update(kind="image", **decode_tga(payload))
+    else:
+        row.update(kind="unknown")
+    return [row]
 
 
 def decode_real_media_features(media: DataFrame) -> DataFrame:
@@ -467,68 +483,9 @@ def decode_real_media_features(media: DataFrame) -> DataFrame:
     the metadata — the decoder trusts the bytes), parse to pixels/samples,
     emit exact integer features. Arrow-batched ``mapInPandas``; payload
     columns are pruned upstream of any query that doesn't call this."""
-    ensure_package_shipped(media.sparkSession)
-
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        from irio_mapreduce_spark.llm import multimodal as mm
-
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                payload = bytes(r["payload"] or b"")
-                base = {
-                    "media_id": int(r["media_id"]),
-                    "kind": None, "width": None, "height": None,
-                    "sum_b": None, "sum_g": None, "sum_r": None,
-                    "sample_rate": None, "n_samples": None,
-                    "sum_abs": None, "n_nonneg": None,
-                }
-                if payload[:2] == b"BM":
-                    base.update(kind="image", **mm.decode_bmp(payload))
-                elif payload[: len(mm._PNG_MAGIC)] == mm._PNG_MAGIC:
-                    base.update(kind="image", **mm.decode_png(payload))
-                elif payload[:6] in (b"GIF87a", b"GIF89a"):
-                    base.update(kind="image", **mm.decode_gif(payload))
-                elif payload[:4] in (b"II\x2a\x00", b"MM\x00\x2a"):
-                    # marker paired with ITS OWN byte order — II with
-                    # big-endian 42 (or vice versa) is not a TIFF and
-                    # falls through to kind='unknown' instead of a raise
-                    base.update(kind="image", **mm.decode_tiff(payload))
-                elif payload[:2] == b"\xff\xd8":
-                    base.update(kind="image", **mm.decode_jpeg(payload))
-                elif payload[:2] in (b"P6", b"P5"):
-                    base.update(kind="image", **mm.decode_ppm(payload))
-                elif payload[:4] == b"\x00\x00\x01\x00":
-                    base.update(kind="image", **mm.decode_ico(payload))
-                elif payload[:4] == b"RIFF":
-                    # PCM and mu-law share the RIFF magic; the fmt
-                    # chunk's format tag is the real discriminator —
-                    # parsed once so each decoder's own error surfaces
-                    # for its own corrupt inputs
-                    if mm._riff_format_tag(payload) == 7:
-                        base.update(
-                            kind="audio", **mm.decode_wav_mulaw(payload)
-                        )
-                    else:
-                        base.update(kind="audio", **mm.decode_wav(payload))
-                elif (
-                    payload[:4] == b"FORM" and payload[8:12] == b"AIFF"
-                ):
-                    base.update(kind="audio", **mm.decode_aiff(payload))
-                elif payload[:4] == mm._QOI_MAGIC:
-                    base.update(kind="image", **mm.decode_qoi(payload))
-                elif payload[-18:] == mm._TGA_SIGNATURE:
-                    # TGA has NO leading magic — the 2.0 footer signature
-                    # is the only sniffable identity, checked last
-                    base.update(kind="image", **mm.decode_tga(payload))
-                else:
-                    base.update(kind="unknown")
-                rows.append(base)
-            yield pd.DataFrame(rows, columns=[f.name for f in REAL_FEATURES_SCHEMA])
-
-    return media.mapInPandas(run, schema=REAL_FEATURES_SCHEMA)
+    return _map_rows(
+        media, ["media_id", "payload"], _real_features, REAL_FEATURES_SCHEMA
+    )
 
 
 def encode_bmp(width: int, height: int, pixel) -> bytes:
@@ -713,66 +670,33 @@ def decode_bmp_rle8(payload: bytes) -> dict:
     }
 
 
-def synthesize_rle8_media(ids: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """Materialize genuine RLE8 BMP payloads per id (dims a function of
-    the id, indexes from the closed-form generator). Distributed; bytes
-    never visit the driver."""
-    ensure_package_shipped(ids.sparkSession)
-
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        from irio_mapreduce_spark.llm import multimodal as mm
-
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                w, h = 6 + mid % 9, 5 + mid % 6
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "payload": mm.encode_bmp_rle8(
-                            w, h, lambda x, y, m=mid: mm._rle8_index(m, x, y)
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return ids.mapInPandas(run, schema="media_id long, payload binary")
-
-
 def decode_rle8_features(media: DataFrame) -> DataFrame:
     """Decode RLE8 BMP payloads back to exact integer index/channel sums
     (Arrow-batched; the genuine run-length + palette walk per row)."""
-    ensure_package_shipped(media.sparkSession)
-
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        from irio_mapreduce_spark.llm import multimodal as mm
-
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                d = mm.decode_bmp_rle8(bytes(r["payload"]))
-                d["media_id"] = int(r["media_id"])
-                rows.append(d)
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "sum_idx",
-                    "sum_b", "sum_g", "sum_r",
-                ],
-            )
-
-    return media.mapInPandas(
-        run,
-        schema=(
-            "media_id long, width long, height long, sum_idx long, "
-            "sum_b long, sum_g long, sum_r long"
-        ),
+    return _map_rows(
+        media,
+        ["media_id", "payload"],
+        lambda mid, payload: [
+            {"media_id": int(mid), **decode_bmp_rle8(bytes(payload))}
+        ],
+        "media_id long, width long, height long, sum_idx long, "
+        "sum_b long, sum_g long, sum_r long",
     )
+
+
+def _resized_row(mid, payload, meta, width: int, height: int) -> list[dict]:
+    """:func:`resize_real_images`' row: BMP/PNG payloads resized, meta
+    dims rewritten to match; other payloads pass through untouched."""
+    payload, meta = bytes(payload or b""), dict(meta or {})
+    # ONE magic -> resizer table drives both the payload rewrite and
+    # the meta-dims rewrite, so adding a format cannot desynchronize
+    # the two (the mismatch class the exact-oracle gate exists for)
+    for magic, resize in ((b"BM", resize_bmp), (_PNG_MAGIC, resize_png)):
+        if payload[: len(magic)] == magic:
+            payload = resize(payload, width, height)
+            meta["width"], meta["height"] = width, height
+            break
+    return [{"media_id": mid, "payload": payload, "meta": meta}]
 
 
 def resize_real_images(media: DataFrame, width: int, height: int) -> DataFrame:
@@ -781,39 +705,12 @@ def resize_real_images(media: DataFrame, width: int, height: int) -> DataFrame:
     re-encoded byte-for-byte; other rows pass through untouched (the
     stubbed path covers codec-library formats). Meta dims are rewritten
     to match the new payload."""
-    ensure_package_shipped(media.sparkSession)
-
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        from irio_mapreduce_spark.llm import multimodal as mm
-
-        # ONE magic -> resizer table drives both the payload rewrite and
-        # the meta-dims rewrite, so adding a format cannot desynchronize
-        # the two (the mismatch class the exact-oracle gate exists for)
-        resizers = {
-            b"BM": mm.resize_bmp,
-            mm._PNG_MAGIC: mm.resize_png,
-        }
-
-        for pdf in batches:
-            payloads, metas = [], []
-            for _, row in pdf.iterrows():
-                p = bytes(row["payload"] or b"")
-                m = dict(row["meta"] or {})
-                for magic, fn in resizers.items():
-                    if p[: len(magic)] == magic:
-                        p = fn(p, width, height)
-                        m["width"], m["height"] = width, height
-                        break
-                payloads.append(p)
-                metas.append(m)
-            yield pdf.assign(
-                payload=pd.Series(payloads, index=pdf.index),
-                meta=pd.Series(metas, index=pdf.index),
-            )
-
-    return media.mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _map_rows(
+        media,
+        MEDIA_SCHEMA.names,
+        lambda mid, payload, meta: _resized_row(mid, payload, meta, width, height),
+        MEDIA_SCHEMA,
+    )
 
 
 def segment_wav(payload: bytes, segment_ms: int, max_segments: int) -> list:
@@ -831,6 +728,18 @@ def segment_wav(payload: bytes, segment_ms: int, max_segments: int) -> list:
     return out
 
 
+def _segment_rows(mid, payload, segment_ms: int, max_segments: int) -> list[dict]:
+    """:func:`segment_real_audio`' row: one re-encoded WAV row per
+    segment; non-WAV payloads yield none."""
+    payload = bytes(payload or b"")
+    if payload[:4] != b"RIFF":
+        return []
+    return [
+        {"media_id": int(mid), "seg_idx": idx, "payload": seg}
+        for idx, seg in segment_wav(payload, segment_ms, max_segments)
+    ]
+
+
 def segment_real_audio(
     media: DataFrame, segment_ms: int = 20, max_segments: int = 4
 ) -> DataFrame:
@@ -838,248 +747,65 @@ def segment_real_audio(
     shape, reference R2): each WAV payload yields up to ``max_segments``
     re-encoded WAV rows. Non-WAV rows are dropped (the codec-library
     formats go through the stubbed ``sample_frames``)."""
-    ensure_package_shipped(media.sparkSession)
+    return _map_rows(
+        media,
+        ["media_id", "payload"],
+        lambda mid, payload: _segment_rows(mid, payload, segment_ms, max_segments),
+        "media_id long, seg_idx int, payload binary",
+    )
 
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
 
-        from irio_mapreduce_spark.llm import multimodal as mm
+_SEGMENT_FEATURES_DDL = (
+    "media_id long, seg_idx int, n_samples long, sum_abs long, n_nonneg long"
+)
 
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                payload = bytes(r["payload"] or b"")
-                if payload[:4] != b"RIFF":
-                    continue
-                for idx, seg in mm.segment_wav(payload, segment_ms, max_segments):
-                    rows.append(
-                        {"media_id": int(r["media_id"]), "seg_idx": idx,
-                         "payload": seg}
-                    )
-            yield pd.DataFrame(rows, columns=["media_id", "seg_idx", "payload"])
 
-    return media.mapInPandas(run, schema="media_id long, seg_idx int, payload binary")
+def _segment_features(mid, seg_idx, payload) -> list[dict]:
+    """:func:`decode_wav_segments`' row: the segment's exact integer
+    amplitude statistics, ``seg_idx`` preserved."""
+    return [
+        {"media_id": int(mid), "seg_idx": int(seg_idx), **decode_wav(bytes(payload))}
+    ]
 
 
 def decode_wav_segments(segs: DataFrame) -> DataFrame:
     """Decode a (media_id, seg_idx, payload) segment table: each segment's
     REAL WAV bytes parsed back to exact integer amplitude statistics,
     seg_idx preserved through the Arrow stage."""
-    ensure_package_shipped(segs.sparkSession)
-
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        from irio_mapreduce_spark.llm import multimodal as mm
-
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                d = mm.decode_wav(bytes(r["payload"]))
-                rows.append(
-                    {
-                        "media_id": int(r["media_id"]),
-                        "seg_idx": int(r["seg_idx"]),
-                        "n_samples": d["n_samples"],
-                        "sum_abs": d["sum_abs"],
-                        "n_nonneg": d["n_nonneg"],
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "seg_idx", "n_samples", "sum_abs", "n_nonneg"],
-            )
-
-    return segs.mapInPandas(
-        run,
-        schema="media_id long, seg_idx int, n_samples long, sum_abs long, n_nonneg long",
+    return _map_rows(
+        segs,
+        ["media_id", "seg_idx", "payload"],
+        _segment_features,
+        _SEGMENT_FEATURES_DDL,
     )
 
 
-# ---------------------------------------------------------------------------
-# FUSED single-crossing pipelines (optimization round 12, guide §4).
-#
-# The composable stages above (synthesize -> [resize|segment] -> decode) are
-# each their own ``mapInPandas``; Spark fuses chained Python operators into
-# ONE stage with K PythonRunner LEVELS per task, so a 3-stage chain over a
-# 32-task input wants 96 live Python workers at once and ships every payload
-# byte JVM->Python->JVM K times. The fused forms below run the SAME per-row
-# functions (synth_bmp / resize_bmp / decode_bmp / segment_wav / decode_wav
-# — byte-identical payloads and statistics, pinned by the entries' exact
-# oracles) inside ONE batch loop: one JVM↔Python crossing, cores×1 workers,
-# and the intermediate payload bytes never cross a process boundary at all.
-# The staged forms remain the building blocks for pipelines that genuinely
-# materialize the intermediate media table.
-# ---------------------------------------------------------------------------
+_ENERGY_DDL = "media_id long, win_idx int, n_in_win long, energy long, peak long"
 
 
-def real_media_features_fused(ids: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """``decode_real_media_features(synthesize_real_media(ids))`` in ONE
-    mapInPandas: even ids synth+decode a 24-bit BMP, odd ids a PCM16 WAV
-    (same generators, same decoders, same dispatch — the BMP/WAV payloads
-    begin with BM/RIFF exactly as the staged path's magic dispatch sees
-    them)."""
-    ensure_package_shipped(ids.sparkSession)
+def _energy_rows(mid, payload, window_samples: int) -> list[dict]:
+    """:func:`wav_energy_windows`' row: one exact integer energy/peak row
+    per ``window_samples`` frame; non-WAV payloads yield none."""
+    import numpy as np
 
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        from irio_mapreduce_spark.llm import multimodal as mm
-
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                base = {
-                    "media_id": mid,
-                    "kind": None, "width": None, "height": None,
-                    "sum_b": None, "sum_g": None, "sum_r": None,
-                    "sample_rate": None, "n_samples": None,
-                    "sum_abs": None, "n_nonneg": None,
-                }
-                if mid % 2 == 0:
-                    w, h = 8 + mid % 9, 6 + mid % 7
-                    base.update(kind="image", **mm.decode_bmp(mm.synth_bmp(mid, w, h)))
-                else:
-                    sr = 4000 + (mid % 5) * 1000
-                    n = 64 + mid % 129
-                    base.update(kind="audio", **mm.decode_wav(mm.synth_wav(mid, sr, n)))
-                rows.append(base)
-            yield pd.DataFrame(rows, columns=[f.name for f in REAL_FEATURES_SCHEMA])
-
-    return ids.select(F.col(id_col)).mapInPandas(run, schema=REAL_FEATURES_SCHEMA)
-
-
-def resized_real_image_features_fused(
-    ids: DataFrame, width: int, height: int, id_col: str = "media_id"
-) -> DataFrame:
-    """The ``multimodal_real_resize`` chain (synthesize -> filter images ->
-    resize -> decode) in ONE mapInPandas. ``synthesize_real_media`` emits
-    ``meta.kind == 'image'`` exactly for even ids (a BMP payload), so the
-    kind filter is the id-parity filter; the per-row byte path is the same
-    ``synth_bmp -> resize_bmp -> decode_bmp`` composition."""
-    ensure_package_shipped(ids.sparkSession)
-
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        from irio_mapreduce_spark.llm import multimodal as mm
-
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                if mid % 2 != 0:
-                    continue
-                w, h = 8 + mid % 9, 6 + mid % 7
-                payload = mm.resize_bmp(mm.synth_bmp(mid, w, h), width, height)
-                base = {
-                    "media_id": mid,
-                    "kind": "image",
-                    "sample_rate": None, "n_samples": None,
-                    "sum_abs": None, "n_nonneg": None,
-                }
-                base.update(mm.decode_bmp(payload))
-                rows.append(base)
-            yield pd.DataFrame(rows, columns=[f.name for f in REAL_FEATURES_SCHEMA])
-
-    return ids.select(F.col(id_col)).mapInPandas(run, schema=REAL_FEATURES_SCHEMA)
-
-
-def real_audio_segment_features_fused(
-    ids: DataFrame,
-    segment_ms: int = 20,
-    max_segments: int = 4,
-    id_col: str = "media_id",
-) -> DataFrame:
-    """The ``multimodal_real_segments`` chain (synthesize -> filter audio ->
-    segment -> decode segments) in ONE mapInPandas. ``synthesize_real_media``
-    emits audio (a RIFF WAV payload) exactly for odd ids; per row the byte
-    path is the same ``synth_wav -> segment_wav -> decode_wav`` composition,
-    one output row per re-encoded segment (the flatMap shape preserved)."""
-    ensure_package_shipped(ids.sparkSession)
-
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        from irio_mapreduce_spark.llm import multimodal as mm
-
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                if mid % 2 != 1:
-                    continue
-                sr = 4000 + (mid % 5) * 1000
-                n = 64 + mid % 129
-                wav = mm.synth_wav(mid, sr, n)
-                for idx, seg in mm.segment_wav(wav, segment_ms, max_segments):
-                    d = mm.decode_wav(seg)
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "seg_idx": idx,
-                            "n_samples": d["n_samples"],
-                            "sum_abs": d["sum_abs"],
-                            "n_nonneg": d["n_nonneg"],
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "seg_idx", "n_samples", "sum_abs", "n_nonneg"],
-            )
-
-    return ids.select(F.col(id_col)).mapInPandas(
-        run,
-        schema="media_id long, seg_idx int, n_samples long, sum_abs long, n_nonneg long",
-    )
-
-
-def wav_energy_windows_fused(
-    ids: DataFrame, window_samples: int = 32, id_col: str = "media_id"
-) -> DataFrame:
-    """The ``multimodal_wav_energy_windows`` chain (synthesize -> filter
-    audio -> frame energies) in ONE mapInPandas. ``synthesize_real_media``
-    emits audio (a RIFF PCM16 WAV) exactly for odd ids; the per-row byte
-    path is the same ``synth_wav -> _wav_parse -> framed int64
-    energy/peak`` composition, one output row per frame."""
-    ensure_package_shipped(ids.sparkSession)
-
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import numpy as np
-        import pandas as pd
-
-        from irio_mapreduce_spark.llm import multimodal as mm
-
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                if mid % 2 != 1:
-                    continue
-                sr = 4000 + (mid % 5) * 1000
-                n = 64 + mid % 129
-                _sr, samples = mm._wav_parse(mm.synth_wav(mid, sr, n))
-                v = np.asarray(samples, dtype=np.int64)
-                for w in range(0, (len(v) + window_samples - 1) // window_samples):
-                    frame = v[w * window_samples : (w + 1) * window_samples]
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "win_idx": w,
-                            "n_in_win": int(frame.size),
-                            "energy": int((frame * frame).sum()),
-                            "peak": int(np.abs(frame).max()),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "win_idx", "n_in_win", "energy", "peak"]
-            )
-
-    return ids.select(F.col(id_col)).mapInPandas(
-        run,
-        schema="media_id long, win_idx int, n_in_win long, energy long, peak long",
-    )
+    payload = bytes(payload or b"")
+    if payload[:4] != b"RIFF":
+        return []
+    _sr, samples = _wav_parse(payload)
+    v = np.asarray(samples, dtype=np.int64)
+    rows = []
+    for w in range(0, (len(v) + window_samples - 1) // window_samples):
+        frame = v[w * window_samples : (w + 1) * window_samples]
+        rows.append(
+            {
+                "media_id": int(mid),
+                "win_idx": w,
+                "n_in_win": int(frame.size),
+                "energy": int((frame * frame).sum()),
+                "peak": int(np.abs(frame).max()),
+            }
+        )
+    return rows
 
 
 def wav_energy_windows(media: DataFrame, window_samples: int = 32) -> DataFrame:
@@ -1094,40 +820,107 @@ def wav_energy_windows(media: DataFrame, window_samples: int = 32) -> DataFrame:
     `worker/util/MapProcessor.java:69-79` one-record-in/many-out);
     non-WAV payloads are dropped. Arrow-batched, payload bytes never on
     the driver."""
-    ensure_package_shipped(media.sparkSession)
+    return _map_rows(
+        media,
+        ["media_id", "payload"],
+        lambda mid, payload: _energy_rows(mid, payload, window_samples),
+        _ENERGY_DDL,
+    )
 
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import numpy as np
-        import pandas as pd
 
-        from irio_mapreduce_spark.llm import multimodal as mm
+# ---------------------------------------------------------------------------
+# FUSED single-crossing pipelines (optimization round 12, guide §4).
+#
+# The composable stages above (synthesize -> [resize|segment] -> decode) are
+# each their own ``mapInPandas``; Spark fuses chained Python operators into
+# ONE stage with K PythonRunner LEVELS per task, so a 3-stage chain over a
+# 32-task input wants 96 live Python workers at once and ships every payload
+# byte JVM->Python->JVM K times. The fused forms below compose the staged
+# forms' OWN row functions (``_media_row`` -> ``_resized_row`` /
+# ``_segment_rows`` -> ``_real_features`` / ``_segment_features`` /
+# ``_energy_rows``) inside ONE batch loop: one JVM↔Python crossing, cores×1
+# workers, and the intermediate payload bytes never cross a process boundary
+# at all. The staged forms remain the building blocks for pipelines that
+# genuinely materialize the intermediate media table.
+# ---------------------------------------------------------------------------
 
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                payload = bytes(r["payload"] or b"")
-                if payload[:4] != b"RIFF":
-                    continue
-                _sr, samples = mm._wav_parse(payload)
-                v = np.asarray(samples, dtype=np.int64)
-                for w in range(0, (len(v) + window_samples - 1) // window_samples):
-                    frame = v[w * window_samples : (w + 1) * window_samples]
-                    rows.append(
-                        {
-                            "media_id": int(r["media_id"]),
-                            "win_idx": w,
-                            "n_in_win": int(frame.size),
-                            "energy": int((frame * frame).sum()),
-                            "peak": int(np.abs(frame).max()),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "win_idx", "n_in_win", "energy", "peak"]
+
+def _real_media_of_kind(mid, kind: str) -> list[dict]:
+    """``synthesize_media(ids, "real")``'s row for ``mid`` when its
+    ``meta.kind`` is ``kind`` — the staged chains' kind filter, read from
+    the format table before any payload is built — else none."""
+    mid = int(mid)
+    return [_media_row("real", mid)] if _format_of("real", mid)[0] == kind else []
+
+
+def real_media_features_fused(ids: DataFrame, id_col: str = "media_id") -> DataFrame:
+    """``decode_real_media_features(synthesize_media(ids, "real"))`` in ONE
+    mapInPandas."""
+    return _map_rows(
+        ids,
+        [id_col],
+        lambda mid: _real_features(mid, _media_row("real", int(mid))["payload"]),
+        REAL_FEATURES_SCHEMA,
+    )
+
+
+def resized_real_image_features_fused(
+    ids: DataFrame, width: int, height: int, id_col: str = "media_id"
+) -> DataFrame:
+    """The ``multimodal_real_resize`` chain (synthesize -> filter images ->
+    resize -> decode) in ONE mapInPandas."""
+    return _map_rows(
+        ids,
+        [id_col],
+        lambda mid: [
+            f
+            for m in _real_media_of_kind(mid, "image")
+            for r in _resized_row(
+                m["media_id"], m["payload"], m["meta"], width, height
             )
+            for f in _real_features(r["media_id"], r["payload"])
+        ],
+        REAL_FEATURES_SCHEMA,
+    )
 
-    return media.mapInPandas(
-        run,
-        schema="media_id long, win_idx int, n_in_win long, energy long, peak long",
+
+def real_audio_segment_features_fused(
+    ids: DataFrame,
+    segment_ms: int = 20,
+    max_segments: int = 4,
+    id_col: str = "media_id",
+) -> DataFrame:
+    """The ``multimodal_real_segments`` chain (synthesize -> filter audio ->
+    segment -> decode segments) in ONE mapInPandas, one output row per
+    re-encoded segment (the flatMap shape preserved)."""
+    return _map_rows(
+        ids,
+        [id_col],
+        lambda mid: [
+            f
+            for m in _real_media_of_kind(mid, "audio")
+            for s in _segment_rows(m["media_id"], m["payload"], segment_ms, max_segments)
+            for f in _segment_features(s["media_id"], s["seg_idx"], s["payload"])
+        ],
+        _SEGMENT_FEATURES_DDL,
+    )
+
+
+def wav_energy_windows_fused(
+    ids: DataFrame, window_samples: int = 32, id_col: str = "media_id"
+) -> DataFrame:
+    """The ``multimodal_wav_energy_windows`` chain (synthesize -> filter
+    audio -> frame energies) in ONE mapInPandas, one output row per
+    frame."""
+    return _map_rows(
+        ids,
+        [id_col],
+        lambda mid: [
+            w
+            for m in _real_media_of_kind(mid, "audio")
+            for w in _energy_rows(m["media_id"], m["payload"], window_samples)
+        ],
+        _ENERGY_DDL,
     )
 
 
@@ -1358,38 +1151,6 @@ def _png_pixel(seed: int, x: int, y: int, c: int) -> int:
 def synth_png(seed: int, width: int, height: int) -> bytes:
     """A real, to-spec 8-bit RGB PNG (all five row filters exercised)."""
     return encode_png(width, height, lambda x, y, c: _png_pixel(seed, x, y, c))
-
-
-def synthesize_png_media(ids: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """Materialize a media table of REAL PNG payloads (dims a function of
-    the id; ≥5 rows tall so every filter type appears). Distributed via
-    ``mapInPandas``; payload bytes never visit the driver."""
-    ensure_package_shipped(ids.sparkSession)
-
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        from irio_mapreduce_spark.llm import multimodal as mm
-
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                w, h = 5 + mid % 8, 5 + mid % 6
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "payload": mm.synth_png(mid, w, h),
-                        "meta": {
-                            "kind": "image", "mime": "image/png",
-                            "width": w, "height": h,
-                            "sample_rate": None, "duration_ms": None,
-                        },
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload", "meta"])
-
-    return ids.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
 
 
 def resize_png(payload: bytes, new_width: int, new_height: int) -> bytes:
@@ -1639,38 +1400,6 @@ def synth_gif(seed: int, width: int, height: int) -> bytes:
     return encode_gif(width, height, lambda x, y: _gif_index(seed, x, y))
 
 
-def synthesize_gif_media(ids: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """Materialize a media table of REAL GIF87a payloads (dims a function
-    of the id; full 0..255 palette-index range so LZW grows through every
-    code width). Distributed via ``mapInPandas``."""
-    ensure_package_shipped(ids.sparkSession)
-
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        from irio_mapreduce_spark.llm import multimodal as mm
-
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                w, h = 6 + mid % 7, 4 + mid % 5
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "payload": mm.synth_gif(mid, w, h),
-                        "meta": {
-                            "kind": "image", "mime": "image/gif",
-                            "width": w, "height": h,
-                            "sample_rate": None, "duration_ms": None,
-                        },
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload", "meta"])
-
-    return ids.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # REAL baseline TIFF: full encoder/decoder from first principles — the
 # TAG-DIRECTORY container class (IFD walking, SHORT/LONG field types,
@@ -1874,38 +1603,6 @@ def synth_tiff(seed: int, width: int, height: int) -> bytes:
         lambda x, y, c: _tiff_pixel(seed, x, y, c),
         byte_order="<" if seed % 2 == 0 else ">",
     )
-
-
-def synthesize_tiff_media(ids: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """Materialize a media table of REAL baseline TIFFs (dims a function
-    of the id; odd ids big-endian, even ids little-endian; multi-strip).
-    Distributed via ``mapInPandas``."""
-    ensure_package_shipped(ids.sparkSession)
-
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        from irio_mapreduce_spark.llm import multimodal as mm
-
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                w, h = 4 + mid % 6, 3 + mid % 7
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "payload": mm.synth_tiff(mid, w, h),
-                        "meta": {
-                            "kind": "image", "mime": "image/tiff",
-                            "width": w, "height": h,
-                            "sample_rate": None, "duration_ms": None,
-                        },
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload", "meta"])
-
-    return ids.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -2528,38 +2225,6 @@ def synth_jpeg(seed: int, width: int, height: int) -> bytes:
     )
 
 
-def synthesize_jpeg_media(ids: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """media_id -> real baseline-JPEG payload bytes (block-constant
-    grayscale, dims a deterministic function of the id), via mapInPandas —
-    payloads never visit the driver."""
-    ensure_package_shipped(ids.sparkSession)
-
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        from irio_mapreduce_spark.llm import multimodal as mm
-
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                w, h = 8 * (1 + mid % 3), 8 * (1 + mid % 2)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "payload": mm.synth_jpeg(mid, w, h),
-                        "meta": {
-                            "kind": "image", "mime": "image/jpeg",
-                            "width": w, "height": h,
-                            "sample_rate": None, "duration_ms": None,
-                        },
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload", "meta"])
-
-    return ids.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # Netpbm (PPM P6 / PGM P5): the simplest REAL raster container — an ASCII
 # header (magic, dims, maxval, with '#' comment lines and arbitrary
@@ -2664,44 +2329,6 @@ def synth_pgm(seed: int, width: int, height: int) -> bytes:
     return encode_pgm(
         width, height, lambda x, y: (seed * 31 + y * 13 + x * 5) % 256
     )
-
-
-def synthesize_netpbm_media(ids: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """Even ids become P6 PPMs, odd ids P5 PGMs (dims a function of the
-    id). Distributed mapInPandas; payload bytes never visit the driver."""
-    ensure_package_shipped(ids.sparkSession)
-
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        from irio_mapreduce_spark.llm import multimodal as mm
-
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                if mid % 2 == 0:
-                    w, h = 7 + mid % 9, 5 + mid % 6
-                    payload = mm.synth_ppm(mid, w, h)
-                    mime = "image/x-portable-pixmap"
-                else:
-                    w, h = 6 + mid % 8, 4 + mid % 7
-                    payload = mm.synth_pgm(mid, w, h)
-                    mime = "image/x-portable-graymap"
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "payload": payload,
-                        "meta": {
-                            "kind": "image", "mime": mime,
-                            "width": w, "height": h,
-                            "sample_rate": None, "duration_ms": None,
-                        },
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload", "meta"])
-
-    return ids.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -2854,37 +2481,6 @@ def synth_tga(seed: int, width: int, height: int) -> bytes:
     )
 
 
-def synthesize_tga_media(ids: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """Materialize a media table of REAL TGAs (dims a function of the id;
-    even ids raw, odd ids RLE). Distributed mapInPandas."""
-    ensure_package_shipped(ids.sparkSession)
-
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        from irio_mapreduce_spark.llm import multimodal as mm
-
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                w, h = 6 + mid % 10, 5 + mid % 8
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "payload": mm.synth_tga(mid, w, h),
-                        "meta": {
-                            "kind": "image", "mime": "image/x-tga",
-                            "width": w, "height": h,
-                            "sample_rate": None, "duration_ms": None,
-                        },
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload", "meta"])
-
-    return ids.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
-
-
 # --------------------------------------------------------------------------
 # ICO — the CONTAINER format: a directory of images whose payloads are
 # headerless BMP DIBs (BITMAPINFOHEADER with DOUBLED height covering the
@@ -2987,38 +2583,6 @@ def synth_ico(seed: int, width: int, height: int) -> bytes:
     )
 
 
-def synthesize_ico_media(ids: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """Materialize a media table of REAL single-image ICOs. Distributed
-    mapInPandas."""
-    ensure_package_shipped(ids.sparkSession)
-
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        from irio_mapreduce_spark.llm import multimodal as mm
-
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                w, h = 5 + mid % 12, 4 + mid % 9
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "payload": mm.synth_ico(mid, w, h),
-                        "meta": {
-                            "kind": "image",
-                            "mime": "image/vnd.microsoft.icon",
-                            "width": w, "height": h,
-                            "sample_rate": None, "duration_ms": None,
-                        },
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload", "meta"])
-
-    return ids.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
-
-
 # --------------------------------------------------------------------------
 # G.711 mu-law WAV — telephony audio (WAVE_FORMAT_MULAW, format tag 7):
 # 8-bit logarithmic companding expanded to 14-bit-magnitude PCM by pure
@@ -3091,38 +2655,6 @@ def synth_wav_mulaw(seed: int, sample_rate: int, n_samples: int) -> bytes:
     )
 
 
-def synthesize_mulaw_media(ids: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """Materialize a media table of REAL mu-law WAVs (8 kHz telephony
-    rate, length a function of the id). Distributed mapInPandas."""
-    ensure_package_shipped(ids.sparkSession)
-
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        from irio_mapreduce_spark.llm import multimodal as mm
-
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                n = 48 + mid % 97
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "payload": mm.synth_wav_mulaw(mid, 8000, n),
-                        "meta": {
-                            "kind": "audio", "mime": "audio/basic",
-                            "width": None, "height": None,
-                            "sample_rate": 8000,
-                            "duration_ms": 1000 * n // 8000,
-                        },
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload", "meta"])
-
-    return ids.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
-
-
 def synth_tiff_deflate(seed: int, width: int, height: int) -> bytes:
     """A real Deflate-compressed TIFF (compression tag 8, per-strip zlib);
     odd seeds big-endian like the uncompressed corpus, distinct pixel
@@ -3134,39 +2666,6 @@ def synth_tiff_deflate(seed: int, width: int, height: int) -> bytes:
         byte_order="<" if seed % 2 == 0 else ">",
         compression=8,
     )
-
-
-def synthesize_tiff_deflate_media(
-    ids: DataFrame, id_col: str = "media_id"
-) -> DataFrame:
-    """Materialize a media table of REAL Deflate-compressed TIFFs.
-    Distributed mapInPandas."""
-    ensure_package_shipped(ids.sparkSession)
-
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        from irio_mapreduce_spark.llm import multimodal as mm
-
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                w, h = 4 + mid % 6, 3 + mid % 7
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "payload": mm.synth_tiff_deflate(mid, w, h),
-                        "meta": {
-                            "kind": "image", "mime": "image/tiff",
-                            "width": w, "height": h,
-                            "sample_rate": None, "duration_ms": None,
-                        },
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload", "meta"])
-
-    return ids.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -3247,57 +2746,14 @@ STEREO_FEATURES_SCHEMA = T.StructType(
 def decode_stereo_media_features(media: DataFrame) -> DataFrame:
     """Stereo-WAV feature stage (mapInPandas, Arrow-batched) — payload
     bytes never visit the driver."""
-    ensure_package_shipped(media.sparkSession)
-
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        from irio_mapreduce_spark.llm import multimodal as mm
-
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                d = mm.decode_wav_stereo(bytes(r["payload"]))
-                rows.append({"media_id": int(r["media_id"]), **d})
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in STEREO_FEATURES_SCHEMA]
-            )
-
-    return media.mapInPandas(run, schema=STEREO_FEATURES_SCHEMA)
-
-
-def synthesize_stereo_media(
-    ids: DataFrame, id_col: str = "media_id"
-) -> DataFrame:
-    """Materialize a media table of REAL stereo PCM16 WAVs. Distributed
-    mapInPandas."""
-    ensure_package_shipped(ids.sparkSession)
-
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        from irio_mapreduce_spark.llm import multimodal as mm
-
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                n = 40 + mid % 77
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "payload": mm.synth_wav_stereo(mid, 16000, n),
-                        "meta": {
-                            "kind": "audio", "mime": "audio/wav",
-                            "width": None, "height": None,
-                            "sample_rate": 16000,
-                            "duration_ms": 1000 * n // 16000,
-                        },
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload", "meta"])
-
-    return ids.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return _map_rows(
+        media,
+        ["media_id", "payload"],
+        lambda mid, payload: [
+            {"media_id": int(mid), **decode_wav_stereo(bytes(payload))}
+        ],
+        STEREO_FEATURES_SCHEMA,
+    )
 
 
 def _png_filter_image(get_px, width: int, height: int) -> bytes:
@@ -3372,41 +2828,6 @@ def synth_png_adam7(seed: int, width: int, height: int) -> bytes:
     return encode_png_adam7(
         width, height, lambda x, y, c: _png7_pixel(seed, x, y, c)
     )
-
-
-def synthesize_png_adam7_media(
-    ids: DataFrame, id_col: str = "media_id"
-) -> DataFrame:
-    """Materialize a media table of REAL Adam7-interlaced PNGs (dims a
-    function of the id, deliberately spanning the degenerate pass
-    shapes: widths/heights below 8 leave several passes empty).
-    Distributed mapInPandas."""
-    ensure_package_shipped(ids.sparkSession)
-
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        from irio_mapreduce_spark.llm import multimodal as mm
-
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                w, h = 3 + mid % 14, 2 + mid % 13
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "payload": mm.synth_png_adam7(mid, w, h),
-                        "meta": {
-                            "kind": "image", "mime": "image/png",
-                            "width": w, "height": h,
-                            "sample_rate": None, "duration_ms": None,
-                        },
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload", "meta"])
-
-    return ids.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -3504,40 +2925,6 @@ def synth_aiff(seed: int, sample_rate: int, n_samples: int) -> bytes:
         sample_rate,
         [((seed * 17 + i * 9) % 4001) - 2000 for i in range(n_samples)],
     )
-
-
-def synthesize_aiff_media(ids: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """Materialize a media table of REAL mono PCM16 AIFFs (rate one of
-    11025/22050/33075 by id — three distinct 80-bit extended encodings).
-    Distributed mapInPandas."""
-    ensure_package_shipped(ids.sparkSession)
-
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        from irio_mapreduce_spark.llm import multimodal as mm
-
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                n = 52 + mid % 83
-                sr = 11025 * (1 + mid % 3)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "payload": mm.synth_aiff(mid, sr, n),
-                        "meta": {
-                            "kind": "audio", "mime": "audio/aiff",
-                            "width": None, "height": None,
-                            "sample_rate": sr,
-                            "duration_ms": 1000 * n // sr,
-                        },
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload", "meta"])
-
-    return ids.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -3659,41 +3046,15 @@ def zip_archive_members(ids: DataFrame, id_col: str = "media_id") -> DataFrame:
     archive-ingest stage (crawl dumps arrive as containers; row count is
     member count, not payload count). Output: (media_id, member_idx,
     n_bytes, byte_sum)."""
-    ensure_package_shipped(ids.sparkSession)
-    import pyspark.sql.types as _T
-
-    schema = _T.StructType(
-        [
-            _T.StructField("media_id", _T.LongType()),
-            _T.StructField("member_idx", _T.LongType()),
-            _T.StructField("n_bytes", _T.LongType()),
-            _T.StructField("byte_sum", _T.LongType()),
-        ]
+    return _map_rows(
+        ids,
+        [id_col],
+        lambda mid: [
+            {"media_id": int(mid), "member_idx": i, **m}
+            for i, m in enumerate(decode_zip_stored(synth_zip(int(mid))))
+        ],
+        "media_id long, member_idx long, n_bytes long, byte_sum long",
     )
-
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        from irio_mapreduce_spark.llm import multimodal as mm
-
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                for i, m in enumerate(mm.decode_zip_stored(mm.synth_zip(mid))):
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "member_idx": i,
-                            "n_bytes": m["n_bytes"],
-                            "byte_sum": m["byte_sum"],
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "member_idx", "n_bytes", "byte_sum"]
-            )
-
-    return ids.select(F.col(id_col)).mapInPandas(run, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -3844,44 +3205,23 @@ def gif_frame_samples(
     """Synthesize animated GIFs per id and emit channel statistics for
     every ``sample_every``-th frame — one output row per SAMPLED frame
     (mapInPandas; payload bytes never visit the driver)."""
-    ensure_package_shipped(ids.sparkSession)
-    import pyspark.sql.types as _T
 
-    schema = _T.StructType(
-        [
-            _T.StructField("media_id", _T.LongType()),
-            _T.StructField("frame_idx", _T.LongType()),
-            _T.StructField("width", _T.LongType()),
-            _T.StructField("height", _T.LongType()),
-            _T.StructField("sum_r", _T.LongType()),
-            _T.StructField("sum_g", _T.LongType()),
-            _T.StructField("sum_b", _T.LongType()),
+    def row(mid):
+        mid = int(mid)
+        w, h, nf = 6 + mid % 7, 5 + mid % 5, 3 + mid % 4
+        payload = synth_gif_animated(mid, w, h, nf)
+        return [
+            {"media_id": mid, **fr}
+            for fr in decode_gif_frames(payload, sample_every)
         ]
+
+    return _map_rows(
+        ids,
+        [id_col],
+        row,
+        "media_id long, frame_idx long, width long, height long, "
+        "sum_r long, sum_g long, sum_b long",
     )
-
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        from irio_mapreduce_spark.llm import multimodal as mm
-
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                w, h = 6 + mid % 7, 5 + mid % 5
-                nf = 3 + mid % 4
-                payload = mm.synth_gif_animated(mid, w, h, nf)
-                for fr in mm.decode_gif_frames(payload, sample_every):
-                    rows.append({"media_id": mid, **fr})
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "width", "height",
-                    "sum_r", "sum_g", "sum_b",
-                ],
-            )
-
-    return ids.select(F.col(id_col)).mapInPandas(run, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -4053,32 +3393,89 @@ def synth_qoi(mid: int, width: int, height: int) -> bytes:
     )
 
 
-def synthesize_qoi_media(ids: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """Materialize a media table of REAL QOI payloads (dims a function of
-    the id). Distributed mapInPandas; bytes never visit the driver."""
-    ensure_package_shipped(ids.sparkSession)
+# ---------------------------------------------------------------------------
+# Synthetic media: ONE format table. Each entry states once the dims as a
+# function of the media id (images: width, height; audio: sample rate and
+# sample/frame count), the mime string and the generator call; the
+# closed-form oracles in queries/multimodal_q.py mirror these formulas.
+# ---------------------------------------------------------------------------
 
-    def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:  # noqa: F821
-        import pandas as pd
+_MEDIA_FORMATS = {
+    # fmt: (kind, mime, dims(mid), synth(mid, *dims) -> payload bytes)
+    "bmp": ("image", "image/bmp", lambda m: (8 + m % 9, 6 + m % 7), synth_bmp),
+    "wav": (
+        "audio", "audio/wav", lambda m: (4000 + (m % 5) * 1000, 64 + m % 129), synth_wav,
+    ),
+    "rle8": (
+        "image", "image/bmp", lambda m: (6 + m % 9, 5 + m % 6),
+        lambda m, w, h: encode_bmp_rle8(w, h, lambda x, y: _rle8_index(m, x, y)),
+    ),
+    # >= 5 rows tall, so every PNG filter type appears
+    "png": ("image", "image/png", lambda m: (5 + m % 8, 5 + m % 6), synth_png),
+    # dims below 8 leave whole Adam7 passes empty — the degenerate shapes
+    "png_adam7": (
+        "image", "image/png", lambda m: (3 + m % 14, 2 + m % 13), synth_png_adam7,
+    ),
+    "gif": ("image", "image/gif", lambda m: (6 + m % 7, 4 + m % 5), synth_gif),
+    "tiff": ("image", "image/tiff", lambda m: (4 + m % 6, 3 + m % 7), synth_tiff),
+    "tiff_deflate": (
+        "image", "image/tiff", lambda m: (4 + m % 6, 3 + m % 7), synth_tiff_deflate,
+    ),
+    # block-constant grayscale, dims multiples of 8 (see the JPEG section)
+    "jpeg": (
+        "image", "image/jpeg", lambda m: (8 * (1 + m % 3), 8 * (1 + m % 2)), synth_jpeg,
+    ),
+    "ppm": (
+        "image", "image/x-portable-pixmap", lambda m: (7 + m % 9, 5 + m % 6), synth_ppm,
+    ),
+    "pgm": (
+        "image", "image/x-portable-graymap", lambda m: (6 + m % 8, 4 + m % 7), synth_pgm,
+    ),
+    "tga": ("image", "image/x-tga", lambda m: (6 + m % 10, 5 + m % 8), synth_tga),
+    "ico": (
+        "image", "image/vnd.microsoft.icon", lambda m: (5 + m % 12, 4 + m % 9), synth_ico,
+    ),
+    "qoi": ("image", "image/qoi", lambda m: (7 + m % 9, 4 + m % 7), synth_qoi),
+    # the 8 kHz telephony rate
+    "mulaw": ("audio", "audio/basic", lambda m: (8000, 48 + m % 97), synth_wav_mulaw),
+    "stereo": ("audio", "audio/wav", lambda m: (16000, 40 + m % 77), synth_wav_stereo),
+    # 11025/22050/33075: three distinct 80-bit extended rate encodings
+    "aiff": (
+        "audio", "audio/aiff", lambda m: (11025 * (1 + m % 3), 52 + m % 83), synth_aiff,
+    ),
+}
 
-        from irio_mapreduce_spark.llm import multimodal as mm
+# Mixed tables: even ids take the first format, odd ids the second.
+_MIXED_FORMATS = {"real": ("bmp", "wav"), "netpbm": ("ppm", "pgm")}
 
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                w, h = 7 + mid % 9, 4 + mid % 7
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "payload": mm.synth_qoi(mid, w, h),
-                        "meta": {
-                            "kind": "image", "mime": "image/qoi",
-                            "width": w, "height": h,
-                            "sample_rate": None, "duration_ms": None,
-                        },
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload", "meta"])
 
-    return ids.select(F.col(id_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+def _format_of(fmt: str, mid: int) -> tuple:
+    """The ``_MEDIA_FORMATS`` entry id ``mid`` takes in a ``fmt`` table."""
+    return _MEDIA_FORMATS[_MIXED_FORMATS.get(fmt, (fmt, fmt))[mid % 2]]
+
+
+def _media_row(fmt: str, mid: int) -> dict:
+    """:func:`synthesize_media`'s row for id ``mid``: the payload and its
+    typed ``meta``, both from the format table."""
+    kind, mime, dims, synth = _format_of(fmt, mid)
+    a, b = dims(mid)
+    meta = dict.fromkeys(MEDIA_META_TYPE.names)
+    meta.update(kind=kind, mime=mime)
+    if kind == "image":
+        meta.update(width=a, height=b)
+    else:
+        meta.update(sample_rate=a, duration_ms=1000 * b // a)
+    return {"media_id": mid, "payload": synth(mid, a, b), "meta": meta}
+
+
+def synthesize_media(ids: DataFrame, fmt: str, id_col: str = "media_id") -> DataFrame:
+    """Materialize a ``MEDIA_SCHEMA`` table of REAL ``fmt`` payloads, one
+    per id, dims a function of the id (``_MEDIA_FORMATS``). ``"real"``
+    mixes 24-bit BMPs on even ids with PCM16 WAVs on odd ids; ``"netpbm"``
+    P6 PPMs with P5 PGMs. Distributed via :func:`_map_rows`; payload bytes
+    never visit the driver."""
+    if fmt not in _MEDIA_FORMATS and fmt not in _MIXED_FORMATS:
+        raise ValueError(f"unknown media format {fmt!r}")
+    return _map_rows(
+        ids, [id_col], lambda mid: [_media_row(fmt, int(mid))], MEDIA_SCHEMA
+    )

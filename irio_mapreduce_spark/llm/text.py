@@ -55,12 +55,6 @@ def stopword_ratio(text_col: str | Column, stopwords: tuple[str, ...]) -> Column
     return F.try_divide(hits, F.size(t))
 
 
-def punct_ratio(text_col: str | Column) -> Column:
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    n_punct = F.length(c) - F.length(F.regexp_replace(c, r"[^\w\s]", ""))
-    return F.try_divide(n_punct, F.length(c))
-
-
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Attach the standard quality-filter features. Downstream filters pick
     thresholds (e.g. C4-style: drop docs with too-low stopword ratio or

@@ -9,6 +9,14 @@ metadata (SURVEY.md §2.2 LLM table; llm/multimodal.py). Two tiers:
 * the JPEG/MP4-class stub path (`multimodal_decode_features`), where the
   byte->pixels step needs codec libraries absent from this container and
   the Arrow plumbing is what the entry proves.
+
+Every codec entry synthesizes its corpus with
+``llm.multimodal.synthesize_media`` (one format table states each
+format's dims formula, which the oracles below mirror) and runs every
+encode/decode stage through the one batch kernel
+``llm.multimodal._map_rows``: Arrow-batched ``mapInPandas``, payload bytes
+never visit the driver and never shuffle (a decode emits the narrow
+feature row).
 """
 
 from __future__ import annotations
@@ -17,12 +25,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from irio_mapreduce_spark.io import read_table, spread_scan, table_path
-from irio_mapreduce_spark.llm.multimodal import decode_image_features, documents_as_media
+from irio_mapreduce_spark.llm.multimodal import (
+    decode_image_features,
+    decode_real_media_features,
+    decode_rle8_features,
+    decode_stereo_media_features,
+    documents_as_media,
+    gif_frame_samples,
+    real_audio_segment_features_fused,
+    real_media_features_fused,
+    resized_real_image_features_fused,
+    synthesize_media,
+    wav_energy_windows_fused,
+    zip_archive_members,
+)
 from irio_mapreduce_spark.queries.catalog import register
 
 
 def _media_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The one-column id frame every synthesize_* codec entry starts from,
+    """The one-column id frame every ``synthesize_media`` codec entry starts from,
     spread to the cluster's parallelism (io.spread_scan) BEFORE the
     encode/decode mapInPandas chain. r12 (guide §2.5 unsplittable input,
     §4): the bench parquet is one row group, so the whole Python
@@ -37,6 +58,17 @@ def _media_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         table_path(sf_dir, "documents"),
     )
+
+
+_IMAGE_SUMS = ("width", "height", "sum_r", "sum_g", "sum_b")
+_AUDIO_STATS = ("sample_rate", "n_samples", "sum_abs", "n_nonneg")
+
+
+def _decoded(spark: SparkSession, sf_dir: str, fmt: str, cols) -> DataFrame:
+    """``synthesize_media(ids, fmt)`` through ``decode_real_media_features``,
+    projected to ``media_id`` + ``cols``."""
+    media = synthesize_media(_media_ids(spark, sf_dir), fmt)
+    return decode_real_media_features(media).select("media_id", *cols)
 
 
 @register(
@@ -173,8 +205,6 @@ def multimodal_real_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     formats — JPEG/MP4 — remain the honestly-stubbed path in
     ``decode_image_features``; BMP/WAV are fully specified header+array
     formats the stdlib parses.)"""
-    from irio_mapreduce_spark.llm.multimodal import real_media_features_fused
-
     # r12 (guide §4): the synthesize and decode stages are FUSED into one
     # mapInPandas — same synth_bmp/synth_wav -> decode_bmp/decode_wav byte
     # path per row, but ONE JVM<->Python crossing instead of two chained
@@ -213,17 +243,12 @@ def multimodal_real_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes prove the full decode/resize/encode/decode chain is
     byte-faithful. (The codec-library resize path stays stubbed in
     ``resize_images``; this is the stdlib-parseable-format twin.)"""
-    from irio_mapreduce_spark.llm.multimodal import (
-        resized_real_image_features_fused,
-    )
-
     # r12 (guide §4): synthesize -> filter(image) -> resize -> decode was
     # THREE chained mapInPandas levels in one stage (cores×3 live Python
     # workers at once — the worker-spawn storm that measured 10-28 s for
     # ~1 s of codec work — and every payload crossing the boundary three
-    # times). Fused to ONE mapInPandas running the same synth_bmp ->
-    # resize_bmp -> decode_bmp bytes per row (kind=='image' ⇔ even id by
-    # the synthesizer's construction, pinned by this entry's exact oracle).
+    # times). Fused to ONE mapInPandas running the staged stages' own row
+    # functions (synthesize, kind filter, resize, decode) per row.
     docs = _media_ids(spark, sf_dir)
     return resized_real_image_features_fused(docs, 6, 4).select(
         "media_id", "width", "height", "sum_b", "sum_g", "sum_r"
@@ -264,16 +289,11 @@ def multimodal_real_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the flatMap analog of video frame sampling with real bytes end to
     end (codec-library formats stay on the stubbed ``sample_frames``
     path)."""
-    from irio_mapreduce_spark.llm.multimodal import (
-        real_audio_segment_features_fused,
-    )
-
     # r12 (guide §4): synthesize -> filter(audio) -> segment -> decode was
     # three chained mapInPandas levels (cores×3 live workers, payload bytes
     # crossing the boundary three times); fused to ONE mapInPandas running
-    # the same synth_wav -> segment_wav -> decode_wav bytes per row
-    # (kind=='audio' ⇔ odd id by the synthesizer's construction, pinned by
-    # this entry's exact oracle).
+    # the staged stages' own row functions (synthesize, kind filter,
+    # segment, decode) per row.
     docs = _media_ids(spark, sf_dir)
     return real_audio_segment_features_fused(docs, segment_ms=20, max_segments=4)
 
@@ -312,14 +332,10 @@ def multimodal_wav_energy_windows(spark: SparkSession, sf_dir: str) -> DataFrame
     RIFF walk, int16 decode, and framing are all exact. Integer bounds:
     |s| <= 2^15, 32 samples → energy < 2^45, BIGINT-safe on both
     engines."""
-    from irio_mapreduce_spark.llm.multimodal import wav_energy_windows_fused
-
     # r12 (guide §4): synthesize -> filter(audio) -> frame-energies was two
     # chained mapInPandas levels (cores×2 live workers, WAV bytes crossing
-    # the boundary twice); fused to ONE mapInPandas running the same
-    # synth_wav -> _wav_parse -> int64 framing per row (kind=='audio' ⇔
-    # odd id by the synthesizer's construction, pinned by the exact
-    # oracle).
+    # the boundary twice); fused to ONE mapInPandas running the staged
+    # stages' own row functions (synthesize, kind filter, framing) per row.
     docs = _media_ids(spark, sf_dir)
     return wav_energy_windows_fused(docs, window_samples=32)
 
@@ -353,22 +369,8 @@ def multimodal_real_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     and unfilters before summing channels. The closed-form oracle computes
     the same per-channel sums from the pixel generator directly, so a
     single mis-predicted byte anywhere in filter arithmetic breaks the
-    per-row hash match.
-
-    Scale shape: identical to the BMP/WAV path — synthesize and decode are
-    both ``mapInPandas`` stages over Arrow batches; payload bytes never
-    visit the driver and never shuffle (the decode output is the narrow
-    feature row). See ``llm.multimodal.encode_png``/``decode_png``."""
-    from irio_mapreduce_spark.llm.multimodal import (
-        decode_real_media_features,
-        synthesize_png_media,
-    )
-
-    ids = _media_ids(spark, sf_dir)
-    feats = decode_real_media_features(synthesize_png_media(ids))
-    return feats.select(
-        "media_id", "width", "height", "sum_r", "sum_g", "sum_b"
-    )
+    per-row hash match. See ``llm.multimodal.encode_png``/``decode_png``."""
+    return _decoded(spark, sf_dir, "png", _IMAGE_SUMS)
 
 
 @register(
@@ -401,18 +403,8 @@ def multimodal_real_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     indirection of an indexed-color format. The closed-form oracle
     recomputes the per-channel sums from the pixel/palette generators, so
     one wrong LZW code or palette lookup anywhere breaks the per-row hash
-    match. Same mapInPandas scale shape as the BMP/WAV/PNG paths; only
-    JPEG/MP4-class codecs remain honestly stubbed."""
-    from irio_mapreduce_spark.llm.multimodal import (
-        decode_real_media_features,
-        synthesize_gif_media,
-    )
-
-    ids = _media_ids(spark, sf_dir)
-    feats = decode_real_media_features(synthesize_gif_media(ids))
-    return feats.select(
-        "media_id", "width", "height", "sum_r", "sum_g", "sum_b"
-    )
+    match. Only JPEG/MP4-class codecs remain honestly stubbed."""
+    return _decoded(spark, sf_dir, "gif", _IMAGE_SUMS)
 
 
 @register(
@@ -443,19 +435,9 @@ def multimodal_real_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     little-endian II — the corpus itself exercises the endianness
     dispatch). The closed-form oracle recomputes per-channel sums from
     the pixel generator, so one wrong tag read, strip offset, or
-    endianness swap breaks the per-row hash match. Same mapInPandas scale
-    shape as BMP/WAV/PNG/GIF; only JPEG/MP4-class codecs remain honestly
-    stubbed."""
-    from irio_mapreduce_spark.llm.multimodal import (
-        decode_real_media_features,
-        synthesize_tiff_media,
-    )
-
-    ids = _media_ids(spark, sf_dir)
-    feats = decode_real_media_features(synthesize_tiff_media(ids))
-    return feats.select(
-        "media_id", "width", "height", "sum_r", "sum_g", "sum_b"
-    )
+    endianness swap breaks the per-row hash match. Only JPEG/MP4-class
+    codecs remain honestly stubbed."""
+    return _decoded(spark, sf_dir, "tiff", _IMAGE_SUMS)
 
 
 @register(
@@ -493,19 +475,9 @@ def multimodal_real_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form block sums a SQL engine computes from the generator, and
     ONE wrong Huffman bit, stuffed byte, or zigzag index anywhere breaks
     the hash. General images (where quantization genuinely loses data)
-    are covered by bounded-error roundtrip pytest. Same mapInPandas scale
-    shape as BMP/WAV/PNG/GIF/TIFF; only MP4-class video decode remains
-    stubbed."""
-    from irio_mapreduce_spark.llm.multimodal import (
-        decode_real_media_features,
-        synthesize_jpeg_media,
-    )
-
-    ids = _media_ids(spark, sf_dir)
-    feats = decode_real_media_features(synthesize_jpeg_media(ids))
-    return feats.select(
-        "media_id", "width", "height", "sum_r", "sum_g", "sum_b"
-    )
+    are covered by bounded-error roundtrip pytest. Only MP4-class video
+    decode remains stubbed."""
+    return _decoded(spark, sf_dir, "jpeg", _IMAGE_SUMS)
 
 
 @register(
@@ -544,13 +516,8 @@ def multimodal_real_bmp_rle8(spark: SparkSession, sf_dir: str) -> DataFrame:
     codec (BMP24/WAV/PNG/GIF/TIFF/JPEG) and the second compressed one
     beyond GIF's LZW. Delta escapes stay a named honesty boundary
     (tests/test_llm.py)."""
-    from irio_mapreduce_spark.llm.multimodal import (
-        decode_rle8_features,
-        synthesize_rle8_media,
-    )
-
     docs = _media_ids(spark, sf_dir)
-    return decode_rle8_features(synthesize_rle8_media(docs))
+    return decode_rle8_features(synthesize_media(docs, "rle8"))
 
 
 @register(
@@ -595,21 +562,8 @@ def multimodal_real_netpbm(spark: SparkSession, sf_dir: str) -> DataFrame:
     raster math) is load-bearing for the hash match. Even ids are RGB
     P6, odd ids grayscale P5 (grayscale reports its sum on all three
     channels), so ONE decode stage dispatches both subformats by magic.
-
-    Scale shape: identical to the BMP/PNG path — synthesize and decode
-    are both ``mapInPandas`` stages over Arrow batches; payload bytes
-    never visit the driver and never shuffle. See
-    ``llm.multimodal.encode_ppm``/``decode_ppm``."""
-    from irio_mapreduce_spark.llm.multimodal import (
-        decode_real_media_features,
-        synthesize_netpbm_media,
-    )
-
-    ids = _media_ids(spark, sf_dir)
-    feats = decode_real_media_features(synthesize_netpbm_media(ids))
-    return feats.select(
-        "media_id", "width", "height", "sum_r", "sum_g", "sum_b"
-    )
+    See ``llm.multimodal.encode_ppm``/``decode_ppm``."""
+    return _decoded(spark, sf_dir, "netpbm", _IMAGE_SUMS)
 
 
 @register(
@@ -649,19 +603,8 @@ def multimodal_real_tga(spark: SparkSession, sf_dir: str) -> DataFrame:
     alone is not enough. Every third scanline is constant, so the RLE
     encoder genuinely emits run packets (and the spec's
     packets-never-cross-scanlines rule is load-bearing in the decoder).
-    Same mapInPandas synthesize/decode shape as every REAL codec entry:
-    payload bytes never visit the driver, never shuffle. See
-    ``llm.multimodal.encode_tga``/``decode_tga``."""
-    from irio_mapreduce_spark.llm.multimodal import (
-        decode_real_media_features,
-        synthesize_tga_media,
-    )
-
-    ids = _media_ids(spark, sf_dir)
-    feats = decode_real_media_features(synthesize_tga_media(ids))
-    return feats.select(
-        "media_id", "width", "height", "sum_r", "sum_g", "sum_b"
-    )
+    See ``llm.multimodal.encode_tga``/``decode_tga``."""
+    return _decoded(spark, sf_dir, "tga", _IMAGE_SUMS)
 
 
 @register(
@@ -694,18 +637,9 @@ def multimodal_real_ico(spark: SparkSession, sf_dir: str) -> DataFrame:
     validates directory-vs-DIB dimension agreement and the doubled
     height, sums color from the XOR plane only, and rejects
     PNG-compressed entries by name — the container/codec split every
-    multimodal ingest pipeline navigates. mapInPandas both ways; see
+    multimodal ingest pipeline navigates. See
     ``llm.multimodal.encode_ico``/``decode_ico``."""
-    from irio_mapreduce_spark.llm.multimodal import (
-        decode_real_media_features,
-        synthesize_ico_media,
-    )
-
-    ids = _media_ids(spark, sf_dir)
-    feats = decode_real_media_features(synthesize_ico_media(ids))
-    return feats.select(
-        "media_id", "width", "height", "sum_r", "sum_g", "sum_b"
-    )
+    return _decoded(spark, sf_dir, "ico", _IMAGE_SUMS)
 
 
 @register(
@@ -742,16 +676,7 @@ def multimodal_real_tiff_deflate(
     orders (odd ids big-endian) through the same IFD walker; zlib is
     stdlib, so the codec is REAL, not stubbed. See
     ``llm.multimodal.encode_tiff(compression=8)``/``decode_tiff``."""
-    from irio_mapreduce_spark.llm.multimodal import (
-        decode_real_media_features,
-        synthesize_tiff_deflate_media,
-    )
-
-    ids = _media_ids(spark, sf_dir)
-    feats = decode_real_media_features(synthesize_tiff_deflate_media(ids))
-    return feats.select(
-        "media_id", "width", "height", "sum_r", "sum_g", "sum_b"
-    )
+    return _decoded(spark, sf_dir, "tiff_deflate", _IMAGE_SUMS)
 
 
 @register(
@@ -792,16 +717,7 @@ def multimodal_wav_mulaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode dispatch discriminates on the fmt-chunk tag — the
     same-container-different-codec case the audio side of a 100 TB
     corpus hits constantly. See ``llm.multimodal.mulaw_expand``."""
-    from irio_mapreduce_spark.llm.multimodal import (
-        decode_real_media_features,
-        synthesize_mulaw_media,
-    )
-
-    ids = _media_ids(spark, sf_dir)
-    feats = decode_real_media_features(synthesize_mulaw_media(ids))
-    return feats.select(
-        "media_id", "sample_rate", "n_samples", "sum_abs", "n_nonneg"
-    )
+    return _decoded(spark, sf_dir, "mulaw", _AUDIO_STATS)
 
 
 @register(
@@ -837,15 +753,10 @@ def multimodal_real_wav_stereo(
     the stereo-correlation signal audio curation filters on (a near-mono
     file wastes half its bytes; an out-of-phase one breaks downmixing).
     All-integer features; the de-interleave (every other int16) is the
-    entire decode beyond the shared RIFF walk. mapInPandas both ways;
-    see ``llm.multimodal.encode_wav_stereo``/``decode_wav_stereo``."""
-    from irio_mapreduce_spark.llm.multimodal import (
-        decode_stereo_media_features,
-        synthesize_stereo_media,
-    )
-
+    entire decode beyond the shared RIFF walk. See
+    ``llm.multimodal.encode_wav_stereo``/``decode_wav_stereo``."""
     ids = _media_ids(spark, sf_dir)
-    feats = decode_stereo_media_features(synthesize_stereo_media(ids))
+    feats = decode_stereo_media_features(synthesize_media(ids, "stereo"))
     return feats.select(
         "media_id", "sample_rate", "n_frames",
         "l_sum_abs", "r_sum_abs", "lr_dot",
@@ -886,19 +797,9 @@ def multimodal_real_png_adam7(
     the degenerate shapes (width/height below 8 leaves whole passes
     EMPTY — zero scanlines, not zero-width rows — the classic interlace
     decoder bug), 1-pixel axes, and >=2 full 8x8 tiles; the pass table's
-    partition property is pytest-pinned. Same mapInPandas plumbing as
-    every REAL codec entry. See ``llm.multimodal.encode_png_adam7``/
-    ``_png_unfilter_at``."""
-    from irio_mapreduce_spark.llm.multimodal import (
-        decode_real_media_features,
-        synthesize_png_adam7_media,
-    )
-
-    ids = _media_ids(spark, sf_dir)
-    feats = decode_real_media_features(synthesize_png_adam7_media(ids))
-    return feats.select(
-        "media_id", "width", "height", "sum_r", "sum_g", "sum_b"
-    )
+    partition property is pytest-pinned. See
+    ``llm.multimodal.encode_png_adam7``/``_png_unfilter_at``."""
+    return _decoded(spark, sf_dir, "png_adam7", _IMAGE_SUMS)
 
 
 @register(
@@ -937,16 +838,7 @@ def multimodal_real_aiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload. Dispatch sniffs FORM..AIFF magic; features are the mono-WAV
     shape, so the oracle replays the synth formula in closed form
     (``llm.multimodal.decode_aiff``)."""
-    from irio_mapreduce_spark.llm.multimodal import (
-        decode_real_media_features,
-        synthesize_aiff_media,
-    )
-
-    ids = _media_ids(spark, sf_dir)
-    feats = decode_real_media_features(synthesize_aiff_media(ids))
-    return feats.select(
-        "media_id", "sample_rate", "n_samples", "sum_abs", "n_nonneg"
-    )
+    return _decoded(spark, sf_dir, "aiff", _AUDIO_STATS)
 
 
 @register(
@@ -976,13 +868,10 @@ def multimodal_zip_archive(spark: SparkSession, sf_dir: str) -> DataFrame:
     member count, not file count. The reader walks the CENTRAL directory
     (the only authoritative member list — junk between members or
     appended garbage is invisible by construction), the property that
-    makes archive ingest robust to concatenated uploads. Byte-level
-    mapInPandas both ways, scan-linear, payloads never visit the driver;
-    a corrupt member CRC fails the row loudly rather than shipping
+    makes archive ingest robust to concatenated uploads. A corrupt
+    member CRC fails the row loudly rather than shipping
     silent corruption downstream (``llm.multimodal.decode_zip_stored``).
     The oracle replays the member-content formula in closed form."""
-    from irio_mapreduce_spark.llm.multimodal import zip_archive_members
-
     ids = _media_ids(spark, sf_dir)
     return zip_archive_members(ids)
 
@@ -1030,8 +919,6 @@ def multimodal_gif_frame_sample(
     local palettes/interlace/partial canvas reject loudly
     (``llm.multimodal.decode_gif_frames``). Oracle replays pixel and
     palette formulas in closed form."""
-    from irio_mapreduce_spark.llm.multimodal import gif_frame_samples
-
     ids = _media_ids(spark, sf_dir)
     return gif_frame_samples(ids, sample_every=2)
 
@@ -1075,16 +962,5 @@ def multimodal_real_qoi(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoder's every branch — including the index maintenance that INDEX
     hits depend on — is load-bearing for the driver hash. End marker,
     pixel-count overshoot, and trailing bytes are all structural raises.
-    Same mapInPandas synthesize/decode shape as every REAL codec entry:
-    payload bytes never visit the driver, never shuffle. See
-    ``llm.multimodal.encode_qoi``/``decode_qoi``."""
-    from irio_mapreduce_spark.llm.multimodal import (
-        decode_real_media_features,
-        synthesize_qoi_media,
-    )
-
-    ids = _media_ids(spark, sf_dir)
-    feats = decode_real_media_features(synthesize_qoi_media(ids))
-    return feats.select(
-        "media_id", "width", "height", "sum_r", "sum_g", "sum_b"
-    )
+    See ``llm.multimodal.encode_qoi``/``decode_qoi``."""
+    return _decoded(spark, sf_dir, "qoi", _IMAGE_SUMS)

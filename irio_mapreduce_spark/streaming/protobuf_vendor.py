@@ -8,10 +8,15 @@ container ships no ``protobuf`` pip package and installs are off-limits —
 but the host's google-cloud-sdk bundles the PUBLIC, BSD-licensed
 pure-Python protobuf runtime (``platform/google_appengine/google/
 protobuf``, impl ``python``, no C extension). ``ensure_protobuf`` zips
-that bundle (with one guarded patch, below) and ships it with
-``SparkContext.addPyFile`` — the same channel
-``llm.multimodal.ensure_package_shipped`` uses for our own package — and
-prepends it to the driver's ``sys.path``.
+that bundle once per process (with one guarded patch, below) and prepends
+the zip to the driver's ``sys.path``. Shipping is per SparkContext: every
+context gets the zip through ``SparkContext.addPyFile`` (executor task
+workers; the same channel ``llm.multimodal.ensure_package_shipped`` uses
+for our own package) and on its ``environment["PYTHONPATH"]`` (the
+JVM-spawned streaming driver workers). Once the driver imports protobuf
+from that zip, a later context (after ``spark.stop()``) is shipped the
+same zip again; a protobuf that imports from an installed package needs
+no shipping at all.
 
 The one patch: pyspark 4.1.2's generated ``StateMessage_pb2`` is gencode
 6.33.0 while the bundled runtime reports 6.32.0-dev, and protobuf's
@@ -49,6 +54,8 @@ _CANDIDATE_ROOTS = (
     "/usr/local/lib/google-cloud-sdk/platform/google_appengine",
     "/opt/google-cloud-sdk/platform/google_appengine",
 )
+
+_ZIP_NAME = "protobuf_vendor.zip"
 
 _NAMESPACE_INIT = (
     "__path__ = __import__('pkgutil').extend_path(__path__, __name__)\n"
@@ -104,7 +111,7 @@ def _build_zip(root: str) -> str:
     rv = os.path.join(dst, "runtime_version.py")
     with open(rv, "a") as fh:
         fh.write(_VERSION_PATCH)
-    zip_path = os.path.join(build, "protobuf_vendor.zip")
+    zip_path = os.path.join(build, _ZIP_NAME)
     with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
         for dirpath, dirnames, filenames in os.walk(
             os.path.join(build, "google")
@@ -124,22 +131,27 @@ def ensure_protobuf(spark: SparkSession) -> bool:
     Returns True when the import works (already-present or vendored),
     False when no local runtime exists — callers keep their environment
     gate in that case. Never touches the network; memoized per
-    SparkContext so repeated streaming entries pay the zip once.
+    SparkContext, so each context is shipped the zip once and the zip is
+    built once per process.
     """
     return session_memo(("protobuf_vendor",), lambda: _vendor(spark))
 
 
 def _vendor(spark: SparkSession) -> bool:
     try:
-        import google.protobuf  # noqa: F401
-
-        return True
+        import google.protobuf
     except ImportError:
-        pass
-    root = _find_runtime_root()
-    if root is None:
-        return False
-    zip_path = _build_zip(root)
+        root = _find_runtime_root()
+        if root is None:
+            return False
+        zip_path = _build_zip(root)
+    else:
+        origin = google.protobuf.__file__ or ""
+        if _ZIP_NAME not in origin:
+            return True  # an installed runtime: workers import it too
+        # vendored by an earlier context of this process: this context
+        # has not been shipped the zip yet
+        zip_path = origin[: origin.index(_ZIP_NAME) + len(_ZIP_NAME)]
     spark.sparkContext.addPyFile(zip_path)
     if zip_path not in sys.path:
         sys.path.insert(0, zip_path)

@@ -325,3 +325,40 @@ def test_one_session_memo_and_one_barrier_module():
             ):
                 found.append(f"{rel}:{node.lineno} imports llm")
     assert not found, "\n".join(found)
+
+
+def test_one_media_batch_kernel():
+    """Every media stage in ``llm/multimodal.py`` runs through its one
+    batch kernel, which ships the package through ``session_memo``: one
+    ``mapInPandas(`` call in that module, one ``ensure_package_shipped(``
+    call site in the package, and no ``spark.conf.set`` of an internal
+    ``spark.irio_mapreduce.*`` key anywhere in it."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(catalog.__file__).resolve().parent.parent
+    map_calls, ship_calls, conf_keys = [], [], []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        for node in ast.walk(ast.parse(path.read_text(), rel)):
+            if not isinstance(node, ast.Call):
+                continue
+            func = node.func
+            name = getattr(func, "attr", None) or getattr(func, "id", None)
+            where = f"{rel}:{node.lineno}"
+            if name == "mapInPandas" and rel == "llm/multimodal.py":
+                map_calls.append(where)
+            elif name == "ensure_package_shipped":
+                ship_calls.append(where)
+            elif (
+                name == "set"
+                and isinstance(func, ast.Attribute)
+                and getattr(func.value, "attr", None) == "conf"
+                and node.args
+                and isinstance(node.args[0], ast.Constant)
+                and str(node.args[0].value).startswith("spark.irio_mapreduce.")
+            ):
+                conf_keys.append(where)
+    assert len(map_calls) == 1, map_calls
+    assert len(ship_calls) == 1, ship_calls
+    assert not conf_keys, conf_keys

@@ -1600,14 +1600,13 @@ def test_png_real_media_dispatch(spark):
     payload off its own magic bytes."""
     from irio_mapreduce_spark.llm.multimodal import (
         decode_real_media_features,
-        synthesize_png_media,
-        synthesize_real_media,
+        synthesize_media,
     )
 
     ids = spark.range(0, 6).select(F.col("id").alias("media_id"))
-    mixed = synthesize_real_media(ids).unionByName(
-        synthesize_png_media(
-            spark.range(100, 103).select(F.col("id").alias("media_id"))
+    mixed = synthesize_media(ids, "real").unionByName(
+        synthesize_media(
+            spark.range(100, 103).select(F.col("id").alias("media_id")), "png"
         )
     )
     out = decode_real_media_features(mixed).collect()
@@ -1719,12 +1718,12 @@ def test_gif_decoder_rejects_corruption():
 def test_gif_real_media_dispatch(spark):
     from irio_mapreduce_spark.llm.multimodal import (
         decode_real_media_features,
-        synthesize_gif_media,
+        synthesize_media,
     )
 
     ids = spark.range(200, 204).select(F.col("id").alias("media_id"))
     out = {r["media_id"]: r for r in decode_real_media_features(
-        synthesize_gif_media(ids)
+        synthesize_media(ids, "gif")
     ).collect()}
     for mid, r in out.items():
         assert r["kind"] == "image"
@@ -1739,11 +1738,11 @@ def test_resize_real_images_handles_png(spark):
         _png_pixel,
         decode_real_media_features,
         resize_real_images,
-        synthesize_png_media,
+        synthesize_media,
     )
 
     ids = spark.range(300, 303).select(F.col("id").alias("media_id"))
-    resized = resize_real_images(synthesize_png_media(ids), 4, 3)
+    resized = resize_real_images(synthesize_media(ids, "png"), 4, 3)
     out = {r["media_id"]: r for r in decode_real_media_features(resized).collect()}
     for mid, r in out.items():
         assert (r["width"], r["height"]) == (4, 3)
@@ -1805,12 +1804,12 @@ def test_tiff_decoder_rejects_corruption():
 def test_tiff_real_media_dispatch(spark):
     from irio_mapreduce_spark.llm.multimodal import (
         decode_real_media_features,
-        synthesize_tiff_media,
+        synthesize_media,
     )
 
     ids = spark.range(400, 404).select(F.col("id").alias("media_id"))
     out = {r["media_id"]: r for r in decode_real_media_features(
-        synthesize_tiff_media(ids)
+        synthesize_media(ids, "tiff")
     ).collect()}
     for mid, r in out.items():  # mix of II (even) and MM (odd) payloads
         assert r["kind"] == "image"
@@ -1972,14 +1971,13 @@ def test_jpeg_real_media_dispatch(spark):
     from irio_mapreduce_spark.llm.multimodal import (
         _jpeg_block_value,
         decode_real_media_features,
-        synthesize_jpeg_media,
-        synthesize_real_media,
+        synthesize_media,
     )
 
     ids = spark.range(0, 4).select(F.col("id").alias("media_id"))
-    mixed = synthesize_real_media(ids).unionByName(
-        synthesize_jpeg_media(
-            spark.range(200, 204).select(F.col("id").alias("media_id"))
+    mixed = synthesize_media(ids, "real").unionByName(
+        synthesize_media(
+            spark.range(200, 204).select(F.col("id").alias("media_id")), "jpeg"
         )
     )
     rows = {r["media_id"]: r for r in decode_real_media_features(mixed).collect()}
@@ -2501,12 +2499,11 @@ def test_qoi_structural_rejects():
 
 def test_fused_multimodal_pipelines_equal_staged(spark):
     """r12 ADVICE pin: the four FUSED single-crossing pipelines
-    (multimodal.py r12 optimization) duplicate synthesize_real_media's
-    dispatch invariants (even id ⇔ BMP, w=8+mid%9, h=6+mid%7,
-    sr=4000+(mid%5)·1000, n=64+mid%129) as literal copies. A future
-    synthesizer change would silently desynchronize the fused and staged
-    paths; this test pins them DIRECTLY equal, row for row, over an id
-    range covering every (w, h, sr, n) residue class."""
+    (multimodal.py r12 optimization) must equal the staged chains over
+    ``synthesize_media(ids, "real")`` (even id ⇔ BMP, w=8+mid%9,
+    h=6+mid%7, sr=4000+(mid%5)·1000, n=64+mid%129); this test pins them
+    DIRECTLY equal, row for row, over an id range covering every
+    (w, h, sr, n) residue class."""
     from irio_mapreduce_spark.llm.multimodal import (
         decode_real_media_features,
         decode_wav_segments,
@@ -2515,7 +2512,7 @@ def test_fused_multimodal_pipelines_equal_staged(spark):
         resize_real_images,
         resized_real_image_features_fused,
         segment_real_audio,
-        synthesize_real_media,
+        synthesize_media,
         wav_energy_windows,
         wav_energy_windows_fused,
     )
@@ -2528,7 +2525,7 @@ def test_fused_multimodal_pipelines_equal_staged(spark):
             key=repr,
         )
 
-    media = synthesize_real_media(ids)
+    media = synthesize_media(ids, "real")
     # 1. synthesize -> decode
     assert rows(real_media_features_fused(ids)) == rows(
         decode_real_media_features(media)

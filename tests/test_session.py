@@ -1,5 +1,6 @@
-"""The session-scoped memo (``session.session_memo``), without Spark: the
-context token is monkeypatched."""
+"""The session-scoped memo (``session.session_memo``): its policy without
+Spark (the context token monkeypatched), and one memo it backs on the
+shared session."""
 
 from __future__ import annotations
 
@@ -38,3 +39,18 @@ def test_session_memo_builds_once_per_key_and_context(monkeypatch):
     assert builds == ["a", "b", "a2"]
     assert list(session._MEMO) == [(("app-2", 200), "replay", "sf0.01")]
     assert session._MEMO_MISSES["replay"] == 2
+
+
+def test_package_shipped_once_per_context(spark):
+    """Shipping the package is a per-context memo: a media stage built on
+    a second session of the same SparkContext is a ``package_shipped``
+    memo hit, not a second zip."""
+    from pyspark.sql import functions as F
+
+    from irio_mapreduce_spark.llm.multimodal import synthesize_media
+
+    synthesize_media(spark.range(1).select(F.col("id").alias("media_id")), "png")
+    hits = session._MEMO_HITS["package_shipped"]
+    other = spark.newSession()
+    synthesize_media(other.range(1).select(F.col("id").alias("media_id")), "png")
+    assert session._MEMO_HITS["package_shipped"] == hits + 1

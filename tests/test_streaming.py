@@ -841,3 +841,49 @@ def test_protobuf_vendor_zip_contents(spark, tmp_path):
     hits = session._MEMO_HITS["protobuf_vendor"]
     assert pv.ensure_protobuf(spark) is True
     assert session._MEMO_HITS["protobuf_vendor"] == hits + 1
+
+
+def test_protobuf_vendor_ships_to_a_second_context():
+    """A SparkContext started after ``spark.stop()`` in the same process
+    is shipped the vendored zip too: it is among the new context's added
+    files and on its ``environment["PYTHONPATH"]``, where
+    transformWithState's driver worker looks. Runs in a subprocess so the
+    suite's shared session is untouched."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    from irio_mapreduce_spark.streaming import protobuf_vendor as pv
+
+    if pv._find_runtime_root() is None:
+        pytest.skip("no local protobuf runtime to vendor on this host")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = textwrap.dedent(
+        """
+        import importlib.util
+        if importlib.util.find_spec("google") is not None:
+            raise SystemExit("installed")
+        from irio_mapreduce_spark.session import get_spark
+        from irio_mapreduce_spark.streaming.protobuf_vendor import ensure_protobuf
+        for ctx in (1, 2):
+            spark = get_spark(master="local[1]")
+            sc = spark.sparkContext
+            print(ctx, ensure_protobuf(spark),
+                  any(f.endswith("protobuf_vendor.zip") for f in sc.listFiles),
+                  "protobuf_vendor.zip" in sc.environment.get("PYTHONPATH", ""))
+            spark.stop()
+        """
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=root,
+        env={**os.environ, "PYTHONPATH": root},
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    if "installed" in proc.stderr:
+        pytest.skip("google.protobuf is installed: nothing is vendored")
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert proc.stdout.splitlines() == ["1 True True True", "2 True True True"]

@@ -4,15 +4,15 @@ exact (bitwise) compare vs DuckDB oracles. Usage:
 Env: DRIVE_PARTS (shuffle partitions, default 8), DRIVE_CORES (default 8) —
 run with odd values to flush partition-order-dependent results.
 """
-import sys, math
-sys.path.insert(0, "/root/repo")
+import os, sys, math
+# import this script's own checkout, so a copy of the repo checks its own code
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import pandas as pd
 from pyspark.sql import SparkSession
 
 sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 only = sys.argv[2:]
-import os
 spark = (SparkSession.builder.master(f"local[{os.environ.get('DRIVE_CORES', '8')}]")
          .config("spark.sql.shuffle.partitions", os.environ.get("DRIVE_PARTS", "8"))
          .config("spark.ui.showConsoleProgress", "false")
