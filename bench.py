@@ -19,7 +19,11 @@ printed line therefore trims ``queries`` to the SLOWEST entries that fit a
 1800-byte budget (the informative ones for a perf read), and adds
 ``queries_measured`` / ``detail`` fields so the full 100+-entry per-query
 map in ``BENCH_DETAIL.json`` is discoverable. ``value`` is always the total
-over ALL measured entries, not just the printed subset.
+over ALL measured entries, not just the printed subset. The detail file
+also carries ``codegen_compiles``, the Janino class compilations each
+measured entry caused, and ``codegen_compiles_warmup``, the warm-up's
+total, so a codegen-cache eviction shows up as non-zero counts on entries
+the warm-up already ran.
 
 Execution is forced with a ``noop``-format write — full computation, no
 driver-side collect, so the timing measures the distributed plan, not
@@ -82,6 +86,13 @@ def _sf_of(sf_dir: str) -> float:
 def _force(df) -> None:
     """Execute the full plan without collecting results to the driver."""
     df.write.format("noop").mode("overwrite").save()
+
+
+def _compiles(spark) -> int:
+    """Generated classes Janino has compiled in this JVM so far; a delta of
+    0 over an entry means every class it ran came from the codegen cache."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def compact_result(
@@ -153,6 +164,7 @@ def main() -> int:
 
     spark = get_spark(app_name="irio_mapreduce_spark-bench")
     qs = catalog.all_queries()
+    warmup_compiles = _compiles(spark)
 
     # Warm up the JVM / first-read parquet footers so query #1 isn't charged
     # for session startup.
@@ -171,7 +183,13 @@ def main() -> int:
     # (catalog.WINDOW_WARMUP_COUNT, maintained next to FRONT_WINDOW) so
     # a rotation can never silently warm the wrong number of entries
     # (r10 ADVICE.md). ~+30 s of unmeasured wall-clock buys
-    # provenance-clean timings.
+    # provenance-clean timings. Codegen is no longer what stays cold
+    # after it: get_spark sizes the generated-class cache past the
+    # warm-up's classes (815 at sf0.1), so the measured pass reuses them
+    # and recompiles only classes with per-call literals
+    # (``codegen_compiles`` in BENCH_DETAIL.json). The other first-use
+    # costs it absorbs are the pandas-UDF worker pool and the streaming
+    # micro-batch scheduler.
     from irio_mapreduce_spark.queries.catalog import WINDOW_WARMUP_COUNT
 
     _warmed = 0
@@ -258,13 +276,16 @@ def main() -> int:
     except Exception as e:
         print(f"[bench] warmup replay dirs: FAILED {e}", file=sys.stderr)
 
+    warmup_compiles = _compiles(spark) - warmup_compiles
     timings: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     skipped: list[str] = []
     for name, fn in qs.items():
         if name in EXCLUDE:
             skipped.append(name)
             print(f"[bench] {name}: skipped (excluded by design)", file=sys.stderr)
             continue
+        c0 = _compiles(spark)
         t0 = time.monotonic()
         try:
             _force(fn(spark, sf_dir))
@@ -273,6 +294,7 @@ def main() -> int:
         except Exception as e:  # a broken query must not zero the whole bench
             timings[name] = -1.0
             print(f"[bench] {name}: FAILED {e}", file=sys.stderr)
+        compiles[name] = _compiles(spark) - c0
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)
     load_end = _loadavg()
@@ -293,6 +315,8 @@ def main() -> int:
     detail = dict(
         result,
         queries=timings,
+        codegen_compiles=compiles,
+        codegen_compiles_warmup=warmup_compiles,
         excluded=skipped,
         sf_dir=sf_dir,
         n_queries=len(timings),

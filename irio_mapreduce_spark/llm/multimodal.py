@@ -150,17 +150,15 @@ def _fake_decode(payload: bytes, n_features: int) -> list[float]:
 def decode_image_features(
     media: DataFrame,
     n_features: int = 8,
-    batch_rows: int = 256,
     strict: bool = False,
 ) -> DataFrame:
     """Decode + feature-extract stage over ``mapInPandas``.
 
     ``strict=True`` raises ``NotImplementedError`` where a real decoder
     (PIL et al., absent here) would run; the default uses the deterministic
-    fake so tests exercise the full Arrow round-trip. ``batch_rows`` bounds
-    the Arrow batch so a partition of large payloads never materializes at
-    once (maxRecordsPerBatch is the session-level knob; this documents the
-    intent at the operator level).
+    fake so tests exercise the full Arrow round-trip. The session's
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds the Arrow
+    batch, so a partition of large payloads never materializes at once.
     """
 
     def row(mid, payload, meta):

@@ -148,12 +148,14 @@ FRONT_WINDOW: list[str] = [
 
 # How many entries at the HEAD of FRONT_WINDOW are fresh this round
 # (newly added or freshly rotated in) — bench.py runs exactly this many
-# unmeasured warm-up passes so first-use machinery cost (JVM codegen,
-# pandas-worker spawn, streaming scheduler) never lands on the rows a
-# verdict diff scrutinizes. MUST be updated together with FRONT_WINDOW
-# at each rotation (r10 ADVICE.md: a hard-coded literal in bench.py
-# silently warmed the wrong count after rotation). Round 12: the 2
-# deferred-head entries + fresh round-12 entries (grows as each lands).
+# unmeasured warm-up passes so first-use machinery cost never lands on
+# the rows a verdict diff scrutinizes. Its generated classes stay in the
+# codegen cache get_spark sizes, so the measured pass reuses them; the
+# other first-use costs it absorbs are the pandas-worker spawn and the
+# streaming scheduler. MUST be updated together with FRONT_WINDOW at each
+# rotation (r10 ADVICE.md: a hard-coded literal in bench.py silently
+# warmed the wrong count after rotation). Round 12: the 2 deferred-head
+# entries + fresh round-12 entries (grows as each lands).
 WINDOW_WARMUP_COUNT: int = 38
 
 # Entries that did not fit the current 50-slot window and therefore form

@@ -84,6 +84,15 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", driver_mem)
+        # Generated-class cache size (a static conf: the JVM-wide cache is
+        # sized when CodeGenerator is first used, so only the first session
+        # a JVM builds sets it). At Spark's default of 100, interleaving the
+        # PageRank, SSSP and stream-dedup entries evicted each other's
+        # classes: every warm pass re-ran Janino and C1/C2 on 26-71 classes
+        # it had already compiled (one cold pass of the three compiles 117).
+        # At 2000 those warm passes compile 0-2, and bench.py's 38-entry
+        # warm-up (815 classes at sf0.1) fits with room to spare.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         # r12 (guide §4 "heavyweight init once"): daemon variant that
         # pre-imports pandas/pyarrow so every forked Python worker inherits
         # the loaded stack copy-on-write. A stage chaining K mapInPandas

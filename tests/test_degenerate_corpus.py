@@ -10,10 +10,12 @@ from __future__ import annotations
 import datetime
 import tempfile
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
 from irio_mapreduce_spark import queries as catalog
+from tests.conftest import compare_with_oracle
 
 _QS = catalog.all_queries()
 
@@ -22,9 +24,13 @@ EVENTS_SCHEMA = (
     "value double, props string"
 )
 DOCS_SCHEMA = "doc_id long, text string, lang string, source string"
+ORDERS_SCHEMA = (
+    "o_orderkey long, o_custkey long, o_orderstatus string, "
+    "o_totalprice double, o_orderdate timestamp, o_orderpriority string"
+)
 
 
-def _corpus(spark, events_rows, docs_rows):
+def _corpus(spark, events_rows, docs_rows, orders_rows=()):
     d = tempfile.mkdtemp(prefix="degen_corpus_")
     # write µs timestamps like the driver corpus: Spark's default INT96
     # reads back as timestamp[ns] in pyarrow, which would falsely trip
@@ -38,6 +44,9 @@ def _corpus(spark, events_rows, docs_rows):
         spark.createDataFrame(docs_rows, DOCS_SCHEMA).write.mode(
             "overwrite"
         ).parquet(f"{d}/documents.parquet")
+        spark.createDataFrame(list(orders_rows), ORDERS_SCHEMA).write.mode(
+            "overwrite"
+        ).parquet(f"{d}/orders.parquet")
     finally:
         spark.conf.set("spark.sql.parquet.outputTimestampType", saved)
     return d
@@ -148,3 +157,31 @@ def test_graph_operators_on_empty_and_trivial_graphs(spark):
         for r in multi_source_bfs(empty, srcs, "s", "d", "n", 3).collect()
     }
     assert out == {(7, 7): 0}
+
+
+def test_rfm_segments_on_empty_and_single_customer_orders(spark):
+    """``agg_rfm_segments`` bakes the latest order time and the customer
+    count from a driver-side ``.first()`` into plan literals: on an empty
+    ``orders`` table both are NULL/0, and with one customer every quintile
+    has one member. Each case must match the entry's DuckDB oracle."""
+    oracle = catalog.all_oracles()["agg_rfm_segments"]
+
+    def check(orders_rows):
+        d = _corpus(spark, [], [], orders_rows)
+        df = _QS["agg_rfm_segments"](spark, d)
+        con = duckdb.connect()
+        con.execute(
+            "CREATE VIEW orders AS SELECT * FROM "
+            f"read_parquet('{d}/orders.parquet/*.parquet')"
+        )
+        compare_with_oracle(df, con, oracle, name="agg_rfm_segments")
+        return df.collect()
+
+    assert check([]) == []
+    later = _TS + datetime.timedelta(days=3)
+    [r] = check(
+        [(1, 7, "O", 10.005, _TS, "1-URGENT"), (2, 7, "F", 2.5, later, "5-LOW")]
+    )
+    assert (r.r_score, r.f_score, r.m_score, r.n_customers, r.mon_cents) == (
+        1, 1, 1, 1, 1251,
+    )

@@ -1,6 +1,6 @@
 """The session-scoped memo (``session.session_memo``): its policy without
 Spark (the context token monkeypatched), and one memo it backs on the
-shared session."""
+shared session; and the generated-class cache size ``get_spark`` sets."""
 
 from __future__ import annotations
 
@@ -54,3 +54,24 @@ def test_package_shipped_once_per_context(spark):
     other = spark.newSession()
     synthesize_media(other.range(1).select(F.col("id").alias("media_id")), "png")
     assert session._MEMO_HITS["package_shipped"] == hits + 1
+
+
+def test_codegen_cache_keeps_a_warm_working_set(spark):
+    """``get_spark`` sizes Spark's generated-class cache past its default
+    of 100, so a working set of more classes than that compiles once: the
+    second round over the same queries runs Janino on nothing. Each query
+    carries its own int literal, which is inlined into the generated
+    source, so every one is a distinct class."""
+    from pyspark.sql import functions as F
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "2000"
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compile_round():
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        for k in range(1000, 1150):
+            assert spark.range(1).select(F.col("id") * k).collect()[0][0] == 0
+        return metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+    assert compile_round() > 100
+    assert compile_round() == 0
