@@ -23,7 +23,10 @@ over ALL measured entries, not just the printed subset. The detail file
 also carries ``codegen_compiles``, the Janino class compilations each
 measured entry caused, and ``codegen_compiles_warmup``, the warm-up's
 total, so a codegen-cache eviction shows up as non-zero counts on entries
-the warm-up already ran.
+the warm-up already ran. ``stream_triggers`` lists, per entry that drained
+a streaming query, one record per drain from ``streaming.ops.DRAIN_LOG``
+(triggers, input rows, summed ``addBatch`` and ``queryPlanning`` ms), and
+``memo`` the entry's ``session_memo`` hits and misses per memo name.
 
 Execution is forced with a ``noop``-format write — full computation, no
 driver-side collect, so the timing measures the distributed plan, not
@@ -48,6 +51,7 @@ import os
 import re
 import sys
 import time
+from collections import Counter
 from pathlib import Path
 
 _REPO = str(Path(__file__).resolve().parent)
@@ -159,8 +163,10 @@ def main() -> int:
             "record-eligible; timings will carry contention noise",
             file=sys.stderr,
         )
+    from irio_mapreduce_spark import session
     from irio_mapreduce_spark.session import get_spark
     from irio_mapreduce_spark import queries as catalog
+    from irio_mapreduce_spark.streaming.ops import DRAIN_LOG
 
     spark = get_spark(app_name="irio_mapreduce_spark-bench")
     qs = catalog.all_queries()
@@ -222,6 +228,7 @@ def main() -> int:
         import tempfile
 
         from irio_mapreduce_spark import pysource
+        from irio_mapreduce_spark.streaming import drain
 
         pysource.register(spark)
         _wd = tempfile.mkdtemp(prefix="bench_warm_pysrc_")
@@ -229,18 +236,15 @@ def main() -> int:
         _rows.write.format("dirtext").option("path", f"{_wd}/d").mode(
             "append"
         ).save()
-        _q = (
+        drain(
             spark.readStream.format("dirtail")
             .option("path", f"{_wd}/d")
             .load()
-            .select("value")
-            .writeStream.format("dirtext")
-            .option("path", f"{_wd}/o")
-            .option("checkpointLocation", f"{_wd}/ck")
-            .trigger(availableNow=True)
-            .start()
+            .select("value"),
+            "dirtext",
+            path=f"{_wd}/o",
+            checkpoint=f"{_wd}/ck",
         )
-        _q.awaitTermination()
         _force(spark.read.format("dirtext").option("path", f"{_wd}/o").load())
         print(
             f"[bench] warmup pysource runner: {time.monotonic() - _t0:.3f}s "
@@ -279,6 +283,8 @@ def main() -> int:
     warmup_compiles = _compiles(spark) - warmup_compiles
     timings: dict[str, float] = {}
     compiles: dict[str, int] = {}
+    stream_triggers: dict[str, list[dict[str, int]]] = {}
+    memo: dict[str, dict[str, dict[str, int]]] = {}
     skipped: list[str] = []
     for name, fn in qs.items():
         if name in EXCLUDE:
@@ -286,6 +292,9 @@ def main() -> int:
             print(f"[bench] {name}: skipped (excluded by design)", file=sys.stderr)
             continue
         c0 = _compiles(spark)
+        d0 = len(DRAIN_LOG)
+        hits0 = Counter(session._MEMO_HITS)
+        misses0 = Counter(session._MEMO_MISSES)
         t0 = time.monotonic()
         try:
             _force(fn(spark, sf_dir))
@@ -295,6 +304,12 @@ def main() -> int:
             timings[name] = -1.0
             print(f"[bench] {name}: FAILED {e}", file=sys.stderr)
         compiles[name] = _compiles(spark) - c0
+        if len(DRAIN_LOG) > d0:
+            stream_triggers[name] = DRAIN_LOG[d0:]
+        hits = session._MEMO_HITS - hits0
+        misses = session._MEMO_MISSES - misses0
+        if hits or misses:
+            memo[name] = {"hits": dict(hits), "misses": dict(misses)}
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)
     load_end = _loadavg()
@@ -317,6 +332,8 @@ def main() -> int:
         queries=timings,
         codegen_compiles=compiles,
         codegen_compiles_warmup=warmup_compiles,
+        stream_triggers=stream_triggers,
+        memo=memo,
         excluded=skipped,
         sf_dir=sf_dir,
         n_queries=len(timings),

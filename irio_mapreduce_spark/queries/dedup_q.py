@@ -951,7 +951,7 @@ def stream_dedup_index_maintenance(
         index_maintenance_handler,
         streaming_index_params,
     )
-    from irio_mapreduce_spark.streaming.ops import _write_replay_sequenced
+    from irio_mapreduce_spark.streaming.ops import _write_replay_sequenced, drain
 
     docs = read_table(spark, sf_dir, "documents")
     corpus, batch = _ingest_split(docs)
@@ -984,15 +984,11 @@ def stream_dedup_index_maintenance(
         .option("maxFilesPerTrigger", 1)
         .parquet(replay_dir)
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            index_maintenance_handler(idx_dir, "doc_id", "text")
-        )
-        .option("checkpointLocation", os.path.join(run_dir, "ck"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream,
+        index_maintenance_handler(idx_dir, "doc_id", "text"),
+        checkpoint=os.path.join(run_dir, "ck"),
     )
-    q.awaitTermination()
     return (
         spark.read.parquet(os.path.join(idx_dir, "docs"))
         .filter(F.col("seg") != "base")

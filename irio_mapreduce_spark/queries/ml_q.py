@@ -139,7 +139,7 @@ def stream_kmeans_model_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     from irio_mapreduce_spark.llm.clustering import (
         kmeans_stream_round_handler,
     )
-    from irio_mapreduce_spark.streaming.ops import _write_replay_sequenced
+    from irio_mapreduce_spark.streaming.ops import _write_replay_sequenced, drain
 
     emb = read_table(spark, sf_dir, "embeddings")
     sv = emb.select(
@@ -162,15 +162,11 @@ def stream_kmeans_model_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(replay)
     )
     model_dir = os.path.join(run_dir, "model")
-    q = (
-        stream.writeStream.foreachBatch(
-            kmeans_stream_round_handler(model_dir, _K)
-        )
-        .option("checkpointLocation", os.path.join(run_dir, "ck"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream,
+        kmeans_stream_round_handler(model_dir, _K),
+        checkpoint=os.path.join(run_dir, "ck"),
     )
-    q.awaitTermination()
     return (
         spark.read.parquet(os.path.join(model_dir, "asg", "r1"))
         .groupBy(F.col("_c").alias("cluster"))

@@ -22,7 +22,7 @@ from irio_mapreduce_spark.operators.joins import (
 )
 from irio_mapreduce_spark.operators.topk import top_k_per_group
 from irio_mapreduce_spark.queries.catalog import register
-from irio_mapreduce_spark.session import session_memo
+from irio_mapreduce_spark.session import scoped_conf, session_memo
 
 # ---------------------------------------------------------------------------
 # Mergeable sketches (registered first: see queries/__init__.py order note)
@@ -3092,24 +3092,11 @@ def join_skew_aqe_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.adaptive.forceOptimizeSkewedJoin": "true",
         "spark.sql.shuffle.partitions": "8",
     }
-    saved: dict[str, str | None] = {}
-    for key, val in confs.items():
-        try:
-            saved[key] = spark.conf.get(key)
-        except Exception:
-            saved[key] = None
-        spark.conf.set(key, val)
-    try:
+    with scoped_conf(spark, confs):
         rows = out.collect()
         SKEW_JOIN_EXECUTED_PLAN = (
             out._jdf.queryExecution().executedPlan().toString()
         )
-    finally:
-        for key, val in saved.items():
-            if val is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, val)
     return spark.createDataFrame(rows, out.schema)
 
 
@@ -3172,24 +3159,11 @@ def join_runtime_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    saved: dict[str, str | None] = {}
-    for key, val in confs.items():
-        try:
-            saved[key] = spark.conf.get(key)
-        except Exception:
-            saved[key] = None
-        spark.conf.set(key, val)
-    try:
+    with scoped_conf(spark, confs):
         rows = out.collect()
         BLOOM_JOIN_EXECUTED_PLAN = (
             out._jdf.queryExecution().executedPlan().toString()
         )
-    finally:
-        for key, val in saved.items():
-            if val is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, val)
     return spark.createDataFrame(rows, out.schema)
 
 
@@ -3249,24 +3223,11 @@ def agg_aqe_coalesce_partitions(
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64MB",
         "spark.sql.shuffle.partitions": "200",
     }
-    saved: dict[str, str | None] = {}
-    for key, val in confs.items():
-        try:
-            saved[key] = spark.conf.get(key)
-        except Exception:
-            saved[key] = None
-        spark.conf.set(key, val)
-    try:
+    with scoped_conf(spark, confs):
         rows = out.collect()
         AQE_COALESCE_EXECUTED_PLAN = (
             out._jdf.queryExecution().executedPlan().toString()
         )
-    finally:
-        for key, val in saved.items():
-            if val is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, val)
     # The rows are returned UNCONDITIONALLY (r11 ADVICE.md): coalescing
     # is environment- and scale-dependent (if every reducer partition
     # already exceeds the 64MB advisory size, AQE legitimately skips the
@@ -3711,10 +3672,7 @@ def join_strategy_hints(spark: SparkSession, sf_dir: str) -> DataFrame:
     hints are not silently upgraded."""
     global STRATEGY_HINT_PLANS
     t = load_tables(spark, sf_dir, "customer", "nation")
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    saved = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try:
+    with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         outs = []
         plans: dict[str, str] = {}
         for strategy in ("merge", "shuffle_hash", "broadcast"):
@@ -3754,8 +3712,6 @@ def join_strategy_hints(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
         first = joined.schema
         return spark.createDataFrame(outs, first)
-    finally:
-        spark.conf.set(key, saved)
 
 
 @register(
@@ -5659,14 +5615,7 @@ def join_cbo_stats_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.cbo.enabled": "true",
         "spark.sql.autoBroadcastJoinThreshold": str(threshold),
     }
-    saved: dict[str, str | None] = {}
-    for key, val in confs.items():
-        try:
-            saved[key] = spark.conf.get(key)
-        except Exception:
-            saved[key] = None
-        spark.conf.set(key, val)
-    try:
+    with scoped_conf(spark, confs):
         before = build()
         CBO_STATS_PLANS["before"] = (
             before._jdf.queryExecution().sparkPlan().toString()
@@ -5683,12 +5632,6 @@ def join_cbo_stats_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = after.collect()
         schema = after.schema
-    finally:
-        for key, val in saved.items():
-            if val is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, val)
     return spark.createDataFrame(rows, schema)
 
 
@@ -5884,14 +5827,7 @@ def join_cbo_reorder_3way(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.cbo.enabled": "true",
         "spark.sql.cbo.joinReorder.enabled": "true",
     }
-    saved: dict[str, str | None] = {}
-    for key, val in confs.items():
-        try:
-            saved[key] = spark.conf.get(key)
-        except Exception:
-            saved[key] = None
-        spark.conf.set(key, val)
-    try:
+    with scoped_conf(spark, confs):
         before = build()
         CBO_REORDER_PLANS["before"] = (
             before._jdf.queryExecution().optimizedPlan().toString()
@@ -5918,12 +5854,6 @@ def join_cbo_reorder_3way(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = after.collect()
         schema = after.schema
-    finally:
-        for key, val in saved.items():
-            if val is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, val)
     return spark.createDataFrame(rows, schema)
 
 

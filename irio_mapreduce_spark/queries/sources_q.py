@@ -32,7 +32,8 @@ from pyspark.sql import functions as F
 from irio_mapreduce_spark.io import read_table
 from irio_mapreduce_spark.operators.barrier import barrier
 from irio_mapreduce_spark.queries.catalog import register
-from irio_mapreduce_spark.session import session_memo
+from irio_mapreduce_spark.session import scoped_conf, session_memo
+from irio_mapreduce_spark.streaming import drain
 
 
 def _scratch(sf_dir: str, leaf: str) -> str:
@@ -502,14 +503,7 @@ def source_pystream_writer_wordcount(spark: SparkSession, sf_dir: str) -> DataFr
         .load()
         .select("value")
     )
-    q = (
-        stream.writeStream.format("dirtext")
-        .option("path", b)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, "dirtext", path=b, checkpoint=ck)
     lines = spark.read.format("dirtext").option("path", b).load()
     return _top20_wordcount(lines)
 
@@ -902,11 +896,7 @@ def source_rowgroup_stats_pruning(
         return d
 
     d = session_memo(("rowgroup_copies", sf_dir), build_copies)
-    aqe_key = "spark.sql.adaptive.enabled"
-    saved = spark.conf.get(aqe_key)
-    spark.conf.set(aqe_key, "false")
-    try:
-
+    with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
         mx = (
             read_table(spark, sf_dir, "lineitem")
             .agg(F.max("l_orderkey"))
@@ -941,8 +931,6 @@ def source_rowgroup_stats_pruning(
 
         row_s, scan_sorted = probe("sorted")
         row_u, scan_unsorted = probe("unsorted")
-    finally:
-        spark.conf.set(aqe_key, saved)
     if (row_s["n"], row_s["qty_sum"]) != (row_u["n"], row_u["qty_sum"]):
         raise RuntimeError(
             f"layouts disagree on the data: {row_s} vs {row_u}"
@@ -1439,13 +1427,13 @@ def source_parquet_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the raw table — footer-derived must equal data-derived.
     Reference scan contract: DistrStorage.java:137-172 (full-file
     reads; the reference has no footer statistics at all)."""
-    v1_key = "spark.sql.sources.useV1SourceList"
-    push_key = "spark.sql.parquet.aggregatePushdown"
-    saved_v1 = spark.conf.get(v1_key)
-    saved_push = spark.conf.get(push_key)
-    spark.conf.set(v1_key, "")
-    spark.conf.set(push_key, "true")
-    try:
+    with scoped_conf(
+        spark,
+        {
+            "spark.sql.sources.useV1SourceList": "",
+            "spark.sql.parquet.aggregatePushdown": "true",
+        },
+    ):
         df = read_table(spark, sf_dir, "lineitem").agg(
             F.count("*").cast("long").alias("n_rows"),
             F.min("l_orderkey").cast("long").alias("min_okey"),
@@ -1455,9 +1443,6 @@ def source_parquet_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         row = df.collect()[0]
         plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set(v1_key, saved_v1)
-        spark.conf.set(push_key, saved_push)
     if "PushedAggregation: [COUNT(*), MIN(l_orderkey)" not in plan:
         raise RuntimeError(
             "parquet aggregate pushdown did not engage — no "

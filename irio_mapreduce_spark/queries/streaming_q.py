@@ -1,31 +1,30 @@
 """Streaming catalog queries: each entry REALLY RUNS Structured Streaming
-(file-stream replay of ``events`` -> windowed/stateful query -> memory
-sink, availableNow trigger) and returns the drained result, so the
-driver's correctness gate exercises the streaming engine itself — not
-just the batch twin. Results are deterministic (complete/append modes
-over a finite replay), so the same DuckDB oracles as the batch entries
-apply.
+(file-stream replay of ``events`` -> windowed/stateful query -> sink,
+drained by ``streaming.ops.drain``, whose docstring states the drain
+policy: availableNow trigger, 8 state partitions, per-trigger progress)
+and returns the drained result, so the driver's correctness gate
+exercises the streaming engine itself — not just the batch twin. Results
+are deterministic (complete/append modes over a finite replay), so the
+same DuckDB oracles as the batch entries apply.
 """
 
 from __future__ import annotations
 
-import contextlib
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from irio_mapreduce_spark.operators.barrier import barrier
 from irio_mapreduce_spark.queries.catalog import register
-from irio_mapreduce_spark.session import session_memo
+from irio_mapreduce_spark.session import scoped_conf, session_memo
 from irio_mapreduce_spark.streaming import (
     dedup_events,
+    drain,
     stream_stream_interval_join,
     read_events_stream,
     replay_chunks,
     replay_time_ordered,
-    run_to_completion,
     sentinel_events,
     session_rollup,
     sliding_value_rollup,
@@ -34,6 +33,21 @@ from irio_mapreduce_spark.streaming import (
     stream_static_enrich,
     tumbling_value_rollup,
 )
+
+# The RocksDB state-store provider: the 100 TB state backend (bounded
+# executor heap, local-disk spill, incremental checkpoints), and the one
+# transformWithState requires. Entries scope it around their drain.
+_ROCKSDB = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider"
+    )
+}
+# RocksDB with per-commit changelogs in place of full snapshots.
+_ROCKSDB_CHANGELOG = {
+    **_ROCKSDB,
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+}
 
 
 # One materialized replay per (session, sf_dir): the chunking is
@@ -46,24 +60,6 @@ def _replay_dir(spark: SparkSession, sf_dir: str) -> str:
             spark, sf_dir, tempfile.mkdtemp(prefix="stream_q_") + "/events", n_chunks=4
         ),
     )
-
-
-@contextlib.contextmanager
-def _stream_partitions(spark: SparkSession, n: int = 8):
-    """Run a streaming drain with a small state-partition count. Stateful
-    streaming cost scales with ``spark.sql.shuffle.partitions`` — one
-    state store per partition per stateful operator PER TRIGGER (measured
-    on the stream-stream entry at sf0.1: 2.4 s at 8 partitions, 5.8 s at
-    32, 23.4 s at 200, Spark's default). State partitioning should be
-    sized to state volume, not CPU parallelism; these entries' state is
-    tiny. Conf is restored afterwards — it only matters at query START."""
-    key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, saved)
 
 
 def _replayed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -86,12 +82,10 @@ def stream_tumbling_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     out-of-order file replay, complete output mode) — the oracle is the
     same SQL that checks the batch twin, proving stream/batch equivalence
     under the driver's hash, not just in pytest."""
-    name = f"t_sq_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        run_to_completion(
-            tumbling_value_rollup(_replayed_stream(spark, sf_dir)), name, "complete"
-        )
-    return spark.table(name).select(
+    drained = drain(
+        tumbling_value_rollup(_replayed_stream(spark, sf_dir)), output_mode="complete"
+    ).table
+    return drained.select(
         F.date_format("win_start", "yyyy-MM-dd HH:mm:ss").alias("win_start"),
         "event_type",
         "n",
@@ -111,14 +105,10 @@ def stream_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful streaming dedup on (user_id, event_type) across
     micro-batches, then a per-type count of the emitted first-seen rows —
     equals batch DISTINCT regardless of replay order."""
-    name = f"t_sq_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        run_to_completion(
-            dedup_events(_replayed_stream(spark, sf_dir), ["user_id", "event_type"]),
-            name,
-            "append",
-        )
-    return spark.table(name).groupBy("event_type").agg(F.count("*").alias("n_keys"))
+    drained = drain(
+        dedup_events(_replayed_stream(spark, sf_dir), ["user_id", "event_type"])
+    ).table
+    return drained.groupBy("event_type").agg(F.count("*").alias("n_keys"))
 
 
 @register(
@@ -149,10 +139,7 @@ def stream_static_join_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.sum(F.col("value") * F.col("weight")), 2).alias("weighted_value"),
         F.count("*").alias("n"),
     )
-    name = f"t_sq_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        run_to_completion(agg, name, "complete")
-    return spark.table(name)
+    return drain(agg, output_mode="complete").table
 
 @register(
     "stream_custom_stateful_totals",
@@ -184,24 +171,12 @@ def _drain_stateful_totals(
     from pyspark.sql.window import Window
 
     stream = _replayed_stream(spark, sf_dir).filter(F.col("user_id") % 11 == 0)
-    name = f"t_sq_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        if checkpoint is None:
-            run_to_completion(stateful_user_totals(stream), name, "update")
-        else:
-            q = (
-                stateful_user_totals(stream)
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .option("checkpointLocation", checkpoint)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+    drained = drain(
+        stateful_user_totals(stream), output_mode="update", checkpoint=checkpoint
+    ).table
     w = Window.partitionBy("user_id").orderBy(F.col("n").desc())
     return (
-        spark.table(name)
+        drained
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .select("user_id", "total", "n")
@@ -296,11 +271,9 @@ def stream_session_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("user_id") % 101 == 0)
     )
     sessions = session_rollup(stream, gap="30 minutes", watermark="1 minute")
-    name = f"t_sq_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        run_to_completion(sessions, name, "append")
+    drained = drain(sessions).table
     return (
-        spark.table(name)
+        drained
         .filter(F.col("user_id") != _SESSION_SENTINEL)
         .select(
             "user_id",
@@ -352,10 +325,7 @@ def stream_stream_join_attrib(spark: SparkSession, sf_dir: str) -> DataFrame:
             "delay_us"
         ),
     )
-    name = f"t_sq_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        run_to_completion(out, name, "append")
-    return spark.table(name)
+    return drain(out).table
 
 
 @register(
@@ -392,9 +362,7 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay = _replay_dir(spark, sf_dir)
     tdir = _tf.mkdtemp(prefix="cdc_target_")
     ckpt = _tf.mkdtemp(prefix="cdc_ckpt_") + "/cp"
-    with _stream_partitions(spark):
-        ev = read_events_stream(spark, replay)
-        cdc_upsert_drain(ev, tdir, ckpt)
+    cdc_upsert_drain(read_events_stream(spark, replay), tdir, ckpt)
     out = read_cdc_target(spark, tdir)
     return out.select(
         "user_id",
@@ -436,10 +404,9 @@ def stream_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _replay_dir(spark, sf_dir)
     out = _tf.mkdtemp(prefix="eos_out_") + "/t"
     ck = _tf.mkdtemp(prefix="eos_ck_") + "/cp"
-    with _stream_partitions(spark):
-        write_stream_parquet_exactly_once(
-            read_events_stream(spark, d, max_files_per_trigger=2), out, ck
-        )
+    write_stream_parquet_exactly_once(
+        read_events_stream(spark, d, max_files_per_trigger=2), out, ck
+    )
     # Simulate the retried batch: re-run the final batch's idempotent
     # write (same rows, same partition, overwrite). Barrier first —
     # overwriting a path that is also the read source is illegal.
@@ -485,31 +452,13 @@ def stream_rocksdb_state_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
     import tempfile as _tf
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        saved = spark.conf.get(key)
-    except Exception:
-        saved = None
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        ck = _tf.mkdtemp(prefix="rocks_ck_") + "/cp"
+    ck = _tf.mkdtemp(prefix="rocks_ck_") + "/cp"
+    with scoped_conf(spark, _ROCKSDB):
         out = _drain_stateful_totals(spark, sf_dir, checkpoint=ck)
-        ssts = _glob.glob(
-            _os.path.join(ck, "state", "**", "*.sst"), recursive=True
+    if not _glob.glob(_os.path.join(ck, "state", "**", "*.sst"), recursive=True):
+        raise RuntimeError(
+            "RocksDB provider set but no SST files in state checkpoint"
         )
-        if not ssts:
-            raise RuntimeError(
-                "RocksDB provider set but no SST files in state checkpoint"
-            )
-    finally:
-        if saved is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, saved)
     return out
 
 
@@ -553,28 +502,11 @@ def stream_tws_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _replayed_stream(spark, sf_dir).filter(
         F.col("user_id") % 11 == 0
     )
-    name = f"t_sq_{uuid.uuid4().hex[:8]}"
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        saved = spark.conf.get(key)
-    except Exception:
-        saved = None
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        with _stream_partitions(spark):
-            run_to_completion(tws_user_stats(stream), name, "update")
-    finally:
-        if saved is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, saved)
+    with scoped_conf(spark, _ROCKSDB):
+        drained = drain(tws_user_stats(stream), output_mode="update").table
     w = Window.partitionBy("user_id").orderBy(F.col("n").desc())
     return (
-        spark.table(name)
+        drained
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .select("user_id", "n", "total", "max_value")
@@ -644,10 +576,7 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = read_events_stream(spark, d, max_files_per_trigger=1)
     rollup = tumbling_value_rollup(stream, watermark="1 hour")
-    name = f"t_sq_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        run_to_completion(rollup, name, "append")
-    return spark.table(name).select(
+    return drain(rollup).table.select(
         F.date_format("win_start", "yyyy-MM-dd HH:mm:ss").alias("win_start"),
         "event_type",
         "n",
@@ -676,12 +605,10 @@ def stream_sliding_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     out-of-order replay, complete mode. Same oracle as the batch twin
     ``events_sliding_window``, the last built-in window shape that was
     pytest-equivalence-only."""
-    name = f"t_sq_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        run_to_completion(
-            sliding_value_rollup(_replayed_stream(spark, sf_dir)), name, "complete"
-        )
-    return spark.table(name).select(
+    drained = drain(
+        sliding_value_rollup(_replayed_stream(spark, sf_dir)), output_mode="complete"
+    ).table
+    return drained.select(
         F.date_format("win_start", "yyyy-MM-dd HH:mm:ss").alias("win_start"),
         "n",
         "total_value",
@@ -739,10 +666,7 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r.event_id").alias("buy_id"),
         F.col("l.user_id").alias("user_id"),
     )
-    name = f"t_sq_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        run_to_completion(joined, name, "append")
-    return spark.table(name).filter(F.col("user_id") != sentinel_user)
+    return drain(joined).table.filter(F.col("user_id") != sentinel_user)
 
 
 @register(
@@ -796,10 +720,7 @@ def stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r.event_id").alias("buy_id"),
         F.coalesce(F.col("l.user_id"), F.col("r.user_id")).alias("user_id"),
     )
-    name = f"t_sq_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        run_to_completion(joined, name, "append")
-    return spark.table(name).filter(F.col("user_id") != sentinel_user)
+    return drain(joined).table.filter(F.col("user_id") != sentinel_user)
 
 
 @register(
@@ -824,22 +745,14 @@ def stream_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the reader exposes one row per state entry with
     partition-parallel scans of the HDFS/RocksDB store files; state
-    partition count is sized by ``_stream_partitions`` (state volume, not
-    CPU count) exactly as the other stateful entries."""
+    partition count is ``drain``'s (state volume, not CPU count) exactly
+    as the other stateful entries."""
     import tempfile as _tf
 
     stream = _replayed_stream(spark, sf_dir).filter(F.col("user_id") % 13 == 0)
     agg = stream.groupBy("event_type").agg(F.sum("user_id").alias("s"))
     ck = _tf.mkdtemp(prefix="ssread_q_") + "/ck"
-    with _stream_partitions(spark):
-        q = (
-            agg.writeStream.format("noop")
-            .outputMode("update")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(agg, "noop", output_mode="update", checkpoint=ck)
     st = spark.read.format("statestore").load(ck)
     return st.select(
         F.col("key.event_type").alias("event_type"),
@@ -903,11 +816,9 @@ def stream_dynamic_session_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(F.count("*").cast("long").alias("n_events"))
     )
-    name = f"t_sq_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        run_to_completion(sessions, name, "append")
+    drained = drain(sessions).table
     return (
-        spark.table(name)
+        drained
         .filter(F.col("user_id") != _SESSION_SENTINEL)
         .select(
             "user_id",
@@ -972,12 +883,10 @@ def stream_holt_linear_fixed_point(spark: SparkSession, sf_dir: str) -> DataFram
             "event_id",
         )
     )
-    name = f"t_sq_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        run_to_completion(stateful_holt_linear(stream), name, "update")
+    drained = drain(stateful_holt_linear(stream), output_mode="update").table
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
-        spark.table(name)
+        drained
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .select(
@@ -1026,11 +935,9 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
 
     stream = side().union(side())
     deduped = dedup_events(stream, ["event_id"], watermark="7 days")
-    name = f"t_sq_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        run_to_completion(deduped, name, "append")
+    drained = drain(deduped).table
     return (
-        spark.table(name)
+        drained
         .groupBy("event_type")
         .agg(F.count("*").cast("long").alias("n_events"))
     )
@@ -1137,9 +1044,7 @@ def stream_asof_nearest_attrib(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = joined.groupBy(
         F.window("pts", "1 day"), "purchase_id", "user_id"
     ).agg(F.min("cand").alias("w"))
-    name = f"t_sq_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        run_to_completion(agg, name, "append")
+    drained = drain(agg).table
     # Sentinel exclusion and projection happen BATCH-SIDE on the drained
     # table: a `purchase_id >= 0` filter inside the streaming plan gets
     # pushed below the EventTimeWatermark node (it doesn't reference the
@@ -1149,7 +1054,7 @@ def stream_asof_nearest_attrib(spark: SparkSession, sf_dir: str) -> DataFrame:
     # flush. Found empirically (57/115 rows); the drained-table filter
     # is semantically identical and plan-safe.
     return (
-        spark.table(name)
+        drained
         .filter(F.col("purchase_id") >= 0)
         .select(
             "purchase_id",
@@ -1211,27 +1116,10 @@ def stream_tws_session_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value",
         )
     )
-    name = f"t_sq_{uuid.uuid4().hex[:8]}"
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        saved = spark.conf.get(key)
-    except Exception:
-        saved = None
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        with _stream_partitions(spark):
-            run_to_completion(tws_session_windows(stream), name, "append")
-    finally:
-        if saved is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, saved)
+    with scoped_conf(spark, _ROCKSDB):
+        drained = drain(tws_session_windows(stream)).table
     return (
-        spark.table(name)
+        drained
         .filter(F.col("user_id") != _SESSION_SENTINEL)
         .select(
             "user_id",
@@ -1281,41 +1169,12 @@ def stream_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(cents.cast("long")).alias("cents"),
         F.max("user_id").alias("max_uid"),
     )
-    name = f"t_sq_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        q = (
-            observed.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    progress = list(q.recentProgress)
-    # recentProgress is a ring capped at
-    # spark.sql.streaming.numRecentProgressUpdates (default 100); if the
-    # replay ever grows past it, early batches' metrics silently vanish
-    # and the totals would be wrong. The sink cross-check below would
-    # catch it, but fail loud and NAMED here first. Detect ACTUAL
-    # eviction (last batchId + 1 != retained count), not ring fullness —
-    # a run of exactly `retain` batches with nothing dropped is legal.
-    if progress:
-        last = progress[-1]
-        last_bid = int(
-            last["batchId"] if isinstance(last, dict) else last.batchId
-        )
-        if last_bid + 1 != len(progress):
-            raise RuntimeError(
-                f"recentProgress retained {len(progress)} entries but the "
-                f"last batchId is {last_bid} — early observedMetrics were "
-                "evicted past the retention cap; raise "
-                "spark.sql.streaming.numRecentProgressUpdates or use a "
-                "StreamingQueryListener"
-            )
+    # drain() raises if the progress ring dropped a trigger, so the metrics
+    # summed below cover every micro-batch.
+    drained, progress = drain(observed)
     n_total, cents_total, uid_max = 0, 0, None
     for pr in progress:
-        om = pr["observedMetrics"] if isinstance(pr, dict) else pr.observedMetrics
-        m = (om or {}).get("inflight")
+        m = (pr.observedMetrics or {}).get("inflight")
         if m is None:
             continue
         n_total += int(m["n"])
@@ -1325,7 +1184,7 @@ def stream_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             if uid_max is None
             else max(uid_max, int(m["max_uid"]))
         )
-    sink_rows = spark.table(name).count()
+    sink_rows = drained.count()
     if sink_rows != n_total:
         raise RuntimeError(
             f"observed row metric {n_total} != drained sink count "
@@ -1388,10 +1247,7 @@ def stream_stream_left_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("click_id"),
         F.col("user_id").alias("user_id"),
     )
-    name = f"t_sq_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        run_to_completion(joined, name, "append")
-    return spark.table(name).filter(F.col("user_id") != sentinel_user)
+    return drain(joined).table.filter(F.col("user_id") != sentinel_user)
 
 
 @register(
@@ -1449,10 +1305,7 @@ def stream_stream_right_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r.event_id").alias("buy_id"),
         F.col("r.user_id").alias("user_id"),
     )
-    name = f"t_sq_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        run_to_completion(joined, name, "append")
-    return spark.table(name).filter(F.col("user_id") != sentinel_user)
+    return drain(joined).table.filter(F.col("user_id") != sentinel_user)
 
 
 @register(
@@ -1512,11 +1365,9 @@ def stream_windowed_distinct_users(
     counted = firsts.groupBy("win").agg(
         F.count("*").cast("long").alias("dau")
     )
-    name = f"t_sq_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        run_to_completion(counted, name, "append")
+    drained = drain(counted).table
     return (
-        spark.table(name)
+        drained
         .select(
             F.date_format(F.col("win.start"), "yyyy-MM-dd").alias("day"),
             "dau",
@@ -1562,28 +1413,11 @@ def stream_tws_map_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _replayed_stream(spark, sf_dir).filter(
         F.col("user_id") % 13 == 0
     )
-    name = f"t_sq_{uuid.uuid4().hex[:8]}"
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        saved = spark.conf.get(key)
-    except Exception:
-        saved = None
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        with _stream_partitions(spark):
-            run_to_completion(tws_per_type_totals(stream), name, "update")
-    finally:
-        if saved is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, saved)
+    with scoped_conf(spark, _ROCKSDB):
+        drained = drain(tws_per_type_totals(stream), output_mode="update").table
     w = Window.partitionBy("user_id", "event_type").orderBy(F.desc("n"))
     return (
-        spark.table(name)
+        drained
         .withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") == 1)
         .select(
@@ -1652,28 +1486,11 @@ def stream_tws_list_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value",
         )
     )
-    name = f"t_sq_{uuid.uuid4().hex[:8]}"
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        saved = spark.conf.get(key)
-    except Exception:
-        saved = None
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        with _stream_partitions(spark):
-            run_to_completion(tws_topk_recent(stream), name, "update")
-    finally:
-        if saved is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, saved)
+    with scoped_conf(spark, _ROCKSDB):
+        drained = drain(tws_topk_recent(stream), output_mode="update").table
     w = Window.partitionBy("user_id").orderBy(F.desc("n"))
     return (
-        spark.table(name)
+        drained
         .withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") == 1)
         .select("user_id", "n", "recent_cents", "recent_ids")
@@ -1717,6 +1534,23 @@ def stream_checkpoint_kill_resume(
     fence through the checkpoint. Unwatermarked dedup state is the
     right shape for a finite replay; the eviction-bearing variant is
     `stream_dedup_within_watermark` / `stream_windowed_distinct_users`."""
+    return _resumed_dedup(spark, sf_dir, 3, 3, "stream_ckpt_")[0]
+
+
+def _resumed_dedup(
+    spark: SparkSession,
+    sf_dir: str,
+    modulus: int,
+    incarnations: int,
+    prefix: str,
+) -> tuple[DataFrame, list[list], str]:
+    """Shared body of the kill-and-resume entries. The ``events`` rows with
+    ``event_id % modulus == 0`` are cut into ``incarnations`` chunks, each
+    later chunk RE-SENDING the previous chunk's rows; chunk ``i`` is moved
+    into a live directory and drained by incarnation ``i``, a NEW query
+    resumed on the one shared checkpoint, into one parquet sink, behind a
+    key-only dedup. Returns the per-type rollup of the sink, each
+    incarnation's per-trigger progress, and the checkpoint directory."""
     import glob as _glob
     import os
     import shutil
@@ -1726,42 +1560,39 @@ def stream_checkpoint_kill_resume(
 
     base = (
         read_table(spark, sf_dir, "events")
-        .filter(F.col("event_id") % 3 == 0)
+        .filter(F.col("event_id") % modulus == 0)
         .select("event_id", "ts", "event_type", "value")
     )
-    g = F.expr("(event_id div 3) % 3").cast("int")
+    g = F.expr(f"(event_id div {modulus}) % {incarnations}").cast("int")
     chunked = base.withColumn("_chunk", g).unionAll(
-        # chunk 1 re-sends chunk 0's rows, chunk 2 re-sends chunk 1's —
-        # the duplicates only a RECOVERED dedup state can drop
-        base.withColumn("_chunk", g + 1).filter(F.col("_chunk") <= 2)
+        # chunk i+1 re-sends chunk i's rows — the duplicates only a
+        # RECOVERED dedup state can drop
+        base.withColumn("_chunk", g + 1).filter(F.col("_chunk") <= incarnations - 1)
     )
-    run_dir = tempfile.mkdtemp(prefix="stream_ckpt_")
+    run_dir = tempfile.mkdtemp(prefix=prefix)
     staging = os.path.join(run_dir, "staging")
-    _write_replay_sequenced(chunked, "_chunk", 3, staging)
+    _write_replay_sequenced(chunked, "_chunk", incarnations, staging)
     live = os.path.join(run_dir, "live")
     sink = os.path.join(run_dir, "sink")
     ck = os.path.join(run_dir, "ck")
     os.makedirs(live, exist_ok=True)
     schema = spark.read.parquet(staging).schema
-    with _stream_partitions(spark):
-        for i in range(3):
-            # one new file appears, then a NEW query incarnation resumes
-            # from the shared checkpoint and drains it
-            for f in sorted(_glob.glob(os.path.join(staging, f"chunk{i:03d}_*"))):
-                shutil.move(f, os.path.join(live, os.path.basename(f)))
-            q = (
-                spark.readStream.schema(schema)
-                .parquet(live)
-                .dropDuplicates(["event_id"])
-                .writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ck)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    return (
+    progress = []
+    for i in range(incarnations):
+        # one new file appears, then a NEW query incarnation resumes from
+        # the shared checkpoint and drains it
+        for f in sorted(_glob.glob(os.path.join(staging, f"chunk{i:03d}_*"))):
+            shutil.move(f, os.path.join(live, os.path.basename(f)))
+        stream = spark.readStream.schema(schema).parquet(live)
+        progress.append(
+            drain(
+                stream.dropDuplicates(["event_id"]),
+                "parquet",
+                path=sink,
+                checkpoint=ck,
+            ).progress
+        )
+    rollup = (
         spark.read.parquet(sink)
         .groupBy("event_type")
         .agg(
@@ -1772,6 +1603,7 @@ def stream_checkpoint_kill_resume(
             F.sum("event_id").cast("long").alias("id_sum"),
         )
     )
+    return rollup, progress, ck
 
 
 @register(
@@ -1852,16 +1684,12 @@ def stream_foreachbatch_dual_sink(
         finally:
             b.unpersist()
 
-    q = (
+    stream = (
         spark.readStream.schema("event_id long, event_type string, cents long")
         .option("maxFilesPerTrigger", 1)
         .parquet(replay)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", os.path.join(run_dir, "ck"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
+    drain(stream, handle, checkpoint=os.path.join(run_dir, "ck"))
     main = (
         spark.read.parquet(*_glob.glob(os.path.join(main_dir, "b*")))
         .groupBy("event_type")
@@ -1914,7 +1742,8 @@ def stream_rocksdb_changelog_resume(
     incarnation 2 — drops the cross-incarnation duplicates; the r12
     3-incarnation form spent ~1/3 of its 9.7 s driver-bench cost on the
     third stream start/drain without certifying anything the second
-    resume had not) with the RocksDB provider: a broken changelog
+    resume had not; tests/test_streaming.py keeps the 3-incarnation
+    chain) with the RocksDB provider: a broken changelog
     replay (lost state → doubled rows) or a re-admitted batch flips the
     driver hash. The entry raises unless ``*.changelog`` files actually
     landed in the state checkpoint — a silently-ignored conf is a red,
@@ -1925,70 +1754,9 @@ def stream_rocksdb_changelog_resume(
     base rows — chunk-count-invariant)."""
     import glob as _glob
     import os
-    import shutil
 
-    from irio_mapreduce_spark.io import read_table
-    from irio_mapreduce_spark.streaming.ops import _write_replay_sequenced
-
-    base = (
-        read_table(spark, sf_dir, "events")
-        .filter(F.col("event_id") % 5 == 0)
-        .select("event_id", "ts", "event_type", "value")
-    )
-    g = F.expr("(event_id div 5) % 2").cast("int")
-    chunked = base.withColumn("_chunk", g).unionAll(
-        # chunk 1 re-sends chunk 0's rows — duplicates only a RECOVERED
-        # dedup state (snapshot + changelog replay) can drop
-        base.withColumn("_chunk", g + 1).filter(F.col("_chunk") <= 1)
-    )
-    run_dir = tempfile.mkdtemp(prefix="stream_rocks_changelog_")
-    staging = os.path.join(run_dir, "staging")
-    _write_replay_sequenced(chunked, "_chunk", 2, staging)
-    live = os.path.join(run_dir, "live")
-    sink = os.path.join(run_dir, "sink")
-    ck = os.path.join(run_dir, "ck")
-    os.makedirs(live, exist_ok=True)
-    schema = spark.read.parquet(staging).schema
-    confs = {
-        "spark.sql.streaming.stateStore.providerClass": (
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
-        ),
-        "spark.sql.streaming.stateStore.rocksdb."
-        "changelogCheckpointing.enabled": "true",
-    }
-    saved: dict[str, str | None] = {}
-    for key, val in confs.items():
-        try:
-            saved[key] = spark.conf.get(key)
-        except Exception:
-            saved[key] = None
-        spark.conf.set(key, val)
-    try:
-        with _stream_partitions(spark):
-            for i in range(2):
-                for f in sorted(
-                    _glob.glob(os.path.join(staging, f"chunk{i:03d}_*"))
-                ):
-                    shutil.move(f, os.path.join(live, os.path.basename(f)))
-                q = (
-                    spark.readStream.schema(schema)
-                    .parquet(live)
-                    .dropDuplicates(["event_id"])
-                    .writeStream.format("parquet")
-                    .option("path", sink)
-                    .option("checkpointLocation", ck)
-                    .outputMode("append")
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-    finally:
-        for key, val in saved.items():
-            if val is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, val)
+    with scoped_conf(spark, _ROCKSDB_CHANGELOG):
+        out, _, ck = _resumed_dedup(spark, sf_dir, 5, 2, "stream_rocks_changelog_")
     changelogs = _glob.glob(
         os.path.join(ck, "state", "**", "*.changelog"), recursive=True
     )
@@ -1997,14 +1765,4 @@ def stream_rocksdb_changelog_resume(
             "changelog checkpointing enabled but no *.changelog files in "
             "the state checkpoint"
         )
-    return (
-        spark.read.parquet(sink)
-        .groupBy("event_type")
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long"))
-            .cast("long")
-            .alias("cents"),
-            F.sum("event_id").cast("long").alias("id_sum"),
-        )
-    )
+    return out

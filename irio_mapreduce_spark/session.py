@@ -23,11 +23,15 @@ partition coalescing and skew-join splitting, and shuffle partitions
 should be ~2-3x total executor cores.
 
 Per-session state (replay fixtures written once per context, py4j-built
-``Column`` trees) is kept in one memo, :func:`session_memo`.
+``Column`` trees) is kept in one memo, :func:`session_memo`. A runtime conf
+an entry needs for one step is set and restored by :func:`scoped_conf`, the
+only place besides the builder and ``io.read_table``'s ``nanosAsLong``
+contract that writes session conf.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 from collections import Counter
 
@@ -168,3 +172,22 @@ def session_memo(key: tuple, build):
         _MEMO.pop(k, None)
     value = _MEMO[full] = build()
     return value
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, pairs: dict[str, str]):
+    """Set each runtime conf in ``pairs`` for the ``with`` block, then put
+    back what was there: the old value, or, for a key that had none, unset
+    it so the default applies again. Restores on an exception too (the form
+    of PySpark's ``SQLTestUtils.sql_conf``)."""
+    old = {key: spark.conf.get(key, None) for key in pairs}
+    for key, value in pairs.items():
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        for key, value in old.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)

@@ -17,11 +17,11 @@ explicit watermark parameter rather than defaulting to unbounded state.
 from irio_mapreduce_spark.streaming.ops import (  # noqa: F401
     cdc_upsert_drain,
     dedup_events,
+    drain,
     read_cdc_target,
     read_events_stream,
     replay_chunks,
     replay_time_ordered,
-    run_to_completion,
     sentinel_events,
     session_rollup,
     sliding_value_rollup,

@@ -2,16 +2,52 @@
 transform set. All transforms are batch/stream-polymorphic (unified
 Dataset model) — the streaming guarantees come from how they're run
 (watermark + output mode + trigger), not from different logic.
+
+How a query is run is one policy, :func:`drain`, the only code in the
+package that starts a streaming query:
+
+* **availableNow.** The trigger processes the backlog present at start in
+  ``maxFilesPerTrigger``-sized micro-batches, then stops: a finite,
+  deterministic run to completion, the engine's Batch.
+* **8 state partitions.** Stateful streaming cost scales with
+  ``spark.sql.shuffle.partitions``: one state store per partition per
+  stateful operator PER TRIGGER. On the stream-stream entry at sf0.1 a
+  drain took 2.4 s at 8 partitions, 5.8 s at 32 and 23.4 s at 200 (Spark's
+  default). State partitioning is sized to state volume, not CPU
+  parallelism, and this engine's state is small, so every drain runs at
+  :data:`STATE_PARTITIONS` whatever the host's core count; foreachBatch
+  bodies run on the query's session and so at the same count.
+* **Confs are read at query start.** The query clones the session's conf
+  when it starts (a resumed checkpoint keeps the partition count its
+  offset log recorded), so ``drain`` scopes its conf, and a caller scopes
+  its own (a state-store provider, say) around the ``drain`` call, with
+  ``session.scoped_conf``; the session is unchanged afterwards.
+* **Progress retention is checked.** ``drain`` returns the query's
+  ``recentProgress``, one entry per trigger, read once after termination
+  (no listener, which would need the py4j callback server). That list is
+  a ring bounded by ``spark.sql.streaming.numRecentProgressUpdates``; when
+  the first retained ``batchId`` is later than the first batch the run
+  executed, triggers were dropped and :class:`ProgressEvicted` is raised
+  rather than returning partial per-trigger data. The first batch of a
+  run on a resumed checkpoint is one past its last commit, not 0.
+
+Each drain appends a compact record (triggers, input rows, ``addBatch``
+and ``queryPlanning`` ms) to :data:`DRAIN_LOG`, which ``bench.py`` reads
+per entry.
 """
 
 from __future__ import annotations
 
 import os
+import uuid
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.listener import StreamingQueryProgress
 
 from irio_mapreduce_spark.io import read_table
+from irio_mapreduce_spark.session import scoped_conf
 
 # ---------------------------------------------------------------------------
 # Source / sink
@@ -157,19 +193,87 @@ def read_events_stream(
     )
 
 
-def run_to_completion(df: DataFrame, table_name: str, output_mode: str) -> None:
-    """Drain all available input through a memory sink (trigger
-    availableNow: processes the backlog in maxFilesPerTrigger-sized
-    micro-batches, then stops — the deterministic test harness for
-    streaming queries)."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+# State partitions of every drain; the module docstring gives the measured
+# reason (state volume, not cores).
+STATE_PARTITIONS = 8
+
+# One record per drained query, appended by drain(); bench.py reports the
+# records each catalog entry added.
+DRAIN_LOG: list[dict[str, int]] = []
+
+
+class ProgressEvicted(RuntimeError):
+    """The query ran more triggers than its progress ring retained."""
+
+
+class Drained(NamedTuple):
+    table: DataFrame | None  # the drained rows, for a memory sink
+    progress: list[StreamingQueryProgress]  # one entry per trigger
+
+
+def _first_batch_id(checkpoint: str | None) -> int:
+    """The batchId a query started on ``checkpoint`` runs first: one past
+    the last batch in its commit log, 0 for a fresh checkpoint."""
+    commits = os.path.join(checkpoint or "", "commits")
+    if not checkpoint or not os.path.isdir(commits):
+        return 0
+    return max((int(f) + 1 for f in os.listdir(commits) if f.isdigit()), default=0)
+
+
+def drain(
+    df: DataFrame,
+    sink: str | Callable[[DataFrame, int], None] = "memory",
+    *,
+    output_mode: str = "append",
+    path: str | None = None,
+    checkpoint: str | None = None,
+) -> Drained:
+    """Run the streaming ``df`` to completion under the module's drain
+    policy and return its per-trigger progress.
+
+    ``sink`` is a sink format (``"memory"``, ``"noop"``, a file format
+    written under ``path``) or a foreachBatch function. For ``"memory"``
+    the drained rows come back as ``Drained.table``. ``checkpoint`` names
+    the checkpoint directory; a query resumed on it continues from its
+    last committed batch."""
+    spark = df.sparkSession
+    writer = df.writeStream.outputMode(output_mode)
+    name = None
+    if callable(sink):
+        writer = writer.foreachBatch(sink)
+    else:
+        writer = writer.format(sink)
+        if sink == "memory":
+            name = f"t_drain_{uuid.uuid4().hex[:8]}"
+            writer = writer.queryName(name)
+        if path is not None:
+            writer = writer.option("path", path)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    first = _first_batch_id(checkpoint)
+    with scoped_conf(
+        spark, {"spark.sql.shuffle.partitions": str(STATE_PARTITIONS)}
+    ):
+        q = writer.trigger(availableNow=True).start()
+        q.awaitTermination()
+    progress = q.recentProgress
+    if progress and progress[0].batchId > first:
+        raise ProgressEvicted(
+            f"query progress starts at batchId {progress[0].batchId}, but "
+            f"the run began at {first}: triggers were evicted past "
+            "spark.sql.streaming.numRecentProgressUpdates"
+        )
+    DRAIN_LOG.append(
+        {
+            "triggers": len(progress),
+            "input_rows": sum(p.numInputRows for p in progress),
+            "add_batch_ms": sum(p.durationMs.get("addBatch", 0) for p in progress),
+            "query_planning_ms": sum(
+                p.durationMs.get("queryPlanning", 0) for p in progress
+            ),
+        }
     )
-    q.awaitTermination()
+    return Drained(spark.table(name) if name else None, progress)
 
 
 # ---------------------------------------------------------------------------
@@ -433,13 +537,7 @@ def write_stream_parquet_exactly_once(
             os.path.join(out_dir, f"_batch_id={batch_id}")
         )
 
-    q = (
-        df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(df, write_batch, checkpoint=checkpoint_dir)
 
 
 def stateful_change_intervals(events: DataFrame) -> DataFrame:
@@ -553,13 +651,7 @@ def cdc_upsert_drain(
             _os.path.join(target_dir, f"v={batch_id}")
         )
 
-    q = (
-        events.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(events, merge_batch, checkpoint=checkpoint_dir)
 
 
 def _committed_versions(target_dir: str) -> list[int]:

@@ -13,16 +13,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from irio_mapreduce_spark.io import read_table
+from irio_mapreduce_spark.session import scoped_conf
 
 SF_DIR = "/root/testdata/sf0.01"
 
 
 @pytest.fixture()
 def no_broadcast(spark):
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    yield
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+        yield
 
 
 def test_bucketed_join_has_no_exchange(spark, no_broadcast):

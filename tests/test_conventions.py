@@ -327,6 +327,62 @@ def test_one_session_memo_and_one_barrier_module():
     assert not found, "\n".join(found)
 
 
+def test_one_streaming_drain_and_one_conf_scope():
+    """Every streaming query is started by ``streaming/ops.drain``: no
+    ``writeStream``, ``awaitTermination`` or ``trigger(availableNow=...)``
+    anywhere else in the package. Session conf is written only by
+    ``session.py`` (the builder and ``scoped_conf``) and by ``io.py``'s
+    session-wide ``nanosAsLong`` contract: no ``conf.unset(`` outside
+    ``session.py``, no ``conf.set(`` outside those two modules."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(catalog.__file__).resolve().parent.parent
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        tree = ast.parse(path.read_text(), rel)
+        inside_drain = {
+            id(node)
+            for fn in tree.body
+            if rel == "streaming/ops.py"
+            and isinstance(fn, ast.FunctionDef)
+            and fn.name == "drain"
+            for node in ast.walk(fn)
+        }
+        for node in ast.walk(tree):
+            where = f"{rel}:{getattr(node, 'lineno', '?')}"
+            if id(node) in inside_drain:
+                continue
+            if isinstance(node, ast.Attribute) and node.attr in (
+                "writeStream",
+                "awaitTermination",
+            ):
+                found.append(f"{where} {node.attr}")
+            elif (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "trigger"
+                and any(k.arg == "availableNow" for k in node.keywords)
+            ):
+                found.append(f"{where} trigger(availableNow=...)")
+            elif (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("set", "unset")
+                and getattr(node.func.value, "attr", None) == "conf"
+                and rel != "session.py"
+                and not (
+                    rel == "io.py"
+                    and node.func.attr == "set"
+                    and getattr(node.args[0], "value", None)
+                    == "spark.sql.legacy.parquet.nanosAsLong"
+                )
+            ):
+                found.append(f"{where} conf.{node.func.attr}(")
+    assert not found, "\n".join(found)
+
+
 def test_one_media_batch_kernel():
     """Every media stage in ``llm/multimodal.py`` runs through its one
     batch kernel, which ships the package through ``session_memo``: one

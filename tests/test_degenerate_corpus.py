@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from irio_mapreduce_spark import queries as catalog
+from irio_mapreduce_spark.session import scoped_conf
 from tests.conftest import compare_with_oracle
 
 _QS = catalog.all_queries()
@@ -35,9 +36,9 @@ def _corpus(spark, events_rows, docs_rows, orders_rows=()):
     # write µs timestamps like the driver corpus: Spark's default INT96
     # reads back as timestamp[ns] in pyarrow, which would falsely trip
     # read_table's TIMESTAMP(NANOS) conversion path
-    saved = spark.conf.get("spark.sql.parquet.outputTimestampType")
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    try:
+    with scoped_conf(
+        spark, {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}
+    ):
         spark.createDataFrame(events_rows, EVENTS_SCHEMA).write.mode(
             "overwrite"
         ).parquet(f"{d}/events.parquet")
@@ -47,8 +48,6 @@ def _corpus(spark, events_rows, docs_rows, orders_rows=()):
         spark.createDataFrame(list(orders_rows), ORDERS_SCHEMA).write.mode(
             "overwrite"
         ).parquet(f"{d}/orders.parquet")
-    finally:
-        spark.conf.set("spark.sql.parquet.outputTimestampType", saved)
     return d
 
 

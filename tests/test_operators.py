@@ -9,6 +9,7 @@ import datetime
 from pyspark.sql import functions as F
 
 from irio_mapreduce_spark.io import read_table
+from irio_mapreduce_spark.session import scoped_conf
 from tests.conftest import local_df
 from irio_mapreduce_spark.operators.aggregates import salted_agg
 from irio_mapreduce_spark.operators.joins import (
@@ -832,16 +833,14 @@ def test_mad_outliers_python_reference(spark):
             eid += 1
             rows.append((eid, ts, eid, t, v, "{}"))
     d = tempfile.mkdtemp(prefix="mad_")
-    saved = spark.conf.get("spark.sql.parquet.outputTimestampType")
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    try:
+    with scoped_conf(
+        spark, {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}
+    ):
         local_df(spark, 
             rows,
             "event_id long, ts timestamp, user_id long, event_type string, "
             "value double, props string",
         ).write.mode("overwrite").parquet(f"{d}/events.parquet")
-    finally:
-        spark.conf.set("spark.sql.parquet.outputTimestampType", saved)
     out = {
         r.event_type: r
         for r in catalog.all_queries()["stats_mad_outliers"](spark, d).collect()

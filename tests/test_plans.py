@@ -12,6 +12,7 @@ import io
 import pytest
 
 from irio_mapreduce_spark import queries as catalog
+from irio_mapreduce_spark.session import scoped_conf
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -112,14 +113,7 @@ def test_aqe_splits_skewed_join_partition(spark):
         "spark.sql.adaptive.forceOptimizeSkewedJoin": "true",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    saved = {}
-    for k, v in confs.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, confs):
         left = spark.range(300000).select(
             F.when(F.col("id") % 100 < 95, F.lit(1))
             .otherwise(F.col("id") % 100)
@@ -135,12 +129,6 @@ def test_aqe_splits_skewed_join_partition(spark):
         executed = j._jdf.queryExecution().executedPlan().toString()
         assert "skew=true" in executed, executed
         assert "skewed" in executed, executed
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_q8_broadcasts_all_dimensions(spark, qs):
@@ -255,14 +243,7 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark):
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.optimizer.runtimeFilter.semiJoinReduction.enabled": "false",
     }
-    saved = {}
-    for k, v in confs.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, confs):
         li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
         o = spark.read.parquet(f"{SF_DIR}/orders.parquet").filter(
             F.col("o_orderpriority") == "1-URGENT"
@@ -274,12 +255,6 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark):
         [row] = j.collect()
         dim = o.count()
         assert row["count"] > 0 and dim > 0
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_bloom_prefilter_broadcasts_word_table_and_dup_set(spark, qs):

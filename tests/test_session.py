@@ -1,10 +1,13 @@
 """The session-scoped memo (``session.session_memo``): its policy without
 Spark (the context token monkeypatched), and one memo it backs on the
-shared session; and the generated-class cache size ``get_spark`` sets."""
+shared session; the generated-class cache size ``get_spark`` sets; and the
+runtime-conf scope ``session.scoped_conf``."""
 
 from __future__ import annotations
 
 from collections import Counter
+
+import pytest
 
 from irio_mapreduce_spark import session
 
@@ -75,3 +78,19 @@ def test_codegen_cache_keeps_a_warm_working_set(spark):
 
     assert compile_round() > 100
     assert compile_round() == 0
+
+
+def test_scoped_conf_restores_on_error_and_unsets_fresh_keys(spark):
+    """Inside the block both confs hold the scoped values; after an
+    exception raised in it, a key that had a value gets it back and a key
+    that had none is unset, so its default applies again."""
+    held, fresh = "spark.sql.shuffle.partitions", "spark.sql.streaming.numRecentProgressUpdates"
+    before = spark.conf.get(held)
+    assert spark.conf.get(fresh, None) is None
+    with pytest.raises(ZeroDivisionError):
+        with session.scoped_conf(spark, {held: "3", fresh: "7"}):
+            assert (spark.conf.get(held), spark.conf.get(fresh)) == ("3", "7")
+            1 / 0
+    assert spark.conf.get(held) == before
+    assert spark.conf.get(fresh, None) is None
+    assert spark.conf.get(fresh) == "100"

@@ -16,10 +16,10 @@ from pyspark.sql import functions as F
 
 from irio_mapreduce_spark.streaming import (
     dedup_events,
+    drain,
     read_events_stream,
     replay_chunks,
     replay_time_ordered,
-    run_to_completion,
     session_rollup,
     sliding_value_rollup,
     stateful_user_totals,
@@ -27,23 +27,10 @@ from irio_mapreduce_spark.streaming import (
     tumbling_value_rollup,
 )
 
+from irio_mapreduce_spark.queries.streaming_q import _ROCKSDB
+from irio_mapreduce_spark.session import scoped_conf
+
 SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module", autouse=True)
-def _small_state_partitions(spark):
-    """r13 (VERDICT #1 suite wall-clock): every drain in this module ran
-    at the session default of 32 shuffle partitions — 32 state stores per
-    stateful operator PER TRIGGER, the exact cost the catalog entries
-    avoid with ``streaming_q._stream_partitions`` (8). State partitioning
-    is sized to state volume, not CPU count, and these corpora are tiny;
-    results are partitioning-invariant (that is what the equivalence
-    tests assert). Scoped to the module and restored after."""
-    key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(key)
-    spark.conf.set(key, "8")
-    yield
-    spark.conf.set(key, saved)
 
 
 def rows_set(df, cols):
@@ -69,10 +56,8 @@ def ordered_dir(spark, tmp_path_factory):
 def test_tumbling_window_batch_equivalence(spark, unordered_dir):
     static = spark.read.parquet(unordered_dir)
     stream = read_events_stream(spark, unordered_dir)
-    run_to_completion(tumbling_value_rollup(stream), "t_tumbling", "complete")
-    got = rows_set(
-        spark.table("t_tumbling"), ["win_start", "event_type", "n", "total_value"]
-    )
+    drained = drain(tumbling_value_rollup(stream), output_mode="complete").table
+    got = rows_set(drained, ["win_start", "event_type", "n", "total_value"])
     want = rows_set(
         tumbling_value_rollup(static), ["win_start", "event_type", "n", "total_value"]
     )
@@ -82,8 +67,8 @@ def test_tumbling_window_batch_equivalence(spark, unordered_dir):
 def test_sliding_window_batch_equivalence(spark, unordered_dir):
     static = spark.read.parquet(unordered_dir)
     stream = read_events_stream(spark, unordered_dir)
-    run_to_completion(sliding_value_rollup(stream), "t_sliding", "complete")
-    got = rows_set(spark.table("t_sliding"), ["win_start", "n", "total_value"])
+    drained = drain(sliding_value_rollup(stream), output_mode="complete").table
+    got = rows_set(drained, ["win_start", "n", "total_value"])
     want = rows_set(sliding_value_rollup(static), ["win_start", "n", "total_value"])
     assert got == want and got
 
@@ -97,9 +82,9 @@ def test_session_window_batch_equivalence(spark, ordered_dir):
     sessions = session_rollup(
         stream.filter(F.col("user_id") % 7 == 0), watermark="1 minute"
     )
-    run_to_completion(sessions, "t_sessions", "append")
+    drained = drain(sessions).table
     got = rows_set(
-        spark.table("t_sessions").filter(F.col("user_id") != SENTINEL_USER),
+        drained.filter(F.col("user_id") != SENTINEL_USER),
         ["user_id", "session_start", "n_events", "total_value"],
     )
     want = rows_set(
@@ -112,13 +97,8 @@ def test_session_window_batch_equivalence(spark, ordered_dir):
 def test_stateful_dedup_batch_equivalence(spark, unordered_dir):
     static = spark.read.parquet(unordered_dir)
     stream = read_events_stream(spark, unordered_dir)
-    run_to_completion(
-        dedup_events(stream, ["user_id", "event_type"]), "t_dedup", "append"
-    )
-    assert (
-        spark.table("t_dedup").count()
-        == static.select("user_id", "event_type").distinct().count()
-    )
+    drained = drain(dedup_events(stream, ["user_id", "event_type"])).table
+    assert drained.count() == static.select("user_id", "event_type").distinct().count()
 
 
 def test_stream_static_join_batch_equivalence(spark, unordered_dir):
@@ -131,8 +111,8 @@ def test_stream_static_join_batch_equivalence(spark, unordered_dir):
     enriched = stream_static_enrich(stream, dim, "event_type").groupBy(
         "event_type"
     ).agg(F.round(F.sum(F.col("value") * F.col("weight")), 2).alias("weighted"))
-    run_to_completion(enriched, "t_enrich", "complete")
-    got = rows_set(spark.table("t_enrich"), ["event_type", "weighted"])
+    drained = drain(enriched, output_mode="complete").table
+    got = rows_set(drained, ["event_type", "weighted"])
     want = rows_set(
         stream_static_enrich(static, dim, "event_type")
         .groupBy("event_type")
@@ -149,12 +129,12 @@ def test_custom_stateful_operator_running_totals(spark, unordered_dir):
     aggregate over the whole replay."""
     static = spark.read.parquet(unordered_dir)
     stream = read_events_stream(spark, unordered_dir)
-    run_to_completion(stateful_user_totals(stream), "t_state", "update")
+    drained = drain(stateful_user_totals(stream), output_mode="update").table
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id").orderBy(F.col("n").desc())
     finals = (
-        spark.table("t_state")
+        drained
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
     )
@@ -200,12 +180,8 @@ def test_watermark_drops_late_data(spark, tmp_path):
     ).coalesce(1).write.mode("append").parquet(d)
 
     stream = read_events_stream(spark, d)
-    run_to_completion(
-        tumbling_value_rollup(stream, watermark="1 hour"), "t_late", "append"
-    )
-    emitted = {
-        (r.win_start, r.n) for r in spark.table("t_late").collect()
-    }
+    drained = drain(tumbling_value_rollup(stream, watermark="1 hour")).table
+    emitted = {(r.win_start, r.n) for r in drained.collect()}
     day1_win = datetime.datetime(2024, 1, 1, 0, 0, 0)
     # Streaming: day-1 window closed with 10 events; the late 11th dropped.
     assert (day1_win, 10) in emitted
@@ -238,8 +214,8 @@ def test_stream_stream_join_batch_equivalence(spark, ordered_dir):
         F.col("l.event_id").alias("click_id"),
         F.col("r.event_id").alias("buy_id"),
     )
-    run_to_completion(joined, "t_ssj", "append")
-    got = rows_set(spark.table("t_ssj"), ["click_id", "buy_id"])
+    drained = drain(joined).table
+    got = rows_set(drained, ["click_id", "buy_id"])
 
     bc, bb = split(static)
     want = rows_set(
@@ -327,16 +303,14 @@ def test_stream_stream_left_outer_join_batch_equivalence(spark, tmp_path_factory
         F.col("r.event_id").alias("buy_id"),
     ]
     sc, sb = split(read_events_stream(spark, d))
-    run_to_completion(
+    drained = drain(
         stream_stream_interval_join(
             sc, sb, "user_id", "6 hours",
             left_watermark="1 hour", right_watermark="1 hour", how="left_outer",
-        ).select(*out_cols),
-        "t_ssj_outer",
-        "append",
-    )
+        ).select(*out_cols)
+    ).table
     got = rows_set(
-        spark.table("t_ssj_outer").filter(F.col("click_id") >= 0),
+        drained.filter(F.col("click_id") >= 0),
         ["click_id", "buy_id"],
     )
 
@@ -362,43 +336,19 @@ def test_rocksdb_state_store_provider(spark, unordered_dir, tmp_path):
     import glob
     import os
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        saved = spark.conf.get(key)
-    except Exception:
-        saved = None
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        ck = str(tmp_path / "ck_rocks")
-        q = (
+    ck = str(tmp_path / "ck_rocks")
+    with scoped_conf(spark, _ROCKSDB):
+        drained = drain(
             dedup_events(
                 read_events_stream(spark, unordered_dir),
                 ["user_id", "event_type"],
-            )
-            .writeStream.format("memory")
-            .queryName("t_rocksdb_dedup")
-            .outputMode("append")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        static = spark.read.parquet(unordered_dir)
-        assert (
-            spark.table("t_rocksdb_dedup").count()
-            == static.select("user_id", "event_type").distinct().count()
-        )
-        ssts = glob.glob(os.path.join(ck, "state", "**", "*.sst"), recursive=True)
-        assert ssts, "RocksDB provider set but no SST files in state checkpoint"
-    finally:
-        if saved is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, saved)
+            ),
+            checkpoint=ck,
+        ).table
+    static = spark.read.parquet(unordered_dir)
+    assert drained.count() == static.select("user_id", "event_type").distinct().count()
+    ssts = glob.glob(os.path.join(ck, "state", "**", "*.sst"), recursive=True)
+    assert ssts, "RocksDB provider set but no SST files in state checkpoint"
 
 
 def test_streaming_curation_pipeline(spark, tmp_path):
@@ -455,9 +405,9 @@ def test_stateful_change_intervals_batch_equivalence(spark, ordered_dir):
     stream = read_events_stream(spark, ordered_dir).filter(
         F.col("user_id") != SENTINEL_USER
     )
-    run_to_completion(stateful_change_intervals(stream), "t_scd2", "append")
+    drained = drain(stateful_change_intervals(stream)).table
     got = rows_set(
-        spark.table("t_scd2"),
+        drained,
         ["user_id", "event_type", "valid_from_us", "valid_to_us", "change_seq"],
     )
 
@@ -605,44 +555,19 @@ def test_tws_user_stats_env_gate(spark):
     # protobuf importable (native or vendored): run end-to-end on a file
     # replay. transformWithState requires the RocksDB state provider.
     import tempfile
-    import uuid
 
     d = tempfile.mkdtemp(prefix="tws_") + "/in"
     events.write.json(d)
     stream = spark.readStream.schema("user_id long, value double").json(d)
-    name = f"t_tws_{uuid.uuid4().hex[:8]}"
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        saved = spark.conf.get(key)
-    except Exception:
-        saved = None
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            tws_user_stats(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if saved is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, saved)
+    with scoped_conf(spark, _ROCKSDB):
+        drained = drain(tws_user_stats(stream), output_mode="update").table
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("user_id").orderBy(F.col("n").desc())
     out = {
         r.user_id: (r.n, r.total, r.max_value)
-        for r in spark.table(name)
+        for r in drained
         .withColumn("_rn", F.row_number().over(w))
         .filter("_rn = 1")
         .collect()
@@ -693,14 +618,10 @@ def test_dedup_within_watermark_state_expires(spark, tmp_path):
     ).coalesce(1).write.mode("append").parquet(d)
 
     stream = read_events_stream(spark, d)  # one file per micro-batch
-    run_to_completion(
-        dedup_events(stream, ["event_id"], watermark="1 hour"),
-        "t_dedup_wm",
-        "append",
-    )
+    drained = drain(dedup_events(stream, ["event_id"], watermark="1 hour")).table
     from collections import Counter
 
-    emitted = Counter(r.event_id for r in spark.table("t_dedup_wm").collect())
+    emitted = Counter(r.event_id for r in drained.collect())
     # within-horizon duplicate of id 2 suppressed; id 1's state expired
     # (watermark 19:00 > 11:00 expiry) so its duplicate re-emitted
     assert emitted == {1: 2, 2: 1, 50: 1, 60: 1}, emitted
@@ -887,3 +808,99 @@ def test_protobuf_vendor_ships_to_a_second_context():
         pytest.skip("google.protobuf is installed: nothing is vendored")
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert proc.stdout.splitlines() == ["1 True True True", "2 True True True"]
+
+
+def test_drain_reports_one_progress_entry_per_trigger(spark, unordered_dir):
+    """``drain`` returns one progress entry per trigger: with one replay
+    file per trigger, one entry per file, batchIds 0, 1, ... in order, and
+    input rows summing to the source's row count; the same totals land in
+    ``DRAIN_LOG``."""
+    import glob
+    import os
+
+    from irio_mapreduce_spark.streaming import ops
+
+    n_files = len(glob.glob(os.path.join(unordered_dir, "*.parquet")))
+    logged = len(ops.DRAIN_LOG)
+    progress = drain(read_events_stream(spark, unordered_dir), "noop").progress
+    assert [p.batchId for p in progress] == list(range(n_files))
+    n_rows = spark.read.parquet(unordered_dir).count()
+    assert sum(p.numInputRows for p in progress) == n_rows
+    [record] = ops.DRAIN_LOG[logged:]
+    assert (record["triggers"], record["input_rows"]) == (n_files, n_rows)
+
+
+@pytest.mark.parametrize("session_partitions", ["3", "5"])
+def test_drain_state_partitions_ignore_session_count(
+    spark, unordered_dir, tmp_path, session_partitions
+):
+    """A stateful drain writes exactly 8 state partitions whatever the
+    session's shuffle-partition count, and leaves that count as it was."""
+    import os
+
+    from irio_mapreduce_spark.streaming.ops import STATE_PARTITIONS
+
+    key = "spark.sql.shuffle.partitions"
+    ck = str(tmp_path / "ck")
+    with scoped_conf(spark, {key: session_partitions}):
+        drain(
+            dedup_events(
+                read_events_stream(spark, unordered_dir), ["user_id", "event_type"]
+            ),
+            "noop",
+            checkpoint=ck,
+        )
+        assert spark.conf.get(key) == session_partitions
+    parts = sorted(int(p) for p in os.listdir(f"{ck}/state/0") if p.isdigit())
+    assert STATE_PARTITIONS == 8
+    assert parts == list(range(8))
+
+
+def test_drain_raises_when_progress_ring_drops_triggers(spark, unordered_dir):
+    """A ring of 2 progress entries cannot hold a 4-trigger replay: the
+    drain fails loudly instead of returning the last two triggers."""
+    import glob
+    import os
+
+    from irio_mapreduce_spark.streaming.ops import ProgressEvicted
+
+    assert len(glob.glob(os.path.join(unordered_dir, "*.parquet"))) == 4
+    with scoped_conf(spark, {"spark.sql.streaming.numRecentProgressUpdates": "2"}):
+        with pytest.raises(ProgressEvicted, match="but the run began at 0"):
+            drain(read_events_stream(spark, unordered_dir), "noop")
+
+
+def test_rocksdb_changelog_resume_three_incarnations(spark):
+    """The RocksDB changelog path over ONE checkpoint as three query
+    incarnations (the catalog entry runs two): changelog files land, each
+    incarnation resumes at the batch after the previous one's last, not at
+    0, and the deduplicated sink equals the batch DISTINCT of the rows."""
+    import glob
+    import os
+
+    from irio_mapreduce_spark.io import read_table
+    from irio_mapreduce_spark.queries.streaming_q import (
+        _ROCKSDB_CHANGELOG,
+        _resumed_dedup,
+    )
+
+    with scoped_conf(spark, _ROCKSDB_CHANGELOG):
+        out, progress, ck = _resumed_dedup(spark, SF_DIR, 5, 3, "changelog3_")
+    assert glob.glob(os.path.join(ck, "state", "**", "*.changelog"), recursive=True)
+    assert len(progress) == 3 and all(progress)
+    assert progress[0][0].batchId == 0
+    for prev, cur in zip(progress, progress[1:]):
+        assert cur[0].batchId == prev[-1].batchId + 1
+    rows = (
+        read_table(spark, SF_DIR, "events")
+        .filter(F.col("event_id") % 5 == 0)
+        .select("event_id", "ts", "event_type", "value")
+        .distinct()
+    )
+    want = rows.groupBy("event_type").agg(
+        F.count("*").cast("long").alias("n"),
+        F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long")).cast("long").alias("cents"),
+        F.sum("event_id").cast("long").alias("id_sum"),
+    )
+    cols = ["event_type", "n", "cents", "id_sum"]
+    assert rows_set(out, cols) == rows_set(want, cols)
