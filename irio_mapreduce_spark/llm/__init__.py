@@ -7,8 +7,9 @@ LLM-data pipeline actually runs, Spark-first:
 * ``dedup``      — exact (sha2 + keep-first), MinHash-LSH (banded, never
                    all-pairs), SimHash (byte-banded hamming), exact n-gram
                    Jaccard (prefix-filtered), cross-corpus n-gram
-                   containment (benchmark decontamination), connected-
-                   components duplicate-cluster resolution.
+                   containment (benchmark decontamination). Duplicate-
+                   cluster resolution is ``operators.graph.
+                   connected_components`` over the pair graph.
 * ``similarity`` — embedding cosine top-k: brute-force baseline, multi-table
                    RP-LSH, IVF (sample-trained coarse quantizer); embedding-
                    cosine near-dup dedup.

@@ -383,43 +383,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def simhash64(token_col: Column) -> Column:
-    """64-bit SimHash of a token array as a single Column expression.
-
-    For each bit i, sum +1/-1 over tokens according to bit i of
-    ``xxhash64(token)``, then take the sign. Near-identical documents
-    differ in O(edit) bits.
-
-    COST CAVEAT: higher-order ``aggregate`` is interpreted, not codegen'd,
-    and the 64 per-bit aggregates each re-evaluate the token hashing
-    (projection collapse) — fine for ad-hoc use on small frames; the
-    corpus-scale path is :func:`simhash_signatures` (explode + grouped
-    conditional sums: hash computed once, whole-stage codegen, parallel).
-    """
-    h = F.transform(token_col, lambda t: F.xxhash64(t))
-
-    def _vote(i: int) -> Column:
-        # 2-arg merge lambda built via closure: adding a default parameter
-        # would change the arity PySpark dispatches on.
-        return F.aggregate(
-            h,
-            F.lit(0).cast("long"),
-            lambda acc, x: acc
-            + F.when(F.shiftright(x, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
-        )
-
-    bit_cols = []
-    for i in range(64):
-        vote = _vote(i)
-        bit_cols.append(
-            F.when(vote > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(F.lit(0).cast("long"))
-        )
-    out = bit_cols[0]
-    for c in bit_cols[1:]:
-        out = out.bitwiseOR(c)
-    return out
-
-
 def simhash_signatures(
     df: DataFrame, id_col: str, feature_col: Column
 ) -> DataFrame:
@@ -509,241 +472,6 @@ def simhash_near_pairs(
         .withColumn("hamming", F.bit_count(F.col("_h1").bitwiseXOR(F.col("_h2"))))
         .filter(F.col("hamming") <= max_hamming)
         .select("id1", "id2", "hamming")
-    )
-
-
-def connected_components(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    nodes: DataFrame | None = None,
-    id_col: str = "id",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Connected components of a (near-)duplicate pair graph: every node is
-    labeled with the minimum node id reachable from it. This is the
-    cluster-resolution step every dedup pipeline needs after pair
-    generation — pairs say "these two are dups", components say "this is
-    the cluster, keep ``id == component`` as its representative".
-
-    Algorithm: iterative min-label propagation. Each round, a node's label
-    becomes the min of its own label and its neighbors' labels — one
-    equi-join plus one groupBy (two shuffles) per round, converging in
-    O(graph diameter) rounds. Duplicate graphs are unions of near-cliques
-    (members of a cluster pair with most other members), so the diameter —
-    and the round count — is small; for adversarially long paths the
-    large-star/small-star reformulation (Kiveris et al., "Connected
-    Components in MapReduce and Beyond", SoCC'14) converges in O(log^2 n)
-    rounds with the same per-round join shape. At 100 TB each round is a
-    self-contained shuffle on the (long, long) label table — no state ever
-    exceeds one row per node plus the edge list.
-
-    Iteration mechanics that matter in Spark: every round's result goes
-    behind a :func:`~irio_mapreduce_spark.operators.barrier.barrier`.
-    Without it the logical plan doubles in depth per round (each join
-    references the previous round's full plan twice: once for
-    propagation, once for the convergence check), and optimizer time —
-    not the data — becomes the bottleneck. The edge list is materialized
-    once and reused every round.
-
-    Convergence is verified, not assumed: a round with zero improved labels
-    ends the loop; hitting ``max_iter`` without converging raises (a silent
-    partial propagation would merge some clusters and not others —
-    wrong answers, not degraded performance).
-    """
-    e = edges.select(
-        F.col(src).cast("long").alias("_u"), F.col(dst).cast("long").alias("_v")
-    )
-    e = e.union(e.select(F.col("_v").alias("_u"), F.col("_u").alias("_v")))
-    if nodes is not None:
-        # An explicit node set is a contract on BOTH output and graph:
-        # edges touching ids outside it are dropped (otherwise a foreign
-        # endpoint would propagate back in via the neighbor union and the
-        # result would contain ids the caller never declared).
-        n = nodes.select(F.col(id_col).cast("long").alias("_n")).distinct()
-        e = (
-            e.join(n.withColumnRenamed("_n", "_u"), "_u", "left_semi")
-            .join(n.withColumnRenamed("_n", "_v"), "_v", "left_semi")
-        )
-    e = barrier(e.distinct())
-    if nodes is None:
-        n = e.select(F.col("_u").alias("_n")).distinct()
-    labels = barrier(n.select("_n", F.col("_n").alias("_c")))
-    for _ in range(max_iter):
-        nbr = e.join(labels, e["_u"] == labels["_n"]).select(
-            F.col("_v").alias("_n"), "_c"
-        )
-        new = barrier(
-            labels.unionByName(nbr).groupBy("_n").agg(F.min("_c").alias("_c"))
-        )
-        improved = (
-            new.join(labels.withColumnRenamed("_c", "_old"), "_n")
-            .filter(F.col("_c") < F.col("_old"))
-            .limit(1)
-            .count()
-        )
-        # `new` is materialized and the convergence probe has run: the
-        # superseded round's blocks can be freed immediately instead of
-        # accumulating one label-table copy per round in the block manager
-        # until ContextCleaner GC.
-        free_checkpoint(labels)
-        labels = new
-        if improved == 0:
-            # The edge checkpoint is internal-only; the returned frame
-            # references only the final labels checkpoint (whose lifetime
-            # the caller owns).
-            free_checkpoint(e)
-            return labels.select(
-                F.col("_n").alias(id_col), F.col("_c").alias("component")
-            )
-    free_checkpoint(e)
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds — "
-        "the graph has a longer path than min-label propagation should see "
-        "on a dedup workload; raise max_iter or switch to large-star/small-star"
-    )
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    nodes: DataFrame | None = None,
-    id_col: str = "id",
-    max_iter: int = 40,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star edge
-    rewriting (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — the adversarial-diameter upgrade over
-    :func:`connected_components`. Min-label propagation needs O(diameter)
-    rounds, which is fine for dedup graphs (unions of near-cliques) but
-    degrades to O(n) rounds on path-shaped graphs; star contraction
-    converges in O(log^2 n) rounds REGARDLESS of diameter, with the same
-    per-round shape: one groupBy (min per node) + one equi-join on node id,
-    state never exceeding one row per edge.
-
-    * large-star: for each node u, link every neighbor v > u to
-      m = min(N(u) ∪ {u}) — strictly-larger neighbors hop toward the
-      current local minimum without ever creating an edge to a larger id
-      (monotone, so edge ids only shrink; termination is structural).
-    * small-star: orient every edge (max, min); for each u, link u and all
-      its smaller neighbors to m = min(N(u)) — contracts each partial star
-      one level.
-
-    The alternation converges to a fixpoint where the edge set IS the
-    component map: every non-root node carries exactly one edge to its
-    component's minimum id. Convergence is detected when a round leaves the
-    canonical (min, max) edge set unchanged (checked with ``exceptAll`` in
-    BOTH directions on the (long, long) pairs — cheap, and exact even with
-    duplicate-free invariants violated). Same checkpoint discipline as
-    ``connected_components``: one barrier per round (plan depth would
-    otherwise double per round), superseded rounds freed immediately.
-
-    Returns one row per node: (``id_col``, ``component``) with component =
-    min node id of the component — bit-identical contract to
-    :func:`connected_components` (equivalence is property-tested on random
-    graphs and on the real dup-pair graph in tests/test_llm.py).
-    """
-    e = edges.select(
-        F.col(src).cast("long").alias("_u"), F.col(dst).cast("long").alias("_v")
-    ).filter(F.col("_u").isNotNull() & F.col("_v").isNotNull())
-    if nodes is not None:
-        n = nodes.select(F.col(id_col).cast("long").alias("_n")).distinct()
-        e = (
-            e.join(n.withColumnRenamed("_n", "_u"), "_u", "left_semi")
-            .join(n.withColumnRenamed("_n", "_v"), "_v", "left_semi")
-        )
-    else:
-        n = (
-            e.select(F.col("_u").alias("_n"))
-            .union(e.select(F.col("_v").alias("_n")))
-            .distinct()
-        )
-    # Canonical (small, large) orientation; self-loops carry no information.
-    cur = barrier(
-        e.filter(F.col("_u") != F.col("_v"))
-        .select(
-            F.least("_u", "_v").alias("_v"), F.greatest("_u", "_v").alias("_u")
-        )
-        .select("_u", "_v")
-        .distinct()
-    )
-    n = barrier(n)
-
-    # r12 (guide §2.4/§1.2): each round used to cost ~6 jobs — two
-    # groupBy-min + join pairs (each min re-attached to its edges via an
-    # equi-join), TWO eager per-round checkpoints (`large` had to be
-    # materialized because the small-star referenced it twice), and a
-    # 2-job exceptAll convergence probe. The min-per-node is now a window
-    # over the same partitioning (one exchange, no re-attach join), the
-    # small-star emits attach- and root-edges in ONE pass (explode of a
-    # 2-element struct array; the final `_small != _big` filter and
-    # `distinct()` subsume the original per-branch filters and the
-    # root-set dedup), and the convergence probe is one fused isEmpty
-    # job. Per round: ONE checkpoint + ONE probe job. Measured on the
-    # catalog entry (graph_pagerank_components, sf0.1 solo): see
-    # OPTIMIZATION_r12.md. Results bit-identical: same (min over N(u)),
-    # same edge rewrites, property-tested vs union-find below.
-    w_u = Window.partitionBy("_u")
-    for _ in range(max_iter):
-        # large-star over the symmetric closure: neighbors v > u attach to
-        # m = min(neighborhood ∪ {u}).
-        sym = cur.union(cur.select(F.col("_v").alias("_u"), F.col("_u").alias("_v")))
-        large = (
-            sym.withColumn("_m", F.least(F.min("_v").over(w_u), F.col("_u")))
-            .filter(F.col("_v") > F.col("_u"))
-            .filter(F.col("_m") != F.col("_v"))
-            .select(F.col("_v").alias("_u"), F.col("_m").alias("_v"))
-            # no distinct here: duplicate (v, m) rows (two u-neighbors of v
-            # sharing a minimum) don't change the small-star min and fall
-            # to `new`'s distinct — dropping it saves an (_u,_v) exchange
-            # right before the window's _u exchange
-        )
-        # small-star on the (big=_u, small=_v) orientation: u and all its
-        # smaller neighbors attach to the smallest neighbor m — emitted
-        # per edge row as [(v, m), (u, m)]; v==m self-pairs and u==m root
-        # self-loops fall to the shared filter, duplicate root edges to
-        # the distinct.
-        lg = large.withColumn("_m", F.min("_v").over(w_u))
-        new = barrier(
-            lg.select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.col("_v").alias("_big"), F.col("_m").alias("_small")
-                        ),
-                        F.struct(
-                            F.col("_u").alias("_big"), F.col("_m").alias("_small")
-                        ),
-                    )
-                ).alias("_e")
-            )
-            .select(F.col("_e._big").alias("_big"), F.col("_e._small").alias("_small"))
-            .filter(F.col("_small") != F.col("_big"))
-            .select(F.col("_big").alias("_u"), F.col("_small").alias("_v"))
-            .distinct()
-        )
-        changed = (
-            0
-            if new.exceptAll(cur).union(cur.exceptAll(new)).isEmpty()
-            else 1
-        )
-        free_checkpoint(cur)
-        cur = new
-        if changed == 0:
-            labels = n.join(
-                cur.select(F.col("_u").alias("_n"), F.col("_v").alias("_c")),
-                "_n",
-                "left",
-            ).select("_n", F.coalesce("_c", "_n").alias("_c"))
-            out = labels.select(
-                F.col("_n").alias(id_col), F.col("_c").alias("component")
-            )
-            return out
-    free_checkpoint(cur)
-    raise RuntimeError(
-        f"connected_components_star did not converge in {max_iter} rounds — "
-        "star contraction is O(log^2 n); this indicates a bug, not a hard graph"
     )
 
 

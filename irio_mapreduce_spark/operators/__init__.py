@@ -9,7 +9,8 @@ This package holds the operators that need real composition:
 * :mod:`aggregates` — salted (skew-resistant) aggregation, grouping-sets helpers
 * :mod:`topk`       — per-group top-k, global top-k
 * :mod:`graph`      — PageRank (global and personalized), one frontier-relaxation
-  kernel under BFS / multi-source BFS / SSSP, peeling, triangles, label propagation
+  kernel under BFS / multi-source BFS / SSSP / connected components, peeling,
+  triangles, label propagation
 * :mod:`barrier`    — ``barrier``, the one materialization point (``localCheckpoint``)
   every iterative or multiply-read plan goes through, and ``free_checkpoint``
 """

@@ -1,5 +1,6 @@
-"""Graph operators beyond connectivity (see ``llm.dedup`` for connected
-components): fixed-iteration PageRank with cross-engine-exact arithmetic.
+"""Graph operators: fixed-iteration PageRank with cross-engine-exact
+arithmetic, one frontier-relaxation kernel under BFS, SSSP and connected
+components, triangle counting, label propagation and peeling.
 
 Reference parity note: the reference (a generic MapReduce runtime,
 ``src/main`` per SURVEY.md §0) has no graph surface; iterative rank
@@ -10,10 +11,10 @@ belongs to the declared §2.2 surface the same way connected components does.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from irio_mapreduce_spark.operators.barrier import barrier
+from irio_mapreduce_spark.operators.barrier import barrier, free_checkpoint
 
 #: Fixed-point scale for rank values: 1.0 of rank mass == 10^12 units.
 #: Large enough that per-edge floor-truncation (≤1 unit per contribution)
@@ -85,8 +86,8 @@ def pagerank(
 
     ``iterations`` is a small fixed constant by contract — each
     round appends one join + one aggregation to the lineage (at this depth
-    no checkpoint barrier is needed; the iterative-state discussion in
-    ``llm.dedup.connected_components`` applies if it grows).
+    no checkpoint barrier is needed; the barrier policy of
+    :func:`_frontier_relax` applies if it grows).
 
     Scale shape per round: contributions shuffle once on ``src`` (the join
     with ranks) and once on ``dst`` (the sum) — the classic Pregel cost —
@@ -297,10 +298,15 @@ def triangle_count(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
 
 
 def _frontier_relax(
-    e: DataFrame, init: DataFrame, keys: list[str], rounds: int
+    e: DataFrame,
+    init: DataFrame,
+    keys: list[str],
+    rounds: int,
+    until_stable: bool = False,
 ) -> DataFrame:
     """Bounded min-plus frontier relaxation: the one round body behind
-    :func:`bfs_hops`, :func:`multi_source_bfs` and :func:`sssp_rounds`.
+    :func:`bfs_hops`, :func:`multi_source_bfs`, :func:`sssp_rounds` and
+    :func:`connected_components`.
 
     ``e`` is ``(_src, _dst, _w)`` with non-negative integer weights and
     ``init`` is the round-0 distance map ``(*keys, _node, _dist)``, one row
@@ -319,19 +325,38 @@ def _frontier_relax(
     improve already propagated its distance the round it did — but keeps
     round cost proportional to the improving wave, the reason Pregel
     vote-to-halt beats naive Bellman-Ford at scale. With unit weights the
-    improved nodes are exactly the newly reached ones: frontier BFS.
+    improved nodes are exactly the newly reached ones: frontier BFS. With
+    zero weights and every node's own id as its round-0 distance it is
+    min-label propagation: connected components.
 
-    Barrier policy, the one for all three traversals: ``e`` is
-    checkpointed once, and each round's state table is checkpointed once
-    (the superseded one freed). The state is both the next frontier
-    (``where(_imp)``) and the next distance map, so without the barrier
-    round r re-evaluates every earlier round twice over. Measured on a
-    4-core host, local[4], sf0.1, process-tree CPU-s (jobs) per entry —
-    graph_sssp_weighted / graph_bfs_purchases / graph_closeness_centrality:
-    this policy 21.0 (28) / 17.5 (28) / 7.5 (32); no state barrier
-    22.7–24.4 (23) / 17.5–19.0 (23) / 9.6–11.0 (21); checkpointing only
-    the frontier 31.9 (44) / 25.4 (44) / 11.9 (57). More jobs, less CPU:
-    a checkpoint job costs less than re-running the rounds it replaces.
+    ``until_stable`` runs to the fixpoint instead, with ``rounds`` as the
+    cap: each round's state carries an ``Observation`` of its
+    improved-node count, filled by the barrier job that materializes the
+    state, so the loop reads convergence at no extra job, stops at the
+    first round that improved nothing and raises if round ``rounds`` still
+    improved something. That stop is exact: with no improved node the next
+    frontier is empty and every later round would return the state
+    unchanged. Only the count's comparison with zero is read, so a retried
+    task that double-counts cannot change the stop. Bounded traversals
+    (BFS, SSSP) do not observe: their catalog entries never reach the
+    fixpoint inside their round bound, and the observed round costs more
+    CPU. ``graph_sssp_weighted`` at sf0.001, local[4], 24 interleaved
+    calls per side in one session: median 2.70 process-tree CPU-s per
+    call with the observation against 2.53 without, and a slower JIT
+    warm-up.
+
+    Barrier policy, the one for all four kernels: ``e`` is checkpointed
+    once (and freed on exit; the returned state never reads it), and each
+    round's state table is checkpointed once (the superseded one freed).
+    The state is both the next frontier (``where(_imp)``) and the next
+    distance map, so without the barrier round r re-evaluates every
+    earlier round twice over. Measured on a 4-core host, local[4], sf0.1,
+    process-tree CPU-s (jobs) per entry — graph_sssp_weighted /
+    graph_bfs_purchases / graph_closeness_centrality: this policy 21.0
+    (28) / 17.5 (28) / 7.5 (32); no state barrier 22.7–24.4 (23) /
+    17.5–19.0 (23) / 9.6–11.0 (21); checkpointing only the frontier 31.9
+    (44) / 25.4 (44) / 11.9 (57). More jobs, less CPU: a checkpoint job
+    costs less than re-running the rounds it replaces.
 
     At 100 TB: pre-partition ``e`` by ``_src`` once so every round's
     frontier join reuses the layout; state is O(reached) rows.
@@ -339,30 +364,94 @@ def _frontier_relax(
     if rounds < 0:
         raise ValueError(f"rounds must be >= 0, got {rounds}")
     e = barrier(e)
-    on = [*keys, "_node"]
-    state = init.withColumn("_imp", F.lit(True))
-    for r in range(rounds):
-        frontier = state.where("_imp")
-        cand = (
-            frontier.join(e, frontier["_node"] == e["_src"])
-            .groupBy(*keys, F.col("_dst").alias("_node"))
-            .agg(F.min(F.col("_dist") + F.col("_w")).alias("_cand"))
-        )
-        state = barrier(
-            state.drop("_imp")
-            .join(cand, on, "full")
-            .select(
-                *on,
-                F.least("_dist", "_cand").alias("_dist"),
-                # NULL _cand (not reached this round) is not an improvement
-                F.coalesce(
-                    F.col("_cand") < F.col("_dist"), F.col("_dist").isNull()
-                ).alias("_imp"),
-            ),
+    try:
+        on = [*keys, "_node"]
+        state = init.withColumn("_imp", F.lit(True))
+        for r in range(rounds):
+            frontier = state.where("_imp")
+            cand = (
+                frontier.join(e, frontier["_node"] == e["_src"])
+                .groupBy(*keys, F.col("_dst").alias("_node"))
+                .agg(F.min(F.col("_dist") + F.col("_w")).alias("_cand"))
+            )
+            nxt = (
+                state.drop("_imp")
+                .join(cand, on, "full")
+                .select(
+                    *on,
+                    F.least("_dist", "_cand").alias("_dist"),
+                    # NULL _cand (not reached this round) is not an improvement
+                    F.coalesce(
+                        F.col("_cand") < F.col("_dist"), F.col("_dist").isNull()
+                    ).alias("_imp"),
+                )
+            )
+            if until_stable:
+                obs = Observation()
+                nxt = nxt.observe(obs, F.sum(F.col("_imp").cast("long")).alias("_n"))
             # round 0's state is the caller's init, not a checkpoint
-            supersedes=state if r else None,
-        )
+            state = barrier(nxt, supersedes=state if r else None)
+            # an empty state sums to NULL
+            if until_stable and not obs.get["_n"]:
+                break
+        else:
+            if until_stable:
+                raise RuntimeError(
+                    f"did not converge in {rounds} rounds: the graph has a "
+                    "longer path than the round bound; raise it"
+                )
+    finally:
+        free_checkpoint(e)
     return state.drop("_imp")
+
+
+def connected_components(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    nodes: DataFrame | None = None,
+    id_col: str = "id",
+    max_iter: int = 25,
+) -> DataFrame:
+    """Connected components of an undirected edge list: one row per node,
+    ``(id_col, component)``, with component = the minimum node id
+    reachable from it. Dedup pipelines keep ``id == component`` as each
+    duplicate cluster's representative; graph entries contract or score
+    the component partition.
+
+    Min-label propagation as :func:`_frontier_relax` with zero weights on
+    the mirrored edge list and every node's own id as its round-0 label:
+    only nodes whose label fell propagate, and the loop ends at the first
+    round that changes no label — O(diameter) rounds, one barrier each
+    and no probe job. Duplicate graphs are unions of near-cliques and the
+    catalog's purchase graphs converge in at most 14 rounds at sf0.1, so
+    the diameter bound is the right trade for one kernel.
+
+    Null endpoints (and null ids in ``nodes``) are dropped. A declared
+    ``nodes`` set is a contract on BOTH output and graph: edges touching
+    an id outside it are dropped, otherwise a foreign endpoint would
+    carry its label in. Raises if round ``max_iter`` still changed a
+    label: a partial propagation merges some clusters and not others,
+    wrong answers rather than degraded performance."""
+    e = edges.select(
+        F.col(src).cast("long").alias("_src"), F.col(dst).cast("long").alias("_dst")
+    ).dropna()
+    if nodes is not None:
+        n = nodes.select(F.col(id_col).cast("long").alias("_node")).dropna().distinct()
+        e = e.join(n.withColumnRenamed("_node", "_src"), "_src", "left_semi").join(
+            n.withColumnRenamed("_node", "_dst"), "_dst", "left_semi"
+        )
+    e = e.unionByName(e.select(F.col("_dst").alias("_src"), F.col("_src").alias("_dst")))
+    if nodes is None:
+        n = e.select(F.col("_src").alias("_node")).distinct()
+    labels = _frontier_relax(
+        e.withColumn("_w", F.lit(0).cast("long")),
+        n.select("_node", F.col("_node").alias("_dist")),
+        [],
+        max_iter,
+        until_stable=True,
+    )
+    return labels.select(F.col("_node").alias(id_col), F.col("_dist").alias("component"))
 
 
 def bfs_hops(
@@ -545,10 +634,10 @@ def kcore_peel(
     CTEs) and the lineage shallow; it is an upper bound on the true
     k-core (peeling is monotone — nodes only ever leave), converging to
     it once a round removes nothing. An exact variant runs the same
-    round under the ``llm.dedup.connected_components`` driver-loop
-    convergence probe; the per-round dataflow — one degree aggregation
-    + one semi-join per endpoint to drop dead edges — is identical, so
-    the bounded form is the honest benchmarkable unit.
+    round until an observed round removes nothing (the convergence stop
+    of :func:`_frontier_relax`); the per-round dataflow — one degree
+    aggregation + one semi-join per endpoint to drop dead edges — is
+    identical, so the bounded form is the honest benchmarkable unit.
 
     Scale shape per round: degree aggregation (1 exchange of (node,
     count)), then two semi-joins keyed on the endpoints (broadcastable

@@ -19,7 +19,6 @@ from irio_mapreduce_spark.io import read_table
 from irio_mapreduce_spark.llm.dedup import (
     bloom_prefiltered_new,
     build_incremental_index,
-    connected_components,
     duplicate_substring_spans,
     exact_dedup,
     incremental_dedup,
@@ -38,6 +37,7 @@ from irio_mapreduce_spark.llm.similarity import (
 )
 from irio_mapreduce_spark.llm.similarity import semdedup as semdedup_op
 from irio_mapreduce_spark.operators.barrier import barrier
+from irio_mapreduce_spark.operators.graph import connected_components
 from irio_mapreduce_spark.queries.catalog import register
 
 # Shared DuckDB fragment: distinct word trigrams per document, matching

@@ -19,6 +19,7 @@ from irio_mapreduce_spark.operators.barrier import barrier
 from irio_mapreduce_spark.operators.graph import (
     PAGERANK_SCALE,
     bfs_hops,
+    connected_components,
     kcore_peel,
     label_propagation,
     multi_source_bfs,
@@ -315,11 +316,10 @@ def graph_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def graph_pagerank_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CC→RANK pipeline in ONE chained plan: connected components of
-    the January-1995 purchase graph via LARGE/SMALL-STAR contraction
-    (`llm.dedup.connected_components_star` — the O(log² n)-round variant
-    that survives adversarial diameters), then every node of the
-    full-1995 purchase graph CONTRACTED to its January component (nodes
-    outside January label themselves), and three fixed-point PageRank
+    the January-1995 purchase graph (``operators.graph.
+    connected_components``, min-label propagation), then every node of
+    the full-1995 purchase graph CONTRACTED to its January component
+    (nodes outside January label themselves), and three fixed-point PageRank
     rounds over the contracted supergraph — "which January supplier
     communities stay central over the whole year". This is the standard
     coarsening move for trillion-edge graphs: contract locally-dense
@@ -328,12 +328,12 @@ def graph_pagerank_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: node ids are disjoint integers (customer 2k, supplier
     2k+1, pure arithmetic both sides); component labels are min node ids
-    (the star-contraction contract, fixpoint-checked); contracted edges
+    (the connected-components contract, fixpoint-checked); contracted edges
     canonicalize as distinct (least, greatest) pairs before mirroring so
     neither engine double-counts a mixed-orientation pair; the rank
     arithmetic is the BIGINT fixed-point of ``operators.graph.pagerank``.
-    The oracle recomputes the components with a RECURSIVE min-label CTE
-    — a genuinely different fixpoint algorithm — so the hash match pins
+    The oracle recomputes the components with a RECURSIVE reachability
+    CTE — the whole closure, not a frontier loop — so the hash match pins
     the component semantics, not the implementation."""
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate"
@@ -351,9 +351,7 @@ def graph_pagerank_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
 
-    from irio_mapreduce_spark.llm.dedup import connected_components_star
-
-    comp = connected_components_star(
+    comp = connected_components(
         pairs("1995-01-01", "1995-01-31"), "u", "v", id_col="id"
     )
     yr = pairs("1995-01-01", "1995-12-31")
@@ -956,14 +954,12 @@ def graph_modularity_components(
     Scaling by 4m² clears every denominator — q_term = 4m·e_c − d_c² is
     an exact BIGINT per component and Q = Σ q_term / 4m² — so the score
     is integer-exact, the fixed-point discipline of the PageRank family.
-    Components come from ``llm.dedup.connected_components`` (min-label
-    propagation, a barrier per round); per-component edge and
+    Components come from ``operators.graph.connected_components``
+    (min-label propagation, a barrier per round); per-component edge and
     degree masses are two co-partitioned joins against the label table.
     The oracle recomputes components with a recursive-CTE reachability
     closure — a genuinely different algorithm, so the hash match pins
     the partition itself, not the implementation."""
-    from irio_mapreduce_spark.llm.dedup import connected_components
-
     edges = _cosupply_edges(spark, sf_dir)
     cc = connected_components(edges, "s1", "s2")
     sym = edges.select(

@@ -22,6 +22,8 @@ reference's exactly-R contract lives in io.write_exact_files).
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
 import shutil
 import tempfile
@@ -36,12 +38,23 @@ from irio_mapreduce_spark.session import scoped_conf, session_memo
 from irio_mapreduce_spark.streaming import drain
 
 
+@functools.cache
+def _scratch_root() -> str:
+    """This process's scratch root, removed at process exit."""
+    root = tempfile.mkdtemp(prefix="irio_mapreduce_spark_sources_")
+    atexit.register(shutil.rmtree, root, True)
+    return root
+
+
 def _scratch(sf_dir: str, leaf: str) -> str:
-    """Deterministic per-SF scratch dir outside the repo tree."""
+    """A fresh, empty scratch dir for one build, outside the repo tree.
+
+    Every build gets its own directory under :func:`_scratch_root`, so
+    building an entry again never rewrites the files a lazy frame from an
+    earlier build still lists, and two processes on one host never share
+    a path."""
     tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    return os.path.join(
-        tempfile.gettempdir(), "irio_mapreduce_spark_sources", tag, leaf
-    )
+    return tempfile.mkdtemp(prefix=f"{tag}_{leaf}_", dir=_scratch_root())
 
 
 @register(
@@ -185,12 +198,10 @@ def source_dirtext_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-20 — hash-checked against DuckDB computing the same count straight
     from the parquet table, proving the custom source neither drops nor
     mangles a byte."""
-    import tempfile
-
     from irio_mapreduce_spark import pysource
 
     pysource.register(spark)
-    d = tempfile.mkdtemp(prefix="dirtext_q_") + "/docs"
+    d = _scratch(sf_dir, "dirtext") + "/docs"
     docs = read_table(spark, sf_dir, "documents").select(
         F.regexp_replace(F.col("text"), r"[\r\n]+", " ").alias("value")
     )
@@ -355,13 +366,11 @@ def source_dirtail_stream_wordcount(spark: SparkSession, sf_dir: str) -> DataFra
     batch entry proves the storage model; this one proves its tail-replay
     contract (``pysource.DirTailStreamReader.read``/``readBetweenOffsets``)
     on the real engine."""
-    import tempfile
-
     from irio_mapreduce_spark import pysource
     from irio_mapreduce_spark.streaming import write_stream_parquet_exactly_once
 
     pysource.register(spark)
-    base = tempfile.mkdtemp(prefix="dirtail_q_")
+    base = _scratch(sf_dir, "dirtail")
     d, out, ck = f"{base}/docs", f"{base}/out", f"{base}/ck"
     docs = read_table(spark, sf_dir, "documents").select(
         F.regexp_replace(F.col("text"), r"[\r\n]+", " ").alias("value")
@@ -484,12 +493,10 @@ def source_pystream_writer_wordcount(spark: SparkSession, sf_dir: str) -> DataFr
     stream-written directory and the same top-20 wordcount oracle must
     hash-match — one dropped, doubled, or torn line anywhere in the
     chain breaks it."""
-    import tempfile
-
     from irio_mapreduce_spark import pysource
 
     pysource.register(spark)
-    base = tempfile.mkdtemp(prefix="pystream_w_")
+    base = _scratch(sf_dir, "pystream")
     a, b, ck = f"{base}/in", f"{base}/out", f"{base}/ck"
     docs = read_table(spark, sf_dir, "documents").select(
         F.regexp_replace(F.col("text"), r"[\r\n]+", " ").alias("value")
@@ -618,13 +625,11 @@ def source_dirtail_partitioned_stream(spark: SparkSession, sf_dir: str) -> DataF
     form that survives a 1000-executor backlog drain. Same top-20
     wordcount oracle over the same exactly-once parquet drain: one
     dropped, doubled, or torn line anywhere breaks the hash."""
-    import tempfile
-
     from irio_mapreduce_spark import pysource
     from irio_mapreduce_spark.streaming import write_stream_parquet_exactly_once
 
     pysource.register(spark)
-    base = tempfile.mkdtemp(prefix="dirtailp_q_")
+    base = _scratch(sf_dir, "dirtail_partitioned")
     d, out, ck = f"{base}/docs", f"{base}/out", f"{base}/ck"
     docs = read_table(spark, sf_dir, "documents").select(
         F.regexp_replace(F.col("text"), r"[\r\n]+", " ").alias("value")
@@ -713,7 +718,7 @@ def _events_by_day_dir(spark: SparkSession, sf_dir: str) -> str:
     dynamic join-driven)."""
 
     def build() -> str:
-        d = tempfile.mkdtemp(prefix="part_prune_") + "/events_by_day"
+        d = _scratch(sf_dir, "events_by_day")
         (
             read_table(spark, sf_dir, "events")
             .withColumn("day", F.date_format("ts", "yyyy-MM-dd"))
@@ -872,11 +877,9 @@ def source_rowgroup_stats_pruning(
     key — floor of one IEEE multiply, identical in both engines) so the
     entry exercises real rows at every scale factor. Data result
     recomputed from the source of truth."""
-    import os
-    import tempfile
 
     def build_copies() -> str:
-        d = tempfile.mkdtemp(prefix="rg_prune_")
+        d = _scratch(sf_dir, "rowgroup_copies")
         li = read_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_quantity"
         )
@@ -989,7 +992,7 @@ def sink_dynamic_partition_overwrite(
         F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
         "value",
     )
-    target = tempfile.mkdtemp(prefix="dpo_") + "/daily"
+    target = _scratch(sf_dir, "dynamic_overwrite") + "/daily"
     ev.drop("value").write.partitionBy("day").mode("overwrite").parquet(
         target
     )
@@ -1036,12 +1039,6 @@ def source_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     planner's cost — the docstring-level contract is files >> bytes
     pathology belongs in compaction (layout_compact_small_files)."""
     path = _scratch(sf_dir, "docs_binary")
-    # _scratch paths are deterministic and survive across runs; stale
-    # .bin files from a previous corpus would be counted by the
-    # read-back (the parquet-writing siblings get this for free from
-    # mode('overwrite'))
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path, exist_ok=True)
     docs = (
         read_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 101 == 0)

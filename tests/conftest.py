@@ -21,6 +21,12 @@ TABLES = (
 )
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: multi-process fault-injection runs (tests/test_chaos.py)"
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     import tempfile

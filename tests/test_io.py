@@ -402,20 +402,19 @@ def test_zorder_write_narrows_rowgroup_stats_on_both_dims(spark, tmp_path):
 def test_parquet_codec_option_reaches_footers(spark):
     """source_parquet_codecs' value check alone would pass even if the
     compression option were silently ignored; the footers must actually
-    carry each requested codec."""
-    import glob
-    import os
+    carry each requested codec. The files are the ones the built frame
+    reads."""
+    from urllib.parse import urlparse
 
     import pyarrow.parquet as pq
 
-    from irio_mapreduce_spark.queries.sources_q import _scratch, source_parquet_codecs
+    from irio_mapreduce_spark.queries.sources_q import source_parquet_codecs
 
-    sf_dir = "/root/testdata/sf0.01"
-    source_parquet_codecs(spark, sf_dir).collect()
+    df = source_parquet_codecs(spark, "/root/testdata/sf0.01")
+    df.collect()
+    read = [urlparse(f).path for f in df.inputFiles()]
     for codec, expect in (("gzip", "GZIP"), ("snappy", "SNAPPY"), ("zstd", "ZSTD")):
-        files = glob.glob(
-            os.path.join(_scratch(sf_dir, f"customer_codec_{codec}"), "*.parquet")
-        )
+        files = [f for f in read if f"customer_codec_{codec}_" in f]
         assert files, codec
         meta = pq.ParquetFile(files[0]).metadata
         seen = {
@@ -424,6 +423,20 @@ def test_parquet_codec_option_reaches_footers(spark):
             for i in range(meta.num_columns)
         }
         assert seen == {expect} or expect in seen, (codec, seen)
+
+
+def test_scratch_entry_first_build_survives_a_rebuild(spark):
+    """Every build of a scratch-writing entry writes its own directory, so
+    building source_parquet_codecs again leaves the first build's lazy
+    frame readable: a shared directory rewritten by the second build made
+    the first frame's collect fail with FILE_NOT_EXIST."""
+    from irio_mapreduce_spark.queries.sources_q import source_parquet_codecs
+
+    sf_dir = "/root/testdata/sf0.01"
+    first = source_parquet_codecs(spark, sf_dir)
+    second = source_parquet_codecs(spark, sf_dir)
+    assert set(first.inputFiles()).isdisjoint(second.inputFiles())
+    assert sorted(first.collect()) == sorted(second.collect())
 
 
 def test_parquet_bloom_option_emits_filter_bytes(spark, tmp_path):

@@ -15,8 +15,8 @@ from irio_mapreduce_spark.llm.dedup import (
     exact_dedup,
     near_dup_pairs_minhash,
     ngram_jaccard_pairs,
-    simhash64,
     simhash_near_pairs,
+    simhash_signatures,
     tokens,
     shingles,
 )
@@ -65,10 +65,8 @@ def test_simhash_hamming_properties(spark):
         [(1, base), (2, base), (3, near), (4, far)], ["id", "text"]
     )
     h = {
-        r.id: r.sh
-        for r in df.select(
-            "id", simhash64(shingles(tokens("text"), 3)).alias("sh")
-        ).collect()
+        r._id: r._sh
+        for r in simhash_signatures(df, "id", shingles(tokens("text"), 3)).collect()
     }
 
     def ham(a, b):
@@ -88,9 +86,9 @@ def test_simhash_separates_near_dups_from_random(spark):
     radius-3 output is a precision-oriented subset.)"""
     docs = read_table(spark, SF_DIR, "documents")
     h = {
-        r.doc_id: r.sh
-        for r in docs.select(
-            "doc_id", simhash64(shingles(tokens("text"), 3)).alias("sh")
+        r._id: r._sh
+        for r in simhash_signatures(
+            docs, "doc_id", shingles(tokens("text"), 3)
         ).collect()
     }
 
@@ -286,20 +284,9 @@ def test_simhash_rejects_unreachable_hamming(spark):
         simhash_near_pairs(docs, "doc_id", "text", max_hamming=8)
 
 
-def test_connected_components_vs_union_find(spark):
-    """Min-label propagation on an adversarial graph shape mix — a long
-    chain (worst case for propagation round count), two cliques bridged by
-    one edge, isolated nodes from the ``nodes`` frame — must equal a plain
-    Python union-find."""
-    from irio_mapreduce_spark.llm.dedup import connected_components
-
-    chain = [(i, i + 1) for i in range(100, 110)]
-    clique_a = [(a, b) for a in range(0, 5) for b in range(a + 1, 5)]
-    clique_b = [(a, b) for a in range(20, 25) for b in range(a + 1, 25)]
-    bridge = [(4, 20)]
-    edges = chain + clique_a + clique_b + bridge
-    node_ids = sorted({n for e in edges for n in e} | {500, 501})
-
+def _union_find_components(edges, node_ids) -> dict:
+    """Reference labeling: every node mapped to the minimum id of its
+    component, by a plain Python union-find."""
     parent = {n: n for n in node_ids}
 
     def find(x):
@@ -310,21 +297,40 @@ def test_connected_components_vs_union_find(spark):
 
     for a, b in edges:
         parent[find(a)] = find(b)
-    expected = {n: min(m for m in node_ids if find(m) == find(n)) for n in node_ids}
+    return {n: min(m for m in node_ids if find(m) == find(n)) for n in node_ids}
+
+
+def _components(spark, edges, node_ids) -> dict:
+    from irio_mapreduce_spark.operators.graph import connected_components
 
     e_df = local_df(spark, edges, "a long, b long")
     n_df = local_df(spark, [(n,) for n in node_ids], "id long")
-    got = {
+    return {
         r.id: r.component
         for r in connected_components(e_df, "a", "b", nodes=n_df).collect()
     }
-    assert got == expected
+
+
+def test_connected_components_vs_union_find(spark):
+    """Min-label propagation on an adversarial graph shape mix — a long
+    chain (worst case for propagation round count), two cliques bridged by
+    one edge, isolated nodes from the ``nodes`` frame — must equal a plain
+    Python union-find."""
+    chain = [(i, i + 1) for i in range(100, 110)]
+    clique_a = [(a, b) for a in range(0, 5) for b in range(a + 1, 5)]
+    clique_b = [(a, b) for a in range(20, 25) for b in range(a + 1, 25)]
+    bridge = [(4, 20)]
+    edges = chain + clique_a + clique_b + bridge
+    node_ids = sorted({n for e in edges for n in e} | {500, 501})
+    assert _components(spark, edges, node_ids) == _union_find_components(
+        edges, node_ids
+    )
 
 
 def test_connected_components_raises_without_convergence(spark):
     """A chain longer than max_iter rounds must raise, not return a
     silently half-merged labeling."""
-    from irio_mapreduce_spark.llm.dedup import connected_components
+    from irio_mapreduce_spark.operators.graph import connected_components
 
     chain = local_df(spark, [(i, i + 1) for i in range(8)], "a long, b long")
     with pytest.raises(RuntimeError, match="converge"):
@@ -442,7 +448,7 @@ def test_token_budget_batches_contract(spark):
 def test_connected_components_restricts_to_declared_nodes(spark):
     """Edges touching ids outside an explicit nodes frame are dropped —
     the output contains exactly the declared ids."""
-    from irio_mapreduce_spark.llm.dedup import connected_components
+    from irio_mapreduce_spark.operators.graph import connected_components
 
     edges = local_df(spark, [(1, 2), (2, 99), (3, 4)], "a long, b long")
     nodes = local_df(spark, [(i,) for i in (1, 2, 3, 4, 5)], "id long")
@@ -451,6 +457,19 @@ def test_connected_components_restricts_to_declared_nodes(spark):
         for r in connected_components(edges, "a", "b", nodes=nodes).collect()
     }
     assert got == {1: 1, 2: 1, 3: 3, 4: 3, 5: 5}
+
+
+def test_connected_components_drops_null_endpoints(spark):
+    """An edge with a null endpoint is dropped whole: it neither labels
+    the null nor links its other endpoint. A graph of only such edges is
+    empty, and its first round (an empty state) ends the loop."""
+    from irio_mapreduce_spark.operators.graph import connected_components
+
+    edges = local_df(spark, [(1, 2), (2, None), (None, 3)], "a long, b long")
+    got = {r.id: r.component for r in connected_components(edges, "a", "b").collect()}
+    assert got == {1: 1, 2: 1}
+    only_null = edges.where("a IS NULL OR b IS NULL")
+    assert connected_components(only_null, "a", "b").collect() == []
 
 
 def test_incremental_dedup_batch_vs_corpus(spark):
@@ -515,9 +534,10 @@ def test_free_checkpoint_releases_blocks(spark):
 
 def test_connected_components_frees_intermediate_checkpoints(spark):
     """The iterative loop must not leak one label-table checkpoint per
-    round: after the result is collected, at most the final labels frame
-    remains pinned."""
-    from irio_mapreduce_spark.llm.dedup import connected_components, free_checkpoint
+    round, nor its edge-table checkpoint: after the result is collected,
+    at most the final labels frame remains pinned."""
+    from irio_mapreduce_spark.operators.barrier import free_checkpoint
+    from irio_mapreduce_spark.operators.graph import connected_components
 
     def persistent_count() -> int:
         m = spark.sparkContext._jsc.sc().getPersistentRDDs()
@@ -538,6 +558,40 @@ def test_connected_components_frees_intermediate_checkpoints(spark):
     # everything except the final labels checkpoint was freed in-loop
     assert persistent_count() <= base + 1
     free_checkpoint(out)
+
+
+def test_connected_components_runs_every_job_inside_a_barrier(spark, monkeypatch):
+    """Convergence is read from an Observation on each round's state,
+    filled by the barrier job that materializes it, so the kernel starts
+    no Spark job outside a barrier: no per-round probe job. Jobs are told
+    apart by job group — the barrier runs under its own group."""
+    from irio_mapreduce_spark.operators import graph
+
+    sc = spark.sparkContext
+    outside, inside = "cc_outside_barrier", "cc_inside_barrier"
+    real_barrier = graph.barrier
+
+    def recording_barrier(df, **kw):
+        sc.setJobGroup(inside, inside)
+        try:
+            return real_barrier(df, **kw)
+        finally:
+            sc.setJobGroup(outside, outside)
+
+    monkeypatch.setattr(graph, "barrier", recording_barrier)
+    edges = local_df(spark, [(i, i + 1) for i in range(12)], ["id1", "id2"])
+    sc.setJobGroup(outside, outside)
+    try:
+        out = graph.connected_components(edges, "id1", "id2")
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    # one edge barrier + one per round: 12 label-improving rounds and the
+    # round that finds nothing left to improve
+    assert len(tracker.getJobIdsForGroup(inside)) >= 14
+    assert tracker.getJobIdsForGroup(outside) == []
+    assert {(r.id, r.component) for r in out.collect()} == {(i, 0) for i in range(13)}
 
 
 def test_ivf_topk_empty_corpus_raises_clearly(spark):
@@ -795,65 +849,11 @@ def test_pq_recall_vs_bruteforce(spark):
     assert recall >= 0.6, f"recall {recall}"
 
 
-def test_connected_components_star_vs_union_find(spark):
-    """Large-star/small-star contraction on the same adversarial mix the
-    min-label test uses (chain + bridged cliques + isolated nodes) must
-    equal a plain Python union-find — identical output contract to
-    connected_components."""
-    from irio_mapreduce_spark.llm.dedup import connected_components_star
-
-    chain = [(i, i + 1) for i in range(100, 110)]
-    clique_a = [(a, b) for a in range(0, 5) for b in range(a + 1, 5)]
-    clique_b = [(a, b) for a in range(20, 25) for b in range(a + 1, 25)]
-    bridge = [(4, 20)]
-    edges = chain + clique_a + clique_b + bridge
-    node_ids = sorted({n for e in edges for n in e} | {500, 501})
-
-    parent = {n: n for n in node_ids}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        parent[find(a)] = find(b)
-    expected = {n: min(m for m in node_ids if find(m) == find(n)) for n in node_ids}
-
-    e_df = local_df(spark, edges, "a long, b long")
-    n_df = local_df(spark, [(n,) for n in node_ids], "id long")
-    got = {
-        r.id: r.component
-        for r in connected_components_star(e_df, "a", "b", nodes=n_df).collect()
-    }
-    assert got == expected
-
-
-def test_connected_components_star_long_chain_few_rounds(spark):
-    """The upgrade's point: a 60-node path needs ~60 min-label rounds but
-    star contraction is O(log^2 n) — it must finish well inside 12 rounds
-    and label every node with the chain's minimum."""
-    from irio_mapreduce_spark.llm.dedup import connected_components_star
-
-    chain = local_df(spark, 
-        [(i, i + 1) for i in range(1000, 1060)], "a long, b long"
-    )
-    out = connected_components_star(chain, "a", "b", max_iter=12).collect()
-    assert len(out) == 61
-    assert {r.component for r in out} == {1000}
-
-
-def test_connected_components_star_equivalent_on_random_graphs(spark):
+def test_connected_components_random_graphs_vs_union_find(spark):
     """Property check: on seeded Erdős–Rényi-ish random graphs (including a
-    duplicate-edge / self-loop / reversed-edge mix), star contraction and
-    min-label propagation produce identical labelings."""
+    duplicate-edge / self-loop / reversed-edge mix), the kernel's labeling
+    equals a plain Python union-find."""
     import random
-
-    from irio_mapreduce_spark.llm.dedup import (
-        connected_components,
-        connected_components_star,
-    )
 
     for seed, n, m in [(1, 30, 25), (2, 40, 60), (3, 25, 12)]:
         rng = random.Random(seed)
@@ -861,17 +861,10 @@ def test_connected_components_star_equivalent_on_random_graphs(spark):
             (rng.randrange(n), rng.randrange(n)) for _ in range(m)
         ]  # self-loops and dup edges allowed by construction
         edges += [(b, a) for a, b in edges[: m // 3]]  # reversed duplicates
-        e_df = local_df(spark, edges, "a long, b long")
-        n_df = local_df(spark, [(i,) for i in range(n)], "id long")
-        base = {
-            r.id: r.component
-            for r in connected_components(e_df, "a", "b", nodes=n_df).collect()
-        }
-        star = {
-            r.id: r.component
-            for r in connected_components_star(e_df, "a", "b", nodes=n_df).collect()
-        }
-        assert star == base, f"seed={seed}"
+        node_ids = list(range(n))
+        assert _components(spark, edges, node_ids) == _union_find_components(
+            edges, node_ids
+        ), f"seed={seed}"
 
 
 def test_bloom_prefilter_matches_plain_antijoin_and_prunes(spark):

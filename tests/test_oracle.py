@@ -3,14 +3,10 @@ protocol, locally at sf0.01 by default). One parametrized test per query."""
 
 from __future__ import annotations
 
-import warnings
-
 import pytest
-from py4j.protocol import Py4JJavaError
 
 from irio_mapreduce_spark import queries as catalog
 from tests.conftest import (
-    CONSTRUCTED_FRAMES,
     SF_DIR,
     compare_with_oracle,
     get_query_frame,
@@ -30,23 +26,7 @@ def test_query_matches_oracle(name, spark, duck):
     # by-product for the full-catalog plan sweep (tests/test_plans.py):
     # the entry is built here anyway, so its plan is captured for free
     record_plan(name, df)
-    try:
-        compare_with_oracle(df, duck, _ORACLES[name], name=name)
-    except Py4JJavaError as exc:
-        # A test that ran between the two sweeps may have re-executed an
-        # entry that rewrites its fixed scratch dir (test_io re-runs
-        # source_parquet_codecs), invalidating the cached frame's file
-        # listing: the collect then fails with FILE_NOT_EXIST. Only that
-        # error rebuilds the frame fresh ONCE and re-compares; a value
-        # mismatch or any other error fails at once.
-        stale = [ln for ln in str(exc).splitlines() if "FAILED_READ_FILE.FILE_NOT_EXIST" in ln]
-        if not stale:
-            raise
-        warnings.warn(f"{name}: cached frame read a rewritten scratch dir, rebuilding: {stale[0]}")
-        CONSTRUCTED_FRAMES.pop(name, None)
-        df = get_query_frame(name, spark)
-        record_plan(name, df)
-        compare_with_oracle(df, duck, _ORACLES[name], name=name)
+    compare_with_oracle(df, duck, _ORACLES[name], name=name)
 
 
 def test_every_query_has_an_oracle():

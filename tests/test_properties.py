@@ -217,7 +217,7 @@ def test_asof_join_matches_pandas_merge_asof(spark, left, right):
 def test_connected_components_matches_union_find(spark, edges, extra_nodes):
     """Min-label propagation on arbitrary small graphs (self-loops,
     duplicates, disconnected nodes included) equals Python union-find."""
-    from irio_mapreduce_spark.llm.dedup import connected_components
+    from irio_mapreduce_spark.operators.graph import connected_components
 
     node_ids = sorted({n for e in edges for n in e} | extra_nodes)
     if not node_ids:
