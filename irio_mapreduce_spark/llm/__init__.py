@@ -10,9 +10,10 @@ LLM-data pipeline actually runs, Spark-first:
                    containment (benchmark decontamination). Duplicate-
                    cluster resolution is ``operators.graph.
                    connected_components`` over the pair graph.
-* ``similarity`` — embedding cosine top-k: brute-force baseline, multi-table
-                   RP-LSH, IVF (sample-trained coarse quantizer); embedding-
-                   cosine near-dup dedup.
+* ``similarity`` — embedding cosine top-k: the brute-force baseline, and
+                   IVF cells, single- and multi-probe RP-LSH buckets and PQ
+                   shortlists as candidate steps of one exact-refine top-k
+                   kernel; embedding-cosine near-dup dedup and SemDeDup.
 * ``sampling``   — deterministic hash-bucket sampling, leakage-safe
                    train/val splits, per-source quotas, token-budget batch
                    packing.
@@ -23,8 +24,8 @@ LLM-data pipeline actually runs, Spark-first:
 
 Everything stays JVM-side (higher-order array functions, no Python UDFs)
 except the dense linear-map hot spots (LSH projections, IVF assignment,
-multimodal decode), which are Arrow-batched numpy — the vectorized-UDF
-path, never row-at-a-time Python.
+PQ encoding, multimodal decode), which are Arrow-batched numpy — the
+vectorized-UDF path, never row-at-a-time Python.
 """
 
 from irio_mapreduce_spark.llm import (  # noqa: F401

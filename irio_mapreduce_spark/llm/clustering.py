@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from irio_mapreduce_spark.operators.topk import top_k_per_group
+
 #: Fixed-point scale for embedding components: 1.0 == 10^6 units. Unit
 #: vectors scale to ~±10^6; squared diffs ≤ ~4·10^12, × dims (64-4096)
 #: stays far inside int64 (headroom ~9.2e18 / 4e12 ≈ 2.3e6 dims).
@@ -248,8 +250,6 @@ def knn_classify(
     the ANN index probe (``llm.similarity.ivf_topk``) followed by this
     exact re-rank on the candidate shortlist.
     """
-    from pyspark.sql.window import Window
-
     q = queries.select(
         F.col(id_col).alias("query_id"), scaled_vec(F.col(vec_col)).alias("_qv")
     )
@@ -261,20 +261,18 @@ def knn_classify(
     scored = c.crossJoin(F.broadcast(q)).select(
         "query_id", "_cid", "_lab", _sq_dist(F.col("_cv"), F.col("_qv")).alias("_d")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("_d").asc(), F.col("_cid").asc())
-    topk = scored.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= k)
-    votes = topk.groupBy("query_id", "_lab").agg(F.count("*").alias("votes"))
-    wv = Window.partitionBy("query_id").orderBy(
-        F.col("votes").desc(), F.col("_lab").asc()
+    topk = top_k_per_group(
+        scored, ["query_id"], [F.col("_d").asc(), F.col("_cid").asc()], k,
+        rank_col="_rn",
     )
-    return (
-        votes.withColumn("_rv", F.row_number().over(wv))
-        .filter(F.col("_rv") == 1)
-        .select(
-            "query_id",
-            F.col("_lab").alias("predicted_label"),
-            F.col("votes").cast("long").alias("votes"),
-        )
+    votes = topk.groupBy("query_id", "_lab").agg(F.count("*").alias("votes"))
+    return top_k_per_group(
+        votes, ["query_id"], [F.col("votes").desc(), F.col("_lab").asc()], 1,
+        rank_col="_rv",
+    ).select(
+        "query_id",
+        F.col("_lab").alias("predicted_label"),
+        F.col("votes").cast("long").alias("votes"),
     )
 
 

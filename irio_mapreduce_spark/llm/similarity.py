@@ -1,15 +1,32 @@
 """Embedding similarity search over ``array<float>`` columns.
 
-Two paths, per SURVEY.md §2.2 "LLM-data-pipeline operators":
+:func:`cosine_topk` is the exact baseline: one query vector, cosine fused
+into the corpus scan (``zip_with`` + ``aggregate``, JVM-side, no Python),
+TakeOrdered for the top-k. It is the correctness oracle for everything
+else, and :func:`cosine_pairs_bruteforce` is its all-pairs form.
 
-* **brute-force cosine top-k** — the exact baseline. Dot products via
-  ``zip_with`` + ``aggregate`` (JVM higher-order functions, codegen'd, no
-  Python). O(n·d) per query: fine for one query against 100 TB when fused
-  into the scan, and the correctness oracle for everything else.
-* **random-hyperplane LSH (SimHash for vectors)** — the scale path for
-  query *sets* and pairwise search: bucket by the sign pattern of ``p``
-  hyperplane projections; candidates = bucket collisions (equi-join);
-  exact cosine re-ranks candidates only.
+The approximate searches take a query SET and share four stages (the
+REPOSE / Odyssey decomposition of distributed similarity search):
+
+1. **index** — partition or encode the corpus;
+2. **candidates** — the ``(query, vector)`` pairs worth scoring;
+3. **exact refine** — the ``digits``-rounded double cosine of each pair;
+4. **top-k** — the ``k`` best per query, ties broken by ``vec_id``.
+
+Only stage 2 differs between methods; stages 3 and 4, with the self-pair
+drop, are one kernel (:func:`_refine_topk`). Candidate generators:
+
+* :func:`ivf_topk` / :func:`ivf_topk_persisted` — k-means cells; each
+  query's ``n_probe`` nearest cells, one equi-join on cell id;
+* :func:`rp_lsh_topk` — multi-table random-hyperplane buckets, one
+  equi-join on the exploded (table, bucket) key;
+* :func:`rp_lsh_multiprobe_topk` — the same join, the query also probing
+  each Hamming-1 neighbour bucket;
+* :func:`pq_topk` — the ``shortlist·k`` nearest vectors per query by
+  product-quantized asymmetric distance.
+
+:func:`dedup_embedding_cosine` and :func:`semdedup` reuse the LSH buckets
+and an anchor clustering as candidate steps for threshold dedup.
 
 All math is done in double: float32 summation order would otherwise make
 results diverge from any oracle computing in double.
@@ -17,17 +34,21 @@ results diverge from any oracle computing in double.
 
 from __future__ import annotations
 
-import math
+import os
 import random
+from typing import Callable
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
+from irio_mapreduce_spark.llm import artifacts
 from irio_mapreduce_spark.llm.dedup import widen
 from irio_mapreduce_spark.operators.barrier import barrier
+from irio_mapreduce_spark.operators.topk import top_k_per_group
 
 
 def as_double(vec_col: Column) -> Column:
@@ -121,6 +142,25 @@ def cosine_pairs_bruteforce(
     )
 
 
+def _refine_topk(pairs: DataFrame, k: int, digits: int) -> DataFrame:
+    """The exact-refine and top-k stages every approximate search shares.
+
+    ``pairs`` holds unique candidate pairs ``(query_id, _qv, vec_id, _cv)``;
+    a candidate step whose pairs can repeat dedupes them itself. Drops
+    self-pairs, scores the rest by ``digits``-rounded double cosine and
+    keeps the ``k`` best per query (ties by ``vec_id``) as ``(query_id,
+    vec_id, cosine, rn)``. The per-query rank plans a WindowGroupLimit, so
+    each task keeps at most ``k`` rows per query before the shuffle."""
+    sim = F.round(cosine(as_double(F.col("_qv")), as_double(F.col("_cv"))), digits)
+    scored = pairs.filter(F.col("query_id") != F.col("vec_id")).select(
+        "query_id", "vec_id", sim.alias("cosine")
+    )
+    return top_k_per_group(
+        scored, ["query_id"], [F.col("cosine").desc(), F.col("vec_id")], k,
+        keep_rank=True,
+    )
+
+
 def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     """Deterministic Gaussian hyperplanes (driver-side constants, shipped
     into the plan as literals — tiny: n_planes × dim doubles)."""
@@ -145,8 +185,6 @@ def _table_buckets(
     map no built-in expresses efficiently. Sign decisions match the
     expression form except for projections exactly at 0.0 (measure-zero;
     both forms are deterministic run-to-run)."""
-    from pyspark.sql.functions import pandas_udf
-
     p_mat = np.array(planes, dtype=np.float64)  # (L·p, d)
     weights = 1 << np.arange(per_table, dtype=np.int64)
     table_tag = np.arange(n_tables, dtype=np.int64) << 56
@@ -166,8 +204,6 @@ def _lloyd_kmeans(x, k: int, seed: int, max_iter: int = 25):
     numpy array — the coarse-quantizer trainer for :func:`ivf_topk`.
     Deterministic for a fixed seed; empty clusters are re-seeded with the
     point farthest from its assigned centroid."""
-    import numpy as np
-
     rng = np.random.default_rng(seed)
     n = len(x)
     if n == 0:
@@ -199,6 +235,33 @@ def _lloyd_kmeans(x, k: int, seed: int, max_iter: int = 25):
             break
         c = new_c
     return c
+
+
+def _train_sample(
+    df: DataFrame, vec_col: str, seed: int, train_fraction: float | None, min_train_rows: int
+) -> np.ndarray:
+    """The quantizer training sample, collected as an (n, d) double array:
+    the first ``min_train_rows`` rows when ``train_fraction`` is None, else
+    a seeded sample. Quantizers train LOCALLY on it (the FAISS topology);
+    a cluster-side iterative fit (MLlib KMeans) schedules one full job per
+    iteration, ~20 jobs of pure overhead for a 2k-row problem."""
+    feats = df.select(as_double(F.col(vec_col)).alias("_tv"))
+    if train_fraction is None:
+        feats = feats.limit(min_train_rows)
+    elif train_fraction < 1.0:
+        feats = feats.sample(fraction=train_fraction, seed=seed)
+    return np.array(feats.toPandas()["_tv"].tolist(), dtype=np.float64)
+
+
+def _assign_cells(df: DataFrame, vec_col: str, id_col: str, c_mat) -> DataFrame:
+    """The IVF index table ``(vec_id, _cv, _cell)``: every corpus vector
+    with its nearest centroid's cell id, widened so the probe join's
+    corpus side parallelizes."""
+    return widen(df).select(
+        F.col(id_col).alias("vec_id"),
+        F.col(vec_col).alias("_cv"),
+        F.element_at(_nearest_cells(c_mat, F.col(vec_col), 1), 1).alias("_cell"),
+    )
 
 
 def ivf_topk(
@@ -239,23 +302,10 @@ def ivf_topk(
     Recall rises with n_probe (n_probe = n_cells degenerates to brute
     force); tests/test_llm.py bounds it against the exact path.
     """
-    feats = df.select(as_double(F.col(vec_col)).alias("_tv"))
-    if train_fraction is None:
-        feats = feats.limit(min_train_rows)
-    elif train_fraction < 1.0:
-        feats = feats.sample(fraction=train_fraction, seed=seed)
-    # The quantizer trains LOCALLY on the bounded sample (one collect of
-    # ~min_train_rows vectors) — the FAISS topology: index training is a
-    # small offline step; only assignment + search are distributed. A
-    # cluster-side iterative fit (MLlib KMeans) schedules one full job per
-    # iteration, ~20 jobs of pure overhead for a 2k-row problem.
-    x = np.array(feats.toPandas()["_tv"].tolist(), dtype=np.float64)
-    c_mat = _lloyd_kmeans(x, n_cells, seed)  # (k, d)
-    corpus = widen(df).select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("_cv"),
-        F.element_at(_nearest_cells(c_mat, F.col(vec_col), 1), 1).alias("_cell"),
-    )
+    c_mat = _lloyd_kmeans(
+        _train_sample(df, vec_col, seed, train_fraction, min_train_rows), n_cells, seed
+    )  # (k, d)
+    corpus = _assign_cells(df, vec_col, id_col, c_mat)
     return _ivf_search(corpus, queries, c_mat, vec_col, id_col, k, n_probe, digits)
 
 
@@ -265,8 +315,6 @@ def _nearest_cells(c_mat, vec: Column, n: int) -> Column:
     # centroids as Catalyst literal expressions is an interpreted tree
     # whose cost is all overhead). Ties break by cell id — stable
     # argsort — matching the (dist, cell) struct-sort it replaces.
-    from pyspark.sql.functions import pandas_udf
-
     @pandas_udf("array<int>")
     def cells(v: pd.Series) -> pd.Series:
         xb = np.array(v.tolist(), dtype=np.float64)  # (b, d)
@@ -288,28 +336,18 @@ def _ivf_search(
     n_probe: int,
     digits: int,
 ) -> DataFrame:
-    """The probe half of IVF: queries pick their ``n_probe`` nearest cells,
-    ONE equi-join on cell id collects candidates, exact cosine re-ranks.
-    ``corpus`` is the pre-assigned ``(vec_id, _cv, _cell)`` table — built
-    in-process by :func:`ivf_topk` or scanned from a persisted index by
-    :func:`ivf_topk_persisted`."""
+    """The probe half of IVF: queries pick their ``n_probe`` nearest cells
+    and ONE equi-join on cell id collects the candidates (unique: a vector
+    sits in one cell, a query probes distinct cells) for the refine
+    kernel. ``corpus`` is the pre-assigned ``(vec_id, _cv, _cell)`` table
+    — built in-process by :func:`ivf_topk` or scanned from a persisted
+    index by :func:`ivf_topk_persisted`."""
     qs = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("_qv"),
         F.explode(_nearest_cells(c_mat, F.col(vec_col), n_probe)).alias("_cell"),
     )
-    from pyspark.sql import Window
-
-    sim = F.round(cosine(as_double(F.col("_qv")), as_double(F.col("_cv"))), digits)
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        qs.join(corpus, "_cell")
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .withColumn("cosine", sim)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "vec_id", "cosine", "rn")
-    )
+    return _refine_topk(qs.join(corpus, "_cell"), k, digits)
 
 
 _IVF_SUBTABLES = ("centroids", "assign")
@@ -340,28 +378,18 @@ def build_ivf_index(
     bake into the artifacts; a torn build or rebuild is never probed).
     At 100 TB ``assign/`` is additionally partitioned BY ``_cell`` so a
     probe reads only its n_probe cells' files (partition pruning)."""
-    from irio_mapreduce_spark.llm import artifacts
-
-    import os as _os
-
-    feats = df.select(as_double(F.col(vec_col)).alias("_tv"))
-    if train_fraction is None:
-        feats = feats.limit(min_train_rows)
-    elif train_fraction < 1.0:
-        feats = feats.sample(fraction=train_fraction, seed=seed)
-    x = np.array(feats.toPandas()["_tv"].tolist(), dtype=np.float64)
-    c_mat = _lloyd_kmeans(x, n_cells, seed)
+    c_mat = _lloyd_kmeans(
+        _train_sample(df, vec_col, seed, train_fraction, min_train_rows), n_cells, seed
+    )
     artifacts.begin_build(out_dir)
     spark = df.sparkSession
     spark.createDataFrame(
         [(i, [float(v) for v in c_mat[i]]) for i in range(len(c_mat))],
         "_cell int, _centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(_os.path.join(out_dir, "centroids"))
-    widen(df).select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("_cv"),
-        F.element_at(_nearest_cells(c_mat, F.col(vec_col), 1), 1).alias("_cell"),
-    ).write.mode("overwrite").parquet(_os.path.join(out_dir, "assign"))
+    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "centroids"))
+    _assign_cells(df, vec_col, id_col, c_mat).write.mode("overwrite").parquet(
+        os.path.join(out_dir, "assign")
+    )
     artifacts.commit(out_dir, {"n_cells": n_cells, "seed": seed})
 
 
@@ -379,10 +407,6 @@ def ivf_topk_persisted(
     tiny scan), the corpus side is a plain scan of the pre-assigned
     ``assign/`` table — no training, no corpus assignment pass. The
     steady-state ANN serving shape."""
-    import os as _os
-
-    from irio_mapreduce_spark.llm import artifacts
-
     spark = queries.sparkSession
     params = artifacts.committed_params(index_dir, _IVF_SUBTABLES)
     if params is None:
@@ -391,7 +415,7 @@ def ivf_topk_persisted(
             "manifest / sub-table _SUCCESS) — rebuild with build_ivf_index"
         )
     cent = (
-        spark.read.parquet(_os.path.join(index_dir, "centroids"))
+        spark.read.parquet(os.path.join(index_dir, "centroids"))
         .orderBy("_cell")
         .collect()
     )
@@ -401,7 +425,7 @@ def ivf_topk_persisted(
             f"manifest says n_cells={params['n_cells']}"
         )
     c_mat = np.array([r._centroid for r in cent], dtype=np.float64)
-    corpus = spark.read.parquet(_os.path.join(index_dir, "assign"))
+    corpus = spark.read.parquet(os.path.join(index_dir, "assign"))
     return _ivf_search(corpus, queries, c_mat, vec_col, id_col, k, n_probe, digits)
 
 
@@ -598,6 +622,30 @@ def semdedup(
     )
 
 
+def _lsh_candidates(
+    df: DataFrame, vec_col: str, id_col: str, queries: DataFrame, n_tables: int,
+    planes_per_table: int, dim: int, seed: int, probes: Callable[[Column], Column],
+) -> DataFrame:
+    """The LSH candidate step: the corpus indexed once per table as
+    exploded (table, bucket) keys, the queries' ``probes(keys)`` keys
+    exploded the same way, ONE equi-join on the key, and the pairs that
+    collide in several tables deduped. Returns unique ``(query_id, _qv,
+    vec_id, _cv)`` pairs for :func:`_refine_topk`."""
+    planes = random_hyperplanes(dim, n_tables * planes_per_table, seed)
+    keys = _table_buckets(F.col(vec_col), planes, n_tables, planes_per_table)
+    corpus = widen(df).select(
+        F.col(id_col).alias("vec_id"),
+        F.col(vec_col).alias("_cv"),
+        F.explode(keys).alias("_bucket"),
+    )
+    qs = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("_qv"),
+        F.explode(probes(keys)).alias("_bucket"),
+    )
+    return qs.join(corpus, "_bucket").dropDuplicates(["query_id", "vec_id"])
+
+
 def rp_lsh_topk(
     df: DataFrame,
     vec_col: str,
@@ -623,31 +671,11 @@ def rp_lsh_topk(
     ``queries``: DataFrame with the same ``id_col``/``vec_col`` schema.
     Returns (query_id, vec_id, cosine, rn<=k).
     """
-    planes = random_hyperplanes(dim, n_tables * planes_per_table, seed)
-    keys = _table_buckets(F.col(vec_col), planes, n_tables, planes_per_table)
-    corpus = widen(df).select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("_cv"),
-        F.explode(keys).alias("_bucket"),
+    pairs = _lsh_candidates(
+        df, vec_col, id_col, queries, n_tables, planes_per_table, dim, seed,
+        probes=lambda keys: keys,
     )
-    qs = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        F.explode(keys).alias("_bucket"),
-    )
-    from pyspark.sql import Window
-
-    sim = F.round(cosine(as_double(F.col("_qv")), as_double(F.col("_cv"))), digits)
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        qs.join(corpus, "_bucket")
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .dropDuplicates(["query_id", "vec_id"])
-        .withColumn("cosine", sim)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "vec_id", "cosine", "rn")
-    )
+    return _refine_topk(pairs, k, digits)
 
 
 def rp_lsh_multiprobe_topk(
@@ -679,41 +707,17 @@ def rp_lsh_multiprobe_topk(
     candidates still come from ONE equi-join — same shuffle shape, L·(p+1)
     query rows instead of L. Exact cosine re-ranks candidates only.
     Returns (query_id, vec_id, cosine, rn<=k)."""
-    planes = random_hyperplanes(dim, n_tables * planes_per_table, seed)
-    keys = _table_buckets(F.col(vec_col), planes, n_tables, planes_per_table)
-    corpus = widen(df).select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("_cv"),
-        F.explode(keys).alias("_bucket"),
-    )
 
     def probe_set(key: Column) -> Column:
         return F.array(
-            key,
-            *[
-                key.bitwiseXOR(F.lit(1 << j))
-                for j in range(planes_per_table)
-            ],
+            key, *[key.bitwiseXOR(F.lit(1 << j)) for j in range(planes_per_table)]
         )
 
-    qs = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        F.explode(F.flatten(F.transform(keys, probe_set))).alias("_bucket"),
+    pairs = _lsh_candidates(
+        df, vec_col, id_col, queries, n_tables, planes_per_table, dim, seed,
+        probes=lambda keys: F.flatten(F.transform(keys, probe_set)),
     )
-    from pyspark.sql import Window
-
-    sim = F.round(cosine(as_double(F.col("_qv")), as_double(F.col("_cv"))), digits)
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        qs.join(corpus, "_bucket")
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .dropDuplicates(["query_id", "vec_id"])
-        .withColumn("cosine", sim)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "vec_id", "cosine", "rn")
-    )
+    return _refine_topk(pairs, k, digits)
 
 
 def pq_topk(
@@ -759,16 +763,13 @@ def pq_topk(
     Deterministic for a fixed seed. Approximate by design: recall is
     bounded in tests/test_llm.py and surfaced through the catalog's
     recall-validation rows."""
-    from pyspark.sql import Window
-    from pyspark.sql.functions import pandas_udf
 
     def _unit(a: "np.ndarray") -> "np.ndarray":
         n = np.linalg.norm(a, axis=1, keepdims=True)
         n[n == 0] = 1.0
         return a / n
 
-    feats = df.select(as_double(F.col(vec_col)).alias("_tv")).limit(min_train_rows)
-    x = _unit(np.array(feats.toPandas()["_tv"].tolist(), dtype=np.float64))
+    x = _unit(_train_sample(df, vec_col, seed, None, min_train_rows))
     d = x.shape[1]
     if d % m != 0:
         raise ValueError(f"dim {d} not divisible by m={m} subspaces")
@@ -825,6 +826,9 @@ def pq_topk(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_cv")
     )
     coded = corpus.withColumn("_adc", adc(encode(F.col("_cv"))))
+    # The shortlist holds shortlist·k OTHER vectors per query: the query's
+    # own row (ADC distance = its quantization error, usually the minimum)
+    # is excluded before the rank so it cannot take a slot.
     cand = (
         coded.select(
             "vec_id",
@@ -834,23 +838,12 @@ def pq_topk(
         .withColumn("query_id", F.element_at(F.lit(q_ids), F.col("_qi") + 1))
         .filter(F.col("query_id") != F.col("vec_id"))
     )
-    w_adc = Window.partitionBy("query_id").orderBy(F.col("_dist"), F.col("vec_id"))
-    short = cand.withColumn("_rn", F.row_number().over(w_adc)).filter(
-        F.col("_rn") <= shortlist * k
+    short = top_k_per_group(
+        cand, ["query_id"], [F.col("_dist"), F.col("vec_id")], shortlist * k
     )
     qv = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
     )
-    w_cos = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return (
-        short.join(F.broadcast(qv), "query_id")
-        .withColumn(
-            "cosine",
-            F.round(cosine(as_double(F.col("_qv")), as_double(F.col("_cv"))), digits),
-        )
-        .withColumn("_rk", F.row_number().over(w_cos))
-        .filter(F.col("_rk") <= k)
-        .select("query_id", "vec_id", "cosine")
+    return _refine_topk(short.join(F.broadcast(qv), "query_id"), k, digits).select(
+        "query_id", "vec_id", "cosine"
     )

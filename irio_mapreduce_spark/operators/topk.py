@@ -31,8 +31,10 @@ def top_k_per_group(
     """Top-k rows per group via ``row_number`` (dense per-group heap
     semantics; one shuffle on the group key)."""
     w = Window.partitionBy(*group_by).orderBy(*order_by)
+    rank = F.col(rank_col)
+    # a per-group argmax (k == 1) filters on equality, the form SQL writes it in
     out = df.withColumn(rank_col, F.row_number().over(w)).filter(
-        F.col(rank_col) <= k
+        rank == 1 if k == 1 else rank <= k
     )
     return out if keep_rank else out.drop(rank_col)
 

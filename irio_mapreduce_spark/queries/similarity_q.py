@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from irio_mapreduce_spark.io import read_table
 from irio_mapreduce_spark.llm.similarity import (
+    _refine_topk,
     as_double,
     cosine,
     cosine_pairs_bruteforce,
@@ -126,10 +127,10 @@ def _ann_recall_validation(
     emb: DataFrame, ann: DataFrame, k: int, bound: float
 ) -> DataFrame:
     """Deterministic oracle-checkable ANN validation (the r3 advice shape):
-    the same job computes the EXACT top-k per query (brute force — 5
-    queries x corpus, similarity fused into the scan) and emits, per
-    query, the exact nearest-neighbor cosine (a real hash-checked value)
-    plus a recall@k >= ``bound`` boolean. DuckDB reproduces the exact side
+    the same job computes the EXACT top-k per query (brute force: the
+    ANN searches' refine kernel over all 5 queries x corpus pairs) and
+    emits, per query, the exact nearest-neighbor cosine (a real
+    hash-checked value) plus a recall@k >= ``bound`` boolean. DuckDB reproduces the exact side
     and the constant-TRUE flag; the measured per-query recall (see entry
     docstrings) clears ``bound`` with margin at every shipped SF, and the
     whole pipeline is seed-fixed deterministic."""
@@ -137,18 +138,7 @@ def _ann_recall_validation(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv")
     )
     corpus = emb.select("vec_id", F.col("embedding").alias("_cv"))
-    from pyspark.sql import Window
-
-    sim = F.round(cosine(as_double(F.col("_qv")), as_double(F.col("_cv"))), 6)
-    w = Window.partitionBy("query_id").orderBy(F.col("_cos").desc(), F.col("vec_id"))
-    exact = (
-        queries.crossJoin(corpus)
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .withColumn("_cos", sim)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("query_id", "vec_id", "_cos")
-    )
+    exact = _refine_topk(queries.crossJoin(corpus), k, 6)
     hits = (
         exact.join(
             ann.select("query_id", "vec_id", F.lit(1).alias("_hit")),
@@ -157,7 +147,7 @@ def _ann_recall_validation(
         )
         .groupBy("query_id")
         .agg(
-            F.max("_cos").alias("exact_nn_cosine"),
+            F.max("cosine").alias("exact_nn_cosine"),
             (F.count("_hit") / F.lit(k) >= bound).alias("recall_ok"),
         )
     )

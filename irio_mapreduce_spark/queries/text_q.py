@@ -6,7 +6,7 @@ built-in functions -> all fully oracle-checked.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from irio_mapreduce_spark.io import read_table
@@ -25,6 +25,7 @@ from irio_mapreduce_spark.llm.text import (
     type_token_ratio,
     unigram_surprisal,
 )
+from irio_mapreduce_spark.operators.topk import top_k_per_group
 from irio_mapreduce_spark.queries.catalog import register
 
 # DuckDB fragment matching llm.dedup.tokens(text): lowercased whitespace
@@ -409,10 +410,9 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    w = Window.partitionBy("doc_id").orderBy(F.col("score").desc(), F.col("term"))
     return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") <= 3) & (F.col("doc_id") % 7 == 0))
+        top_k_per_group(scored, ["doc_id"], [F.col("score").desc(), F.col("term")], 3)
+        .filter(F.col("doc_id") % 7 == 0)
         .select("doc_id", "term", "tf", "df", F.round("score", 6).alias("score"))
     )
 
@@ -717,15 +717,12 @@ def text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     post = toks.groupBy("term", "doc_id").agg(
         F.count("*").cast("long").alias("tf")
     ).persist()  # the top-doc window AND the df/tf rollup both read it; the tokenize+shuffle runs once
-    w = Window.partitionBy("term").orderBy(F.col("tf").desc(), F.col("doc_id"))
-    top = (
-        post.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "term",
-            F.col("doc_id").cast("long").alias("top_doc_id"),
-            F.col("tf").alias("top_tf"),
-        )
+    top = top_k_per_group(
+        post, ["term"], [F.col("tf").desc(), F.col("doc_id")], 1
+    ).select(
+        "term",
+        F.col("doc_id").cast("long").alias("top_doc_id"),
+        F.col("tf").alias("top_tf"),
     )
     agg = post.groupBy("term").agg(
         F.count("*").cast("long").alias("df"),

@@ -418,3 +418,26 @@ def test_one_media_batch_kernel():
     assert len(map_calls) == 1, map_calls
     assert len(ship_calls) == 1, ship_calls
     assert not conf_keys, conf_keys
+
+
+def test_one_per_group_rank_in_similarity_and_clustering():
+    """Every per-group rank in ``llm/similarity.py`` (the ANN searches'
+    refine kernel and PQ's ADC shortlist) and ``llm/clustering.py``
+    (``knn_classify``'s neighbour rank and vote pick) goes through
+    ``operators.topk.top_k_per_group``: neither module calls
+    ``row_number(`` or builds a ``Window`` of its own."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(catalog.__file__).resolve().parent.parent
+    found = []
+    for rel in ("llm/similarity.py", "llm/clustering.py"):
+        for node in ast.walk(ast.parse((pkg / rel).read_text(), rel)):
+            if isinstance(node, ast.Call):
+                func = node.func
+                name = getattr(func, "attr", None) or getattr(func, "id", None)
+                if name == "row_number":
+                    found.append(f"{rel}:{node.lineno} row_number(")
+            elif isinstance(node, ast.Name) and node.id == "Window":
+                found.append(f"{rel}:{node.lineno} Window")
+    assert not found, "\n".join(found)

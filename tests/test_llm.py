@@ -849,6 +849,54 @@ def test_pq_recall_vs_bruteforce(spark):
     assert recall >= 0.6, f"recall {recall}"
 
 
+def test_ann_exact_degenerate_configs_equal_bruteforce(spark):
+    """Configurations whose candidate step passes every pair — IVF
+    probing all of its cells, PQ with a shortlist covering the corpus —
+    leave the rows to the shared refine kernel alone. Each query must get
+    exactly the brute-force ``cosine_topk`` rows ``(vec_id, cosine)``
+    with itself excluded: this pins the kernel's cosine rounding, its
+    ``vec_id`` tie-break, its self-pair drop and IVF's ``rn`` order,
+    which the recall tests only bound. Every non-query vector is also
+    stored a second time under a larger id, so each neighbour ties with
+    its copy and the tie-break decides half of every top-k."""
+    from irio_mapreduce_spark.llm.similarity import pq_topk
+
+    src = read_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
+    emb = src.unionByName(
+        src.filter(F.col("vec_id") >= 5).withColumn("vec_id", F.col("vec_id") + 10**6)
+    )
+    queries = src.filter(F.col("vec_id") < 5)
+    k, n = 5, emb.count()
+    exact = {
+        q.vec_id: [
+            (r.vec_id, r.cosine)
+            for r in cosine_topk(
+                emb.filter(F.col("vec_id") != q.vec_id),
+                "embedding",
+                "vec_id",
+                [float(x) for x in q.embedding],
+                k=k,
+            ).collect()
+        ]
+        for q in queries.collect()
+    }
+    ivf = ivf_topk(
+        emb, "embedding", "vec_id", queries, k=k, n_cells=16, n_probe=16, seed=42
+    ).collect()
+    pq = pq_topk(
+        emb, "embedding", "vec_id", queries, k=k, m=8, ksub=16,
+        shortlist=-(-n // k), seed=42,
+    ).collect()
+    for name, rows in (("ivf", ivf), ("pq", pq)):
+        got = {}
+        for r in sorted(rows, key=lambda r: (r.query_id, -r.cosine, r.vec_id)):
+            got.setdefault(r.query_id, []).append((r.vec_id, r.cosine))
+        assert got == exact, name
+    for qid in exact:
+        ranks = sorted((r.rn, r.vec_id) for r in ivf if r.query_id == qid)
+        assert ranks == list(enumerate((v for v, _ in exact[qid]), 1)), qid
+
+
 def test_connected_components_random_graphs_vs_union_find(spark):
     """Property check: on seeded Erdős–Rényi-ish random graphs (including a
     duplicate-edge / self-loop / reversed-edge mix), the kernel's labeling

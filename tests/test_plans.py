@@ -433,6 +433,28 @@ def test_bucketed_join_no_exchange_before_join(spark, qs):
     assert p.count("SelectedBucketsCount: 16 out of 16") == 2, p
 
 
+def test_ann_entries_rank_under_window_group_limit(spark, qs):
+    """Each ANN entry's per-query ranks (the search's refine kernel, PQ's
+    ADC shortlist and the recall validation's exact side, all through
+    ``operators.topk.top_k_per_group``) plan one row_number Window each,
+    with a WindowGroupLimit under every one: each task keeps at most k
+    rows per query before the shuffle, instead of ranking every
+    candidate pair."""
+    import re
+
+    for name, ranks in (
+        ("sim_ann_ivf_topk", 2),
+        ("sim_ann_ivf_persisted", 2),
+        ("sim_ann_lsh_topk", 2),
+        ("sim_ann_lsh_multiprobe", 2),
+        ("sim_ann_pq_topk", 3),
+    ):
+        p = plan(spark, qs, name, "simple")
+        windows = p.count("Window [row_number()")
+        limits = re.findall(r"WindowGroupLimit \[.*row_number\(\), \d+, Final", p)
+        assert windows == ranks and len(limits) == ranks, (name, windows, p)
+
+
 def test_every_catalog_plan_is_cartesian_free(spark, qs):
     """FULL-CATALOG plan sweep: no entry may degrade to an unbounded
     CartesianProduct — the judge-grade scale property asserted for every
