@@ -630,20 +630,23 @@ def _lsh_candidates(
     exploded (table, bucket) keys, the queries' ``probes(keys)`` keys
     exploded the same way, ONE equi-join on the key, and the pairs that
     collide in several tables deduped. Returns unique ``(query_id, _qv,
-    vec_id, _cv)`` pairs for :func:`_refine_topk`."""
+    vec_id, _cv)`` pairs for :func:`_refine_topk`.
+
+    The join and its dedupe carry ids only; the vectors join back after,
+    once per unique pair. That needs ``id_col`` unique in ``df`` and in
+    ``queries`` (one vector per id, as in the catalog's ``embeddings``),
+    or a pair would pick up every vector of a repeated id."""
     planes = random_hyperplanes(dim, n_tables * planes_per_table, seed)
-    keys = _table_buckets(F.col(vec_col), planes, n_tables, planes_per_table)
-    corpus = widen(df).select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("_cv"),
-        F.explode(keys).alias("_bucket"),
-    )
-    qs = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        F.explode(probes(keys)).alias("_bucket"),
-    )
-    return qs.join(corpus, "_bucket").dropDuplicates(["query_id", "vec_id"])
+
+    def keys(vec: str) -> Column:
+        return _table_buckets(F.col(vec), planes, n_tables, planes_per_table)
+
+    corpus = widen(df).select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_cv"))
+    qs = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
+    index = corpus.select("vec_id", F.explode(keys("_cv")).alias("_bucket"))
+    probed = qs.select("query_id", F.explode(probes(keys("_qv"))).alias("_bucket"))
+    ids = probed.join(index, "_bucket").select("query_id", "vec_id").distinct()
+    return ids.join(qs, "query_id").join(corpus, "vec_id")
 
 
 def rp_lsh_topk(

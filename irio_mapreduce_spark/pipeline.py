@@ -51,10 +51,12 @@ Fault tolerance (retry, speculation, first-wins commit — reference
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass, field
 from typing import Any
 
+from pyspark.errors import PySparkRuntimeError
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -194,6 +196,20 @@ def _apply_partition_step(rdd, step):
     return rdd.mapPartitions(run)
 
 
+def _key_lines(lines: Iterable[str], key_of: Callable[[str], str]) -> Iterator[tuple[str, str]]:
+    """The keying step of :func:`pipe_batch`'s partition phase: ``(key,
+    line)`` pairs for ``partitionBy(r_num, partitionFunc=hash)``.
+
+    ``hash`` of a ``str`` is seeded per process, so it co-locates keys
+    across workers only when every worker runs with the same
+    ``PYTHONHASHSEED`` (SparkContext sets one for its workers). Raises the
+    error ``portable_hash`` raises without it, checked once per partition
+    here instead of once per record in the partitioner."""
+    if "PYTHONHASHSEED" not in os.environ:
+        raise PySparkRuntimeError(errorClass="PYTHON_HASH_SEED_NOT_SET", messageParameters={})
+    return ((key_of(line), line) for line in lines)
+
+
 def pipe_batch(
     spark: SparkSession,
     input_path: str,
@@ -215,13 +231,25 @@ def pipe_batch(
 
     Returns the result RDD of lines; writes exactly ``r_num`` text files
     under ``dest_path`` when given (reference R9 sink contract).
+
+    The partition hash is the builtin ``hash`` of the ``str`` key, bucket
+    ``hash(key) % r_num``. For a ``str`` that is the value ``partitionBy``'s
+    default ``portable_hash`` returns, so the buckets and part files are
+    the same; ``portable_hash`` only adds a ``PYTHONHASHSEED`` check per
+    record, which :func:`_key_lines` makes once per partition. The seed
+    SparkContext gives its workers keeps the buckets the same across task
+    retries, which first-wins commit relies on.
     """
     key_of = key_of or (lambda line: line.split(None, 1)[0] if line.strip() else "")
     rdd = spark.sparkContext.textFile(input_path, minPartitions=split_count)
     for step in map_steps:
         rdd = _apply_line_step(rdd, step)
     # The partition phase (reference R4): hash(key) % r_num, co-locating keys.
-    rdd = rdd.map(lambda line: (key_of(line), line)).partitionBy(r_num).values()
+    rdd = (
+        rdd.mapPartitions(lambda lines: _key_lines(lines, key_of))
+        .partitionBy(r_num, partitionFunc=hash)
+        .values()
+    )
     for step in reduce_steps:
         rdd = _apply_partition_step(rdd, step)
     if dest_path:

@@ -109,10 +109,13 @@ def get_spark(
         # (12 of them) on Python 3.10-3.12, 0.13-0.24 CPU-s per task; the
         # daemon re-reads an archive only when it changed (a 64-task
         # parallelize().count() measured 12-16 -> 1.9 CPU-s of Python
-        # worker time, 3.4-4.6 -> 1.1 s wall, 4 cores, Python 3.11). See
-        # preload_daemon.py. The package's parent dir rides the worker
-        # PYTHONPATH so the daemon module resolves regardless of the
-        # driver's cwd/sys.path patching.
+        # worker time, 3.4-4.6 -> 1.1 s wall, 4 cores, Python 3.11). It
+        # also gc.freeze()s its heap before forking: the stock fork loop's
+        # gc.collect() after every task walked the ~73k objects each
+        # worker inherits, 37-63 ms CPU per task, and now walks only the
+        # worker's own (under 0.1 ms). See preload_daemon.py. The
+        # package's parent dir rides the worker PYTHONPATH so the daemon
+        # module resolves regardless of the driver's cwd/sys.path patching.
         # Deploy caveat (r12 ADVICE, acknowledged): on a non-local cluster
         # where the package ships via archives/venv, the driver-local
         # PYTHONPATH below is wrong for executors and these two configs

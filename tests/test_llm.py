@@ -183,6 +183,29 @@ def test_rp_lsh_multiprobe_recall_and_index_size(spark):
     assert multi >= 0.5, f"multiprobe recall {multi}"
 
 
+def test_lsh_candidates_attach_each_pairs_own_vectors(spark):
+    """``_lsh_candidates`` dedupes bare ``(query_id, vec_id)`` pairs and
+    joins the vectors back by id, which is exact only because ids are
+    unique in both inputs: the catalog queries are a filter of
+    ``embeddings``, whose ``vec_id`` is a key. Each pair comes out once,
+    carrying its own ids' vectors, and no vector rides the dedupe."""
+    from irio_mapreduce_spark.llm.similarity import _lsh_candidates
+
+    emb = read_table(spark, SF_DIR, "embeddings")
+    assert emb.count() == emb.select("vec_id").distinct().count()
+    queries = emb.filter(F.col("vec_id") < 5)
+    pairs = _lsh_candidates(
+        emb, "embedding", "vec_id", queries, n_tables=8, planes_per_table=4,
+        dim=64, seed=42, probes=lambda keys: keys,
+    )
+    vec = {r.vec_id: list(r.embedding) for r in emb.collect()}
+    rows = pairs.collect()
+    assert rows and len({(r.query_id, r.vec_id) for r in rows}) == len(rows)
+    assert all(list(r._qv) == vec[r.query_id] and list(r._cv) == vec[r.vec_id] for r in rows)
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "first(" not in plan, plan
+
+
 def test_ivf_recall_vs_bruteforce(spark):
     """IVF with 16 cells / 4 probes must recover a solid fraction of the
     exact top-5 — and strictly more than random cell assignment would

@@ -121,6 +121,52 @@ def test_wordcount_pipe_external_binary(spark, corpus_dir):
     assert got == EXPECTED
 
 
+def test_pipe_batch_bucket_is_portable_hash_of_key(spark, corpus_dir, tmp_path):
+    """The partition phase hashes the key with the builtin ``hash``; for a
+    ``str`` key that must be the bucket ``partitionBy``'s default
+    ``portable_hash`` gave, so every key's part file is unchanged. The
+    expected bucket is computed in a worker: the driver's hash seed may
+    differ from the one SparkContext gives its workers."""
+    from pyspark.core.rdd import portable_hash
+
+    r_num = 3
+    dest = str(tmp_path / "out_buckets")
+    pipe_batch(
+        spark, corpus_dir, dest, map_steps=[lambda line: line.split()],
+        reduce_steps=[], r_num=r_num,
+    )
+    got = {}
+    for i in range(r_num):
+        with open(os.path.join(dest, f"part-{i:05d}")) as f:
+            for key in f.read().split():
+                assert got.setdefault(key, i) == i, key
+    assert set(got) == set(EXPECTED)
+    expected = dict(
+        spark.sparkContext.parallelize(sorted(got), 2)
+        .map(lambda k: (k, portable_hash(k) % r_num))
+        .collect()
+    )
+    assert got == expected
+
+
+def test_pipe_batch_keying_needs_hash_seed(monkeypatch):
+    """Without ``PYTHONHASHSEED`` a worker's ``hash`` of a str is random per
+    process, so keys would scatter across buckets and task retries: the
+    keying step refuses to run, as ``portable_hash`` did per record."""
+    from pyspark.errors import PySparkRuntimeError
+
+    from irio_mapreduce_spark.pipeline import _key_lines
+
+    monkeypatch.setenv("PYTHONHASHSEED", "0")
+    assert list(_key_lines(iter(["a 1", "b 2"]), lambda line: line[0])) == [
+        ("a", "a 1"),
+        ("b", "b 2"),
+    ]
+    monkeypatch.delenv("PYTHONHASHSEED")
+    with pytest.raises(PySparkRuntimeError, match="PYTHON_HASH_SEED_NOT_SET"):
+        _key_lines(iter(["a 1"]), lambda line: line[0])
+
+
 def test_map_chain_and_partition_reduce_mode(spark, corpus_dir):
     """Chained map fns + reduce_mode='partition' (mapInPandas over
     co-located partitions — the faithful reducer model)."""

@@ -1,6 +1,7 @@
 """The preload daemon's zip-directory guard: an unchanged archive is not
 re-read on ``importlib.invalidate_caches()``, a rewritten one still is,
-and the session's Python workers really run the guarded daemon."""
+and the session's Python workers really run the guarded daemon, with its
+pre-imported heap frozen."""
 
 from __future__ import annotations
 
@@ -63,3 +64,28 @@ def test_session_workers_skip_zip_reread(spark):
 
     cpu_s = spark.sparkContext.parallelize([0], 1).mapPartitions(probe).collect()[0]
     assert cpu_s < 0.02, f"invalidate_caches took {cpu_s:.3f} CPU-s in a worker"
+
+
+def test_session_workers_inherit_frozen_heap(spark):
+    """The daemon freezes its heap before forking, so a worker's task-end
+    ``gc.collect()`` skips the ~73k objects it inherits (37-63 ms CPU per
+    collection when they are scanned). The cheapest of three collections
+    is kept: in this suite's order the first CPU-clock interval of a task
+    read 9-12 ms that its collection did not spend (a thread-clock
+    interval started after it read 0.03 ms over the same call), while
+    every unfrozen collection scans the whole heap."""
+
+    def probe(_):
+        import gc
+        import time
+
+        cpu = []
+        for _ in range(3):
+            t0 = time.process_time()
+            gc.collect()
+            cpu.append(time.process_time() - t0)
+        yield gc.get_freeze_count(), min(cpu)
+
+    frozen, cpu_s = spark.sparkContext.parallelize([0], 1).mapPartitions(probe).collect()[0]
+    assert frozen > 10_000, f"only {frozen} objects frozen in a worker"
+    assert cpu_s < 0.005, f"gc.collect() took {cpu_s:.4f} CPU-s in a worker"
