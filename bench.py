@@ -23,10 +23,14 @@ over ALL measured entries, not just the printed subset. The detail file
 also carries ``codegen_compiles``, the Janino class compilations each
 measured entry caused, and ``codegen_compiles_warmup``, the warm-up's
 total, so a codegen-cache eviction shows up as non-zero counts on entries
-the warm-up already ran. ``stream_triggers`` lists, per entry that drained
-a streaming query, one record per drain from ``streaming.ops.DRAIN_LOG``
-(triggers, input rows, summed ``addBatch`` and ``queryPlanning`` ms), and
-``memo`` the entry's ``session_memo`` hits and misses per memo name.
+the warm-up already ran. ``jvm_child_cpu_s`` is the CPU seconds of the
+processes the driver JVM forked and reaped during each entry (the JVM's
+``cutime + cstime``), so a per-file fork (say, a ``chmod`` per committed
+file) shows up without a re-run. ``stream_triggers`` lists, per entry that
+drained a streaming query, one record per drain from
+``streaming.ops.DRAIN_LOG`` (triggers, input rows, summed ``addBatch`` and
+``queryPlanning`` ms), and ``memo`` the entry's ``session_memo`` hits and
+misses per memo name.
 
 Execution is forced with a ``noop``-format write — full computation, no
 driver-side collect, so the timing measures the distributed plan, not
@@ -97,6 +101,14 @@ def _compiles(spark) -> int:
     0 over an entry means every class it ran came from the codegen cache."""
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def _reaped_cpu_s(pid: int) -> float:
+    """CPU seconds of the children process ``pid`` has reaped so far
+    (``cutime + cstime`` of ``/proc/<pid>/stat``)."""
+    with open(f"/proc/{pid}/stat") as fh:
+        fields = fh.read().rsplit(")", 1)[1].split()
+    return (int(fields[13]) + int(fields[14])) / os.sysconf("SC_CLK_TCK")
 
 
 def compact_result(
@@ -171,6 +183,7 @@ def main() -> int:
     spark = get_spark(app_name="irio_mapreduce_spark-bench")
     qs = catalog.all_queries()
     warmup_compiles = _compiles(spark)
+    jvm_pid = spark._jvm.java.lang.ProcessHandle.current().pid()
 
     # Warm up the JVM / first-read parquet footers so query #1 isn't charged
     # for session startup.
@@ -283,6 +296,7 @@ def main() -> int:
     warmup_compiles = _compiles(spark) - warmup_compiles
     timings: dict[str, float] = {}
     compiles: dict[str, int] = {}
+    jvm_child_cpu: dict[str, float] = {}
     stream_triggers: dict[str, list[dict[str, int]]] = {}
     memo: dict[str, dict[str, dict[str, int]]] = {}
     skipped: list[str] = []
@@ -292,6 +306,7 @@ def main() -> int:
             print(f"[bench] {name}: skipped (excluded by design)", file=sys.stderr)
             continue
         c0 = _compiles(spark)
+        r0 = _reaped_cpu_s(jvm_pid)
         d0 = len(DRAIN_LOG)
         hits0 = Counter(session._MEMO_HITS)
         misses0 = Counter(session._MEMO_MISSES)
@@ -304,6 +319,7 @@ def main() -> int:
             timings[name] = -1.0
             print(f"[bench] {name}: FAILED {e}", file=sys.stderr)
         compiles[name] = _compiles(spark) - c0
+        jvm_child_cpu[name] = round(_reaped_cpu_s(jvm_pid) - r0, 3)
         if len(DRAIN_LOG) > d0:
             stream_triggers[name] = DRAIN_LOG[d0:]
         hits = session._MEMO_HITS - hits0
@@ -332,6 +348,7 @@ def main() -> int:
         queries=timings,
         codegen_compiles=compiles,
         codegen_compiles_warmup=warmup_compiles,
+        jvm_child_cpu_s=jvm_child_cpu,
         stream_triggers=stream_triggers,
         memo=memo,
         excluded=skipped,

@@ -156,17 +156,8 @@ def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
 
 
 # ---------------------------------------------------------------------------
-# Generic readers/writers (SURVEY.md §2.2 "Sources / sinks")
+# Generic writer (SURVEY.md §2.2 "Sources / sinks")
 # ---------------------------------------------------------------------------
-
-
-def read_any(spark: SparkSession, path: str, fmt: str = "parquet", schema=None, **options) -> DataFrame:
-    """Scan ``path`` as parquet/csv/json/text (reference R1,
-    ``DistrStorage.java:137-155``)."""
-    reader = spark.read.format(fmt).options(**options)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.load(path)
 
 
 def write_dataset(

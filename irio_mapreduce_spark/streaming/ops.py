@@ -9,14 +9,37 @@ package that starts a streaming query:
 * **availableNow.** The trigger processes the backlog present at start in
   ``maxFilesPerTrigger``-sized micro-batches, then stops: a finite,
   deterministic run to completion, the engine's Batch.
-* **8 state partitions.** Stateful streaming cost scales with
+* **2 state partitions.** Stateful streaming cost scales with
   ``spark.sql.shuffle.partitions``: one state store per partition per
-  stateful operator PER TRIGGER. On the stream-stream entry at sf0.1 a
-  drain took 2.4 s at 8 partitions, 5.8 s at 32 and 23.4 s at 200 (Spark's
-  default). State partitioning is sized to state volume, not CPU
-  parallelism, and this engine's state is small, so every drain runs at
-  :data:`STATE_PARTITIONS` whatever the host's core count; foreachBatch
-  bodies run on the query's session and so at the same count.
+  stateful operator PER TRIGGER. On the stream-stream entry at sf0.1 a drain
+  took 23.4 s at 200 partitions (Spark's default) and 5.8 s at 32 in an
+  earlier probe. Over the 33 drained catalog entries at sf0.1 (4 cores, warm
+  medians of 3) the summed time fell from 83.0 s at 8 to 68.4 s at 2, and 30
+  entries were faster or within 5%, JVM state and Python state alike
+  (``stream_stream_left_semi`` 3.14 -> 2.06 s,
+  ``stream_tws_stateful_totals`` 4.26 -> 2.93 s). Three whose per-partition
+  work runs in Python workers or a foreachBatch body lost parallelism and
+  were slower: ``stream_kmeans_model_rounds`` 3.12 -> 3.79 s,
+  ``source_pystream_writer_wordcount`` 3.60 -> 4.19 s and
+  ``stream_tws_map_state`` 5.31 -> 5.92 s. State partitioning is sized to
+  state volume, not CPU parallelism, and this engine's state is small, so
+  every drain runs at :data:`STATE_PARTITIONS` whatever the host's core
+  count; foreachBatch bodies run on the query's session and so at the same
+  count.
+* **Checkpoint files are committed through the FileSystem API (local-mode
+  policy).** Spark's default ``FileContextBasedCheckpointFileManager``
+  commits every offset, commit, source-log and state-delta file (and its
+  ``.crc``) by create-then-rename, and without ``libhadoop`` Hadoop's local
+  filesystem forks a ``chmod`` per create and, through ``FileContext``, a
+  ``readlink`` per rename side: about a quarter of a warm dedup drain's CPU
+  went to those forked processes. :data:`CHECKPOINT_FILE_MANAGER` renames
+  through ``FileSystem``, which reads no link: a warm sf0.001 dedup drain
+  forks 44 processes instead of 180, all of them the ``chmod`` that Hadoop's
+  local ``create`` still forks per file. Its rename is check-then-rename,
+  not atomic, so a checkpoint must have one writer at a time, which every
+  drain here has. On a shared cluster filesystem where two query
+  incarnations could race on one checkpoint, use a store with an atomic
+  rename (HDFS, or the default manager) instead.
 * **Confs are read at query start.** The query clones the session's conf
   when it starts (a resumed checkpoint keeps the partition count its
   offset log recorded), so ``drain`` scopes its conf, and a caller scopes
@@ -193,9 +216,14 @@ def read_events_stream(
     )
 
 
-# State partitions of every drain; the module docstring gives the measured
-# reason (state volume, not cores).
-STATE_PARTITIONS = 8
+# State partitions and checkpoint-file manager of every drain; the module
+# docstring gives the measured reasons (state volume, not cores; no forked
+# ``readlink`` per checkpoint-file rename).
+STATE_PARTITIONS = 2
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 # One record per drained query, appended by drain(); bench.py reports the
 # records each catalog entry added.
@@ -252,7 +280,11 @@ def drain(
         writer = writer.option("checkpointLocation", checkpoint)
     first = _first_batch_id(checkpoint)
     with scoped_conf(
-        spark, {"spark.sql.shuffle.partitions": str(STATE_PARTITIONS)}
+        spark,
+        {
+            "spark.sql.shuffle.partitions": str(STATE_PARTITIONS),
+            "spark.sql.streaming.checkpointFileManagerClass": CHECKPOINT_FILE_MANAGER,
+        },
     ):
         q = writer.trigger(availableNow=True).start()
         q.awaitTermination()

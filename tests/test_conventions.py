@@ -214,6 +214,25 @@ def test_bench_line_fits_recorder_tail():
     assert len(payload["queries"]) > 20
 
 
+def test_bench_reaped_cpu_counts_finished_children():
+    """``jvm_child_cpu_s`` in BENCH_DETAIL.json is a delta of
+    ``_reaped_cpu_s``: CPU of a child that has exited and been waited for
+    must land in its parent's count."""
+    import os
+    import subprocess
+    import sys
+
+    import bench
+
+    before = bench._reaped_cpu_s(os.getpid())
+    subprocess.run(
+        [sys.executable, "-c", "import time\nt = time.process_time()\n"
+         "while time.process_time() - t < 0.3: pass"],
+        check=True,
+    )
+    assert bench._reaped_cpu_s(os.getpid()) - before >= 0.25
+
+
 def test_bench_compact_line_carries_contention_caveat():
     """r12 verdict "Next #7": the compact line must surface
     ``record_eligible`` + ``load_avg_start`` so a PERF comparison of two

@@ -1,5 +1,5 @@
 """Source/sink round-trips (SURVEY.md §2.2 "Sources / sinks"): every
-supported format through write_dataset -> read_any, the exactly-R-files
+supported format through write_dataset -> spark.read, the exactly-R-files
 sink contract, and hive-partitioned writes with partition pruning visible
 in the plan."""
 
@@ -12,7 +12,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from irio_mapreduce_spark.io import read_any, read_table, write_dataset
+from irio_mapreduce_spark.io import read_table, write_dataset
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -33,14 +33,16 @@ def test_parquet_roundtrip(spark, tmp_path):
     df = _sample(spark)
     p = str(tmp_path / "o.parquet")
     write_dataset(df, p)
-    assert _rows(read_any(spark, p)) == _rows(df)
+    assert _rows(spark.read.format("parquet").load(p)) == _rows(df)
 
 
 def test_csv_roundtrip(spark, tmp_path):
     df = _sample(spark)
     p = str(tmp_path / "o.csv")
     write_dataset(df, p, fmt="csv", header="true")
-    back = read_any(spark, p, fmt="csv", schema=df.schema, header="true")
+    back = (
+        spark.read.format("csv").schema(df.schema).option("header", "true").load(p)
+    )
     assert _rows(back) == _rows(df)
 
 
@@ -48,7 +50,7 @@ def test_json_roundtrip(spark, tmp_path):
     df = _sample(spark)
     p = str(tmp_path / "o.json")
     write_dataset(df, p, fmt="json")
-    back = read_any(spark, p, fmt="json", schema=df.schema)
+    back = spark.read.format("json").schema(df.schema).load(p)
     assert _rows(back) == _rows(df)
 
 
@@ -58,7 +60,7 @@ def test_text_roundtrip(spark, tmp_path):
     )
     p = str(tmp_path / "o.txt")
     write_dataset(lines, p, fmt="text")
-    back = read_any(spark, p, fmt="text")
+    back = spark.read.format("text").load(p)
     assert sorted(r.value for r in back.collect()) == sorted(
         r.value for r in lines.collect()
     )
@@ -76,7 +78,7 @@ def test_partitioned_write_prunes(spark, tmp_path):
     p = str(tmp_path / "by_status")
     write_dataset(_sample(spark), p, partition_by=["o_orderstatus"])
     assert os.path.isdir(os.path.join(p, "o_orderstatus=F"))
-    back = read_any(spark, p).filter(F.col("o_orderstatus") == "F")
+    back = spark.read.format("parquet").load(p).filter(F.col("o_orderstatus") == "F")
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         back.explain("formatted")

@@ -834,7 +834,7 @@ def test_drain_reports_one_progress_entry_per_trigger(spark, unordered_dir):
 def test_drain_state_partitions_ignore_session_count(
     spark, unordered_dir, tmp_path, session_partitions
 ):
-    """A stateful drain writes exactly 8 state partitions whatever the
+    """A stateful drain writes exactly 2 state partitions whatever the
     session's shuffle-partition count, and leaves that count as it was."""
     import os
 
@@ -852,8 +852,31 @@ def test_drain_state_partitions_ignore_session_count(
         )
         assert spark.conf.get(key) == session_partitions
     parts = sorted(int(p) for p in os.listdir(f"{ck}/state/0") if p.isdigit())
-    assert STATE_PARTITIONS == 8
-    assert parts == list(range(8))
+    assert STATE_PARTITIONS == 2
+    assert parts == list(range(STATE_PARTITIONS))
+
+
+def test_drain_commits_checkpoint_files_through_filesystem_api(
+    spark, unordered_dir, tmp_path
+):
+    """Inside the query a foreachBatch body sees the FileSystem-based
+    checkpoint-file manager (no forked ``readlink`` per rename);
+    the caller's session has the key unset again afterwards."""
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    seen = []
+
+    def record(batch_df, _batch_id):
+        seen.append(batch_df.sparkSession.conf.get(key, None))
+
+    assert spark.conf.get(key, None) is None
+    drain(
+        read_events_stream(spark, unordered_dir), record, checkpoint=str(tmp_path / "ck")
+    )
+    assert seen and set(seen) == {
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    }
+    assert spark.conf.get(key, None) is None
 
 
 def test_drain_raises_when_progress_ring_drops_triggers(spark, unordered_dir):
